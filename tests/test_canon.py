@@ -86,9 +86,10 @@ def test_canon_datetime(raw, expected):
 
 
 def test_canonicalize_dataframe(spark):
-    """End-to-end A9+A11 over a statement DataFrame (Arrow pandas_udf)."""
+    """End-to-end A9+A11 over a statement DataFrame (one mapInArrow pass
+    over canonicalize_table)."""
     from tripleforge.canon import canonicalize
-    from tripleforge.schema import XSD_DECIMAL, XSD_INTEGER, XSD_STRING
+    from tripleforge.schema import XSD_DECIMAL, XSD_INTEGER, XSD_NS, XSD_STRING
 
     df = spark.createDataFrame(
         [
@@ -96,14 +97,22 @@ def test_canonicalize_dataframe(spark):
             ("http://ex.org/s", "http://ex.org/p", "2.50", "literal", XSD_DECIMAL, None, None),
             ("http://ex.org/s", "http://ex.org/p", "HTTP://EX.ORG/O", "iri", None, None, None),
             ("http://ex.org/s", "http://ex.org/p", "keep", "literal", XSD_STRING, None, None),
+            ("http://ex.org/t", "http://ex.org/p", "13:20:00-05:00", "literal", XSD_NS + "time", None, "HTTP://EX.ORG"),
+            ("http://ex.org/t", "http://ex.org/p", "PT90M", "literal", XSD_NS + "duration", None, "urn:g"),
+            ("http://ex.org/caf\u0065\u0301", "http://ex.org/p", "x", "literal", XSD_STRING, None, None),
         ],
         "subj string, pred string, obj string, obj_kind string, obj_dt string, obj_lang string, graph string",
     )
-    rows = {(r.subj, r.obj) for r in canonicalize(df).collect()}
-    assert ("http://ex.org/s", "7") in rows
-    assert ("http://ex.org/s", "2.5") in rows
-    assert ("http://ex.org/s", "http://ex.org/O") in rows
-    assert ("http://ex.org/s", "keep") in rows
+    out = canonicalize(df)
+    assert out.schema == df.schema
+    rows = {(r.subj, r.obj, r.graph) for r in out.collect()}
+    assert ("http://ex.org/s", "7", None) in rows
+    assert ("http://ex.org/s", "2.5", None) in rows
+    assert ("http://ex.org/s", "http://ex.org/O", None) in rows
+    assert ("http://ex.org/s", "keep", None) in rows
+    assert ("http://ex.org/t", "18:20:00Z", "http://ex.org/") in rows
+    assert ("http://ex.org/t", "PT1H30M", "urn:g") in rows
+    assert ("http://ex.org/caf\u00e9", "x", None) in rows  # NFC
 
 
 # --- ADVICE r1: fast-path detector must flag authority-with-empty-path ----
@@ -118,15 +127,23 @@ EMPTY_PATH_CASES = [
 
 
 @pytest.mark.parametrize("raw", EMPTY_PATH_CASES)
-def test_fast_path_detector_pandas_matches_slow_path(raw):
+def test_fast_path_detector_table_matches_slow_path(raw):
     """Equivalent IRIs must reach ONE canonical form regardless of which
-    path (vectorized fast skip vs full normalize) handles them."""
-    import pandas as pd
+    path (vectorized fast skip vs full normalize) handles them — in
+    every IRI position of a statement table."""
+    import pyarrow as pa
 
-    from tripleforge.canon import _normalize_iri_series
+    from tripleforge.canon import canonicalize_table
 
-    got = _normalize_iri_series(pd.Series([raw]))[0]
-    assert got == normalize_iri_str(raw)
+    tbl = pa.table(
+        {
+            "subj": [raw], "pred": [raw], "obj": [raw], "obj_kind": ["iri"],
+            "obj_dt": pa.array([None], pa.string()), "graph": [raw],
+        }
+    )
+    row = canonicalize_table(tbl).to_pylist()[0]
+    want = normalize_iri_str(raw)
+    assert (row["subj"], row["pred"], row["obj"], row["graph"]) == (want,) * 4
 
 
 @pytest.mark.parametrize("raw", EMPTY_PATH_CASES)
@@ -141,11 +158,11 @@ def test_fast_path_detector_arrow_matches_slow_path(raw):
 
 def test_empty_path_equivalents_converge():
     assert normalize_iri_str("http://ex.org") == "http://ex.org/"
-    import pandas as pd
+    import pyarrow as pa
 
-    from tripleforge.canon import _normalize_iri_series
+    from tripleforge.canon import _norm_iri_arrow
 
-    s = _normalize_iri_series(pd.Series(["http://ex.org", "HTTP://ex.org"]))
+    s = _norm_iri_arrow(pa.array(["http://ex.org", "HTTP://ex.org"])).to_pylist()
     assert s[0] == s[1] == "http://ex.org/"
 
 
@@ -285,14 +302,21 @@ def test_canon_gmonth(raw, expected):
 
 def test_canonicalize_frame_new_datatypes(spark):
     """The new datatypes ride the same masked residue path end-to-end
-    (both the pandas_udf column and the Arrow table kernel)."""
-    import pandas as pd
+    through the Arrow table kernel."""
+    import pyarrow as pa
 
-    from tripleforge.canon import canonicalize_obj_frame
+    from tripleforge.canon import canonicalize_table
 
     xsd = "http://www.w3.org/2001/XMLSchema#"
-    obj = pd.Series(["13:20:00-05:00", "P13M", "02024", "2024-01-02+00:00"])
-    kind = pd.Series(["literal"] * 4)
-    dt = pd.Series([xsd + "time", xsd + "duration", xsd + "gYear", xsd + "date"])
-    out = canonicalize_obj_frame(obj, kind, dt)
-    assert list(out) == ["18:20:00Z", "P1Y1M", "2024", "2024-01-02Z"]
+    tbl = pa.table(
+        {
+            "subj": ["urn:s"] * 4,
+            "pred": ["urn:p"] * 4,
+            "obj": ["13:20:00-05:00", "P13M", "02024", "2024-01-02+00:00"],
+            "obj_kind": ["literal"] * 4,
+            "obj_dt": [xsd + "time", xsd + "duration", xsd + "gYear", xsd + "date"],
+            "graph": pa.array([None] * 4, pa.string()),
+        }
+    )
+    out = canonicalize_table(tbl).column("obj").to_pylist()
+    assert out == ["18:20:00Z", "P1Y1M", "2024", "2024-01-02Z"]

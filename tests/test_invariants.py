@@ -39,8 +39,8 @@ def test_determinism_across_partitionings(spark):
         formats=("nt", "nq", "ttl"), link_rate=0.1, dup_rate=0.1,
     )
     base = corpus_df(spark, spec)
-    out_a, _ = transform(base.repartition(2), BuildConfig(balance_partitions=2))
-    out_b, _ = transform(base.repartition(17), BuildConfig(balance_partitions=17))
+    out_a, _ = transform(base.repartition(2))
+    out_b, _ = transform(base.repartition(17))
     assert dataset_checksum(out_a) == dataset_checksum(out_b)
 
 
@@ -168,8 +168,7 @@ def test_content_column_pruned_before_shuffle(spark):
     assert "content" not in out.columns
     plan = out._jdf.queryExecution().executedPlan().toString()
     # content appears only below the Python map node (scan side)
-    marker = "MapInArrow" if "MapInArrow" in plan else "MapInPandas"
-    after_python = plan.split(marker)[0]
+    after_python = plan.split("MapInArrow")[0]
     assert "content" not in after_python
 
 

@@ -108,6 +108,19 @@ def test_block_cap_drops_giant_blocks(spark):
     assert objs == {"good"}
 
 
+def test_block_cap_drops_null_keys(spark):
+    """A null in any key column puts a row in no block: it is dropped
+    whether its would-be block is below the cap or above it."""
+    rows = (
+        [("p", None, f"n{i}") for i in range(3)]  # null block below the cap
+        + [(None, "x", f"m{i}") for i in range(20)]  # null block above it
+        + [("p", "good", "a"), ("p", "good", "b")]
+    )
+    df = spark.createDataFrame(rows, "pred string, obj string, subj string")
+    capped = block_and_cap(df, ["pred", "obj"], max_block=10)
+    assert sorted(r.subj for r in capped.collect()) == ["a", "b"]
+
+
 def test_rewrite_subj_and_obj(spark):
     stmts = spark.createDataFrame(
         [

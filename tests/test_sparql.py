@@ -287,6 +287,22 @@ def test_update_canonicalizes_like_the_build_path(spark, cat_root):
         run_id="d1",
     )
     assert cat.read_statements().count() == 0
+    # DELETE/INSERT templates canonicalize too: the delete's spelling
+    # matches the stored quad, the insert stores canonical terms
+    sparql.execute_update(
+        spark, cat,
+        'INSERT DATA { <http://ex.org/> <http://ex.org/p> "7"^^<http://www.w3.org/2001/XMLSchema#integer> . }',
+        run_id="i2",
+    )
+    sparql.execute_update(
+        spark, cat,
+        'DELETE { <HTTP://EX.ORG> <http://ex.org/p> "07"^^<http://www.w3.org/2001/XMLSchema#integer> } '
+        'INSERT { <HTTP://EX.ORG:80/a/../n> <http://ex.org/q> "0042"^^<http://www.w3.org/2001/XMLSchema#integer> } '
+        'WHERE { ?s <http://ex.org/p> ?o }',
+        run_id="m1",
+    )
+    rows = [(r.subj, r.pred, r.obj) for r in cat.read_statements().collect()]
+    assert rows == [("http://ex.org/n", "http://ex.org/q", "42")]
 
 
 def test_filter_pending_plain_join_path_matches_broadcast(spark, cat_root):

@@ -2,7 +2,7 @@
 
 Brand-new implementation of the capabilities of `jgrzebyta/triple-loader`
 (a Clojure/RDF4J RDF loader + SPARQL tool), re-expressed Spark-first:
-DataFrame/Catalyst plans end-to-end, Arrow-batched mapInPandas parsers,
+DataFrame/Catalyst plans end-to-end, Arrow-batched mapInArrow parsers,
 no per-row Python on the hot path. Blueprint: SURVEY.md.
 """
 

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from tripleforge.text import _widen
+from tripleforge.ops import widen_if_narrow
 
 
 def _as_double(col: Column) -> Column:
@@ -251,9 +251,9 @@ def cosine_topk_lsh(
     if dim is None:
         dim = len(corpus.select(vec_col).first()[0])
     planes = hyperplanes(dim, n_bits, seed)
-    c = _widen(
+    c = widen_if_narrow(
         corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec")),
-        key="nid",
+        ["nid"],
     ).select("nid", "nvec", lsh_bucket("nvec", planes).alias("bucket"))
     q = queries.select(
         F.col(id_col).alias("qid"),
@@ -318,9 +318,9 @@ def cosine_near_dup_pairs(
     if dim is None:
         dim = len(df.select(vec_col).first()[0])
     planes = hyperplanes(dim, n_bits, seed)
-    base = _widen(
+    base = widen_if_narrow(
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-        key="id",
+        ["id"],
     )
     right = base.select(
         F.col("id").alias("id_b"),
@@ -458,9 +458,9 @@ def cosine_topk_ivf(
             corpus, n_centroids=n_centroids, seed=seed,
             id_col=id_col, vec_col=vec_col,
         )
-    c = _widen(
+    c = widen_if_narrow(
         corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec")),
-        key="nid",
+        ["nid"],
     ).select("nid", "nvec", ivf_cell("nvec", centroids).alias("cell"))
     q = queries.select(
         F.col(id_col).alias("qid"),

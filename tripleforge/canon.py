@@ -7,11 +7,14 @@
 - A11 literal canonicalization per RDF 1.1 / XSD 1.1 canonical lexical
   mappings.
 
-Both transforms are Arrow-batched ``pandas_udf``s with a vectorized
-fast path: rows already in normal form (the overwhelming majority of
-real IRIs / literals) are detected with pandas ``str`` masks and passed
-through untouched; only the residue pays per-row Python — consistent
-with the north_star's "no per-row Python anywhere on the hot path".
+One implementation, ``canonicalize_table``, over a pyarrow Table: the
+parse dispatcher fuses it into its mapInArrow stage, and
+``canonicalize`` runs it as a mapInArrow over a statement DataFrame
+(SPARQL INSERT/DELETE). Rows already in normal form (the overwhelming
+majority of real IRIs / literals) are detected with RE2 masks in Arrow
+C++ and passed through untouched; only the residue pays per-row Python
+— consistent with the north_star's "no per-row Python anywhere on the
+hot path".
 
 Reference analogs: RDF4J ``ParsedIRI.normalize()`` and the Rio literal
 canonicalization setting; rebuilt from RFC 3986 / XSD 1.1, not
@@ -25,10 +28,7 @@ import unicodedata
 from datetime import datetime, timezone
 from decimal import Decimal, InvalidOperation
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql import DataFrame
 
 from tripleforge.parse.common import skolem_iri, skolemize_series  # noqa: F401 (A10)
 from tripleforge.schema import (
@@ -113,42 +113,10 @@ def normalize_iri_str(iri: str) -> str:
     return f"{scheme}:{_norm_pct(rest)}"
 
 
-# Fast-path detector: IRIs with no percent-escapes, no dot segments, no
-# upper-case scheme/host, no default port, and a non-empty path after
-# the authority are already normal. The last alternative flags
-# scheme://authority with NO path (e.g. <http://ex.org>), which the
-# slow path rewrites to path "/" — without it, <http://ex.org> and
-# <HTTP://ex.org> canonicalized to different forms (ADVICE r1).
-_NEEDS_WORK = re.compile(
-    r"%|/\.{1,2}(?:/|$)|^[^:/]*[A-Z][^:/]*:|^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*[A-Z:]"
-    r"|^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*(?:[?#]|$)"
-)
-
-
-def _normalize_iri_series(s: pd.Series) -> pd.Series:
-    mask = s.str.contains(_NEEDS_WORK, na=False)
-    # NFC: cheap vectorized pass for everyone
-    out = s.str.normalize("NFC")
-    if mask.any():
-        out.loc[mask] = s.loc[mask].map(normalize_iri_str)
-    return out
-
-
-@F.pandas_udf(StringType())
-def normalize_iri_udf(s: pd.Series) -> pd.Series:
-    return _normalize_iri_series(s)
-
-
-def normalize_iri(col: Column) -> Column:
-    """A9 as a column expression (Arrow-batched)."""
-    return normalize_iri_udf(col)
-
-
 # ---------------------------------------------------------------------------
 # A11 — literal canonicalization (XSD 1.1 canonical lexical mappings)
 # ---------------------------------------------------------------------------
 _INT_RE = re.compile(r"^[+-]?\d+$")
-_CANON_INT = re.compile(r"^(?:0|-?[1-9]\d*)$")
 _DEC_RE = re.compile(r"^[+-]?(?:\d+\.?\d*|\.\d+)$")
 _BOOL_MAP = {"0": "false", "1": "true", "true": "true", "false": "false"}
 
@@ -398,40 +366,18 @@ _CANON_FNS = {
 }
 
 
-def canonicalize_obj_frame(obj: pd.Series, obj_kind: pd.Series, obj_dt: pd.Series) -> pd.Series:
-    """Canonical object column: IRI-normalize IRIs, XSD-canonicalize
-    typed literals; other literals pass through untouched."""
-    out = obj.copy()
-    iri_mask = obj_kind == "iri"
-    if iri_mask.any():
-        out.loc[iri_mask] = _normalize_iri_series(obj.loc[iri_mask])
-    for dt, fn in _CANON_FNS.items():
-        m = (obj_kind == "literal") & (obj_dt == dt)
-        if m.any():
-            if dt == XSD_INTEGER:
-                # vectorized fast path: already-canonical integers skip
-                sub = obj.loc[m]
-                need = ~sub.str.match(_CANON_INT)
-                if need.any():
-                    res = sub.copy()
-                    res.loc[need] = sub.loc[need].map(fn)
-                    out.loc[m] = res
-                continue
-            out.loc[m] = obj.loc[m].map(fn)
-    return out
-
-
-@F.pandas_udf(StringType())
-def _canon_obj_udf(obj: pd.Series, obj_kind: pd.Series, obj_dt: pd.Series) -> pd.Series:
-    return canonicalize_obj_frame(obj, obj_kind, obj_dt)
-
-
 # ---------------------------------------------------------------------------
 # Arrow-native canonicalization (the mapInArrow hot path): every fast
 # path stays in Arrow C++; Python touches only masked residues via
 # pc.replace_with_mask. ASCII text is NFC by definition, so NFC applies
 # only to the non-ASCII residue.
 # ---------------------------------------------------------------------------
+# Fast-path detector: IRIs with no percent-escapes, no dot segments, no
+# upper-case scheme/host, no default port, and a non-empty path after
+# the authority are already normal. The last alternative flags
+# scheme://authority with NO path (e.g. <http://ex.org>), which the
+# slow path rewrites to path "/" — without it, <http://ex.org> and
+# <HTTP://ex.org> canonicalized to different forms (ADVICE r1).
 _NEEDS_WORK_RE2 = (
     "%|/\\.\\.?(/|$)|^[^:/]*[A-Z][^:/]*:|^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*[A-Z:]"
     "|^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([?#]|$)"
@@ -472,13 +418,12 @@ def _norm_iri_arrow(arr):
 
 
 def canonicalize_table(tbl):
-    """A9+A11 over a STATEMENT_RAW pyarrow Table (fused into the
-    mapInArrow parse stage)."""
+    """A9+A11 over a pyarrow Table with statement columns (subj, pred,
+    obj, obj_kind, obj_dt, graph); other columns pass through. Error
+    rows have null terms, on which every op below is a no-op."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    good = pc.fill_null(pc.is_null(tbl.column("error")), False)
-    # (error rows have null terms; the IRI/literal ops below no-op on null)
     subj = _norm_iri_arrow(tbl.column("subj"))
     pred = _norm_iri_arrow(tbl.column("pred"))
 
@@ -530,40 +475,14 @@ def canonicalize_table(tbl):
     return out
 
 
-def canonicalize_frame(pdf: pd.DataFrame) -> pd.DataFrame:
-    """A9+A11 over a statement *pandas* frame — the fused hot path.
-
-    The parse dispatcher calls this inside its own mapInPandas kernel so
-    parse+canon is ONE Python stage: chaining separate pandas_udf
-    columns costs a JVM↔Python Arrow round-trip of the whole frame per
-    column (5 round-trips measured ~4× slower end-to-end)."""
-    good = pdf["error"].isna()
-    if not good.any():
-        return pdf
-    pdf.loc[good, "subj"] = _normalize_iri_series(pdf.loc[good, "subj"])
-    pdf.loc[good, "pred"] = _normalize_iri_series(pdf.loc[good, "pred"])
-    pdf.loc[good, "obj"] = canonicalize_obj_frame(
-        pdf.loc[good, "obj"], pdf.loc[good, "obj_kind"], pdf.loc[good, "obj_dt"]
-    )
-    g = good & pdf["graph"].notna()
-    if g.any():
-        pdf.loc[g, "graph"] = _normalize_iri_series(pdf.loc[g, "graph"])
-    return pdf
-
-
 def canonicalize(df: DataFrame) -> DataFrame:
-    """A9+A11 over a statement DataFrame: normalize subj/pred/graph IRIs
-    and the object (IRI or typed literal). One Arrow pass per column."""
-    out = df.withColumn("subj", normalize_iri_udf(F.col("subj")))
-    out = out.withColumn("pred", normalize_iri_udf(F.col("pred")))
-    out = out.withColumn(
-        "obj", _canon_obj_udf(F.col("obj"), F.col("obj_kind"), F.col("obj_dt"))
-    )
-    if "graph" in df.columns:
-        out = out.withColumn(
-            "graph",
-            F.when(
-                F.col("graph").isNotNull(), normalize_iri_udf(F.col("graph"))
-            ).otherwise(F.col("graph")),
-        )
-    return out
+    """A9+A11 over a statement DataFrame: ``canonicalize_table`` as one
+    mapInArrow pass, schema unchanged."""
+
+    def canon(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            yield from canonicalize_table(pa.Table.from_batches([batch])).to_batches()
+
+    return df.mapInArrow(canon, df.schema)

@@ -10,8 +10,8 @@ Scale notes (the 100 TB story):
 - Key blocks emit **star edges** (every subject → block-min subject),
   never all-pairs: O(n) edges per block instead of O(n²), so a
   million-subject block costs a million edges, not 10^12.
-- Hot keys are salted (A13) and pathological blocks capped (A14) with
-  the dropped volume surfaced to lineage.
+- Hot keys are salted (A13) and pathological blocks capped (A14). The
+  dropped volume is not reported anywhere yet.
 - CC iterations ``localCheckpoint()`` each round to truncate lineage —
   else plan depth grows O(iterations) and re-optimization dominates.
 - The final mapping is usually tiny relative to the statement table →
@@ -90,7 +90,12 @@ def block_and_cap(df: DataFrame, key: list[str], max_block: int) -> DataFrame:
     broadcast — ``df`` itself is never shuffled for the cap. Worst
     case (adversarial corpus where hot is large) AQE falls back to the
     same shuffle join the old code always paid. Output rows and column
-    layout identical (both forms put the join key first)."""
+    layout identical (both forms put the join key first).
+
+    Rows with a null in any key column belong to no block (a null key
+    never equals another) and are dropped, whatever the block's size."""
+    for k in key:
+        df = df.where(F.col(k).isNotNull())
     counts = df.groupBy(*key).agg(F.count(F.lit(1)).alias("_blk_n"))
     hot = counts.where(F.col("_blk_n") > F.lit(max_block)).select(*key)
     return df.join(hot, key, "left_anti")

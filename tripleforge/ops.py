@@ -1,5 +1,5 @@
 """Column-level pipeline operators: fingerprint, graph injection, dedup,
-skew balancing (SURVEY.md §2.A2, A18, A19, A23).
+scan widening (SURVEY.md §2.A2, A18, A19, A23).
 
 All built-in Catalyst expressions — whole-stage-codegen-eligible, no
 Python. Reference analogs noted per function.
@@ -7,6 +7,7 @@ Python. Reference analogs noted per function.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -52,46 +53,57 @@ def dedup(df: DataFrame, key: list[str] | None = None) -> DataFrame:
 def widen_if_narrow(
     df: DataFrame, cols: list[str] | None = None, target: int | None = None
 ) -> DataFrame:
-    """r6 (guide §2.5 input-layout skew): repartition ONLY when the scan
-    is narrower than the cluster. A small corpus lands in one parquet
-    file → one input partition → every downstream per-row stage (the
-    fused parse, regex projections) runs on 1 of N cores (measured at
-    sf1.0: the whole micro-corpus parse serialized on one task). At real
-    corpus scale the scan already has ≥cores partitions and this is a
-    no-op — the guard means we never pay a full-corpus shuffle at 100 TB
-    just to help the small case (same contract as text._widen).
+    """The one scan-widening guard (guide §2.5 input-layout skew):
+    repartition ONLY when the scan is narrower than the cluster. A small
+    corpus lands in one parquet file → one input partition → every
+    downstream per-row stage (the fused parse, regex projections,
+    tokenize/shingle) runs on 1 of N cores. At real corpus scale the
+    scan already has ≥cores partitions and this is a no-op — the guard
+    means we never pay a full-corpus shuffle at 100 TB just to help the
+    small case.
 
-    ``cols``: hash-partition on xxhash64(cols) (deterministic, uniform,
-    and — unlike round-robin — no sort-before-repartition pass).
+    ``cols``: hash-partition on these plain columns (default
+    ``repo, path``). Project/Generate preserve the child's
+    HashPartitioning, so a downstream ``groupBy`` on the same key (the
+    minhash/simhash signature aggregate) needs NO second exchange.
 
     ``target``: widened partition count; defaults to the cluster's
     defaultParallelism (right for pure per-row projections). Stages
     that FEED A SHUFFLE should pass fewer, larger partitions (guide
     §2.2) — measured: the fused parse at full width lost its gain to
-    per-task Python-boundary overhead + map-side shuffle block count."""
-    target = target or df.sparkSession.sparkContext.defaultParallelism
-    qe = df._jdf.queryExecution()
-    # A plan that already contains an exchange (window, join, explicit
-    # repartition) is shuffle.partitions-wide downstream of it — and
-    # probing it via toRdd() would EXECUTE its shuffle stages eagerly
-    # under AQE (AdaptiveSparkPlanExec.doExecute materializes query
-    # stages; the probe's work is then thrown away). Only exchange-free
-    # plans (plain scans + projections, which AQE does not even wrap)
-    # are probed; for them toRdd() is planning-only.
-    plan = qe.executedPlan().toString()
-    if "Exchange" in plan or "AdaptiveSparkPlan" in plan:
+    per-task Python-boundary overhead + map-side shuffle block count.
+
+    The probe reads the JVM query execution, so it needs a classic
+    (py4j) session; under Spark Connect (no ``_jdf``) or when the JVM
+    call fails, ``df`` is returned unchanged."""
+    try:
+        target = target or df.sparkSession.sparkContext.defaultParallelism
+        qe = df._jdf.queryExecution()
+        # A plan that already contains an exchange (window, join,
+        # explicit repartition) is shuffle.partitions-wide downstream of
+        # it — and probing it via toRdd() would EXECUTE its shuffle
+        # stages eagerly under AQE (AdaptiveSparkPlanExec.doExecute
+        # materializes query stages; the probe's work is then thrown
+        # away). Only exchange-free plans (plain scans + projections,
+        # which AQE does not even wrap) are probed; for them toRdd() is
+        # planning-only.
+        if _has_exchange(qe.executedPlan()) or qe.toRdd().getNumPartitions() >= target:
+            return df
+    except (AttributeError, Py4JError):
         return df
-    n_in = qe.toRdd().getNumPartitions()
-    if n_in >= target:
-        return df
-    cols = cols or ["repo", "path"]
-    return df.repartition(target, F.xxhash64(*[F.col(c) for c in cols]))
+    return df.repartition(target, *(cols or ["repo", "path"]))
 
 
-def balance(df: DataFrame, n_partitions: int, cols: list[str] | None = None) -> DataFrame:
-    """A23 — explicit salt-and-split repartition before the Python parse
-    boundary so no task gets a whale repo: hash-distribute on
-    (repo, path) which is ~uniform regardless of per-repo file counts.
-    AQE skew handling remains the backstop (SURVEY §4)."""
-    cols = cols or ["repo", "path"]
-    return df.repartition(n_partitions, F.xxhash64(*[F.col(c) for c in cols]))
+def _has_exchange(plan) -> bool:
+    """Walk the physical plan's nodes — children and inner children
+    (subqueries, cached relations' plans) — for an exchange or an AQE
+    root."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name.endswith("Exchange") or name == "AdaptiveSparkPlan":
+            return True
+        for seq in (node.children(), node.innerChildren()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return False

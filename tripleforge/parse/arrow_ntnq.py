@@ -17,9 +17,10 @@ captures its delimiters too (``<iri>``, ``"lit"``, ``@lang``,
 ``^^<dt>``, ``_:label``) — participation is then simply "non-empty" —
 and delimiters are stripped afterwards with ``utf8_slice_codeunits``.
 
-Feeds ``DataFrame.mapInArrow`` (Spark 3.3+). Grammar and outputs are
-IDENTICAL to tripleforge.parse.ntnq (the pandas reference kernel) —
-tests assert equality between the two.
+Feeds ``DataFrame.mapInArrow`` (Spark 3.3+) and is the only NT/NQ
+kernel the engine runs. Grammar and outputs are IDENTICAL to
+tripleforge.parse.ntnq, the pandas reference kernel that
+tests/test_arrow_kernel.py calls directly to check this one.
 """
 
 from __future__ import annotations

@@ -1,12 +1,13 @@
 """Shared term machinery for all RDF parsers.
 
-Everything here runs INSIDE a ``mapInPandas`` Arrow batch — i.e. in the
-Python worker over a pandas frame of whole files — so pandas/`str`
-vectorized ops are the hot path and per-row Python is confined to rare
-residues (escape sequences, blank nodes), per BASELINE.json north_star:
-"no per-row Python anywhere on the hot path — all parsing and
-canonicalization runs through Arrow-batched mapInPandas over content
-blocks".
+Everything here runs INSIDE the parse dispatcher's ``mapInArrow`` batch
+— in the Python worker, over whole files — either on the pandas frames
+the Turtle/RDF-XML/JSON-LD/TriX kernels build from the batch (and the
+``ntnq`` reference kernel the tests compare against), or as scalar
+helpers the Arrow NT/NQ kernel applies to its residues. Vectorized ops
+are the hot path and per-row Python is confined to rare residues
+(escape sequences, blank nodes), per BASELINE.json north_star: "no
+per-row Python anywhere on the hot path".
 
 Reference analog: RDF4J Rio parser helpers (NTriplesUtil, the shared
 RioSetting machinery) — re-expressed columnar (SURVEY.md §2.A4-A8).

@@ -1,4 +1,4 @@
-"""Parse dispatcher: one ``mapInPandas`` pass over the corpus that routes
+"""Parse dispatcher: one ``mapInArrow`` pass over the corpus that routes
 each Arrow batch's files to the right per-format kernel and emits the
 unioned statement+error stream (SURVEY.md §2.A8).
 
@@ -10,8 +10,6 @@ split out with two cheap filters.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 
@@ -20,53 +18,18 @@ from tripleforge.detect import (
     FORMAT_NQ,
     FORMAT_NT,
     FORMAT_RDFXML,
-    FORMAT_SKIP,
     FORMAT_TRIG,
     FORMAT_TRIX,
     FORMAT_TTL,
 )
-from tripleforge.parse.common import empty_raw_frame
 from tripleforge.parse.jsonld import parse_jsonld
-from tripleforge.parse.ntnq import parse_nq, parse_nt
 from tripleforge.parse.rdfxml import parse_rdfxml
 from tripleforge.parse.trix import parse_trix
 from tripleforge.parse.ttl import parse_trig, parse_ttl
 from tripleforge.schema import PARSE_ERROR, STATEMENT_RAW
 
-_KERNELS = {
-    FORMAT_NT: parse_nt,
-    FORMAT_NQ: parse_nq,
-    FORMAT_TTL: parse_ttl,
-    FORMAT_TRIG: parse_trig,
-    FORMAT_RDFXML: parse_rdfxml,
-    FORMAT_JSONLD: parse_jsonld,
-    FORMAT_TRIX: parse_trix,
-}
 
-
-def _parse_batches(
-    batches: Iterator[pd.DataFrame], canonicalize: bool = False
-) -> Iterator[pd.DataFrame]:
-    if canonicalize:
-        from tripleforge.canon import canonicalize_frame
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        parts = []
-        for fmt, group in pdf.groupby("format", sort=False):
-            if fmt == FORMAT_SKIP:
-                continue
-            kernel = _KERNELS.get(fmt)
-            if kernel is None:
-                continue
-            parts.append(kernel(group))
-        out = pd.concat(parts, ignore_index=True) if parts else empty_raw_frame()
-        if canonicalize and len(out):
-            out = canonicalize_frame(out)
-        yield out
-
-
-def _parse_batches_arrow(batches, canonicalize: bool = False):
+def _parse_batches(batches, canonicalize: bool = False):
     """mapInArrow kernel: NT/NQ go through the Arrow-native fast path
     (pyarrow.compute, no per-row Python objects); Turtle/RDF-XML rows
     convert to pandas for their recursive-descent kernels (inherently
@@ -121,11 +84,10 @@ def _parse_batches_arrow(batches, canonicalize: bool = False):
 
 
 def parse_corpus(
-    corpus_with_format: DataFrame,
-    canonicalize: bool = False,
-    engine: str = "arrow",
+    corpus_with_format: DataFrame, canonicalize: bool = False
 ) -> DataFrame:
-    """Corpus (with ``format`` column) → raw statement/error stream.
+    """Corpus (with ``format`` column) → raw statement/error stream, as
+    one mapInArrow pass.
 
     Column pruning matters at scale: only the five columns the kernels
     need cross the Arrow boundary — `content` never survives past this
@@ -133,24 +95,12 @@ def parse_corpus(
 
     ``canonicalize=True`` fuses A9-A11 into the same Python stage (one
     round-trip for parse+canon instead of five).
-
-    ``engine="arrow"`` (default) uses mapInArrow with the
-    pyarrow.compute NT/NQ kernel — allocation-light, scales linearly
-    with cores where the pandas kernel anti-scales past ~8 workers;
-    ``engine="pandas"`` keeps the reference kernel (tests compare both).
     """
+    def fused(batches):
+        return _parse_batches(batches, canonicalize=canonicalize)
+
     slim = corpus_with_format.select("repo", "path", "commit", "format", "content")
-    if engine == "arrow":
-        def fused_arrow(batches):
-            return _parse_batches_arrow(batches, canonicalize=canonicalize)
-
-        return slim.mapInArrow(fused_arrow, STATEMENT_RAW)
-    if canonicalize:
-        def fused(batches):
-            return _parse_batches(batches, canonicalize=True)
-
-        return slim.mapInPandas(fused, STATEMENT_RAW)
-    return slim.mapInPandas(_parse_batches, STATEMENT_RAW)
+    return slim.mapInArrow(fused, STATEMENT_RAW)
 
 
 def split_errors(raw: DataFrame) -> tuple[DataFrame, DataFrame]:

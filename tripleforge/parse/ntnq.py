@@ -1,4 +1,8 @@
-"""Vectorized N-Triples / N-Quads parser kernel (SURVEY.md §2.A4-A5).
+"""Reference N-Triples / N-Quads parser kernel (SURVEY.md §2.A4-A5).
+
+The engine parses NT/NQ with the Arrow kernel (``arrow_ntnq``); this
+pandas kernel is kept only as the independent reference that
+tests/test_arrow_kernel.py compares it against.
 
 One pandas pass over an Arrow batch of whole files: split lines →
 explode → a single compiled-regex ``Series.str.extract`` → columnar

@@ -15,8 +15,9 @@ styles, language tags and datatype annotations.
 
 Execution model: a regex lexer + recursive-descent parser that loops
 over *files within the Arrow batch* — not Spark rows — satisfying the
-north_star's "all parsing ... runs through Arrow-batched mapInPandas
-over content blocks" (SURVEY §2.A6 note). Per-file errors go to the
+north_star's "all parsing ... runs through Arrow-batched map passes
+over content blocks" (the dispatcher's mapInArrow hands this kernel a
+pandas frame) (SURVEY §2.A6 note). Per-file errors go to the
 error channel (A8); one bad file never kills the batch.
 
 Reference analog: RDF4J Rio ``TurtleParser`` (recursive descent over a

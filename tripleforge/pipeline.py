@@ -2,12 +2,17 @@
 
 Replacement for the reference's ``triple.loader -main`` CLI (load RDF
 files into a repository with optional named-graph context): corpus scan
-→ fingerprint → format detect → skew balance → Arrow parse → canon →
+→ scan widening → fingerprint → format detect → Arrow parse → canon →
 graph inject → (optional) entity linking → dedup → snapshot commit with
 lineage. Stages scan→parse→canon fuse into ONE Spark stage (no shuffle
-between them); the explicit shuffles are the balance repartition, the
+between them); the explicit shuffles are the narrow-scan widening, the
 linking joins/CC rounds, the dedup aggregate, and the bucket
 repartition before write.
+
+The prefix shared by ``transform``, ``build`` and the streaming ingest
+is written once, as two steps: ``parse_step`` (widen → fingerprint →
+format → parse+canon → split) and ``link_step`` (graph injection →
+entity linking).
 """
 
 from __future__ import annotations
@@ -33,12 +38,6 @@ class BuildConfig:
     link_entities: bool = True
     link_key_preds: list[str] = field(default_factory=list)
     max_block: int = 10_000
-    # Explicit pre-parse repartition (A23). None = skip: shuffling raw
-    # `content` costs more than it saves when the scan's input splits
-    # are already size-bounded (spark.sql.files.maxPartitionBytes splits
-    # whale repos across tasks regardless of row grouping). Set it for
-    # corpora whose upstream layout is pathologically clustered.
-    balance_partitions: int | None = None
     run_id: str | None = None
     resume: bool = True
     canonicalize: bool = True
@@ -68,10 +67,8 @@ def compact_links(
     commits the result as a full-replacement (overwrite) snapshot —
     previous snapshots stay readable via time travel.
     """
-    import uuid as _uuid
-
     cfg = cfg or BuildConfig()
-    rid = run_id or ("compact-" + _uuid.uuid4().hex)
+    rid = run_id or ("compact-" + uuid.uuid4().hex)
     if catalog.latest_snapshot_id() is None:
         return BuildResult(0, rid, 0, 0)  # empty catalog → no-op
     # idempotent re-run: an already-committed run_id returns its prior
@@ -85,9 +82,7 @@ def compact_links(
         "subj", "pred", "obj", "obj_kind", "obj_dt", "obj_lang", "graph",
         "src_repo", "src_path", "src_commit",
     )
-    edges = link.candidate_edges(live, cfg.link_key_preds, cfg.max_block)
-    mapping = link.connected_components(edges)
-    rewritten = ops.dedup(link.rewrite(live, mapping))
+    rewritten = ops.dedup(link_entities(live, cfg))
     # single-pass commit: the row count rides the snapshot write via
     # observe(), so compaction reads the live store once (VERDICT r2)
     from pyspark.sql import Observation
@@ -110,41 +105,56 @@ def compact_links(
     return BuildResult(sid, rid, observed_count(obs), 0)
 
 
+def parse_step(
+    corpus: DataFrame, cfg: BuildConfig
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Corpus → (raw, statements, errors): the parse half of the build
+    prefix. ``raw`` is the parse output before the split, for callers
+    that materialize it (``build``).
+
+    The raw corpus is widened first (no-op when the scan is already
+    wide), so the fingerprint/format projections land ABOVE the
+    exchange and fuse into the wide parse stage (an exchange between
+    them would serialize the sha256 onto the narrow scan as its own AQE
+    stage — measured). cores/4 (not full width): the parse feeds the
+    dedup shuffle, so fewer, larger map tasks win (guide §2.2;
+    interleaved A/B at sf1.0: narrow 0.88 s, 32-wide 1.04 s, 8-wide
+    0.78 s). Parse + canon are FUSED into one Python stage (one Arrow
+    round-trip)."""
+    dp = corpus.sparkSession.sparkContext.defaultParallelism
+    corpus = ops.widen_if_narrow(corpus, target=max(min(8, dp), dp // 4))
+    raw = parse_corpus(
+        with_format(ops.with_sha256(corpus)), canonicalize=cfg.canonicalize
+    )
+    stmts, errors = split_errors(raw)
+    return raw, stmts, errors
+
+
+def link_step(stmts: DataFrame, cfg: BuildConfig) -> DataFrame:
+    """Statements → graph-injected (and, with ``cfg.link_entities``,
+    entity-linked) statements: the link half of the build prefix."""
+    stmts = ops.assign_graph(stmts, cfg.graph_override)
+    return link_entities(stmts, cfg) if cfg.link_entities else stmts
+
+
+def link_entities(stmts: DataFrame, cfg: BuildConfig) -> DataFrame:
+    """Candidate edges → connected components → representative
+    rewrite. Connected components checkpoints its edges eagerly, so
+    this runs jobs over ``stmts`` when called."""
+    edges = link.candidate_edges(stmts, cfg.link_key_preds, cfg.max_block)
+    return link.rewrite(stmts, link.connected_components(edges))
+
+
 def transform(
     corpus: DataFrame, cfg: BuildConfig | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """Pure dataflow (no catalog side effects): corpus → (statements,
-    errors). Used by the build, the streaming foreachBatch path, and
-    tests — single source of truth for parse/canon semantics."""
+    errors), batch-globally deduped. Used by tests and tools; the build
+    and the streaming ingest share its prefix but shape for commit
+    instead of deduping here."""
     cfg = cfg or BuildConfig()
-    if not cfg.balance_partitions:
-        # r6: widen a narrower-than-cluster scan so the fused
-        # sha256+format+parse stage uses every core; no-op when the
-        # scan is already wide (guide §2.5 — measured 1-partition parse
-        # at sf1.0). Applied to the RAW corpus so the fingerprint/format
-        # projections land ABOVE the exchange and fuse into the wide
-        # parse stage (an exchange between them would serialize the
-        # sha256 onto the narrow scan as its own AQE stage — measured).
-        # cores/4 (not full width): the parse feeds the dedup shuffle,
-        # so fewer, larger map tasks win (guide §2.2; interleaved A/B at
-        # sf1.0: narrow 0.88 s, 32-wide 1.04 s, 8-wide 0.78 s).
-        dp = corpus.sparkSession.sparkContext.defaultParallelism
-        corpus = ops.widen_if_narrow(corpus, target=max(min(8, dp), dp // 4))
-    prepared = with_format(ops.with_sha256(corpus))
-    if cfg.balance_partitions:
-        # optional SHUFFLE #1 (A23 salt-and-split) — see BuildConfig
-        prepared = ops.balance(prepared, cfg.balance_partitions)
-    # parse + canon FUSED into one Python stage (one Arrow round-trip)
-    raw = parse_corpus(prepared, canonicalize=cfg.canonicalize)
-    stmts, errors = split_errors(raw)
-    stmts = ops.assign_graph(stmts, cfg.graph_override)
-
-    if cfg.link_entities:
-        edges = link.candidate_edges(stmts, cfg.link_key_preds, cfg.max_block)
-        mapping = link.connected_components(edges)
-        stmts = link.rewrite(stmts, mapping)
-
-    stmts = ops.dedup(stmts)  # SHUFFLE: partial+final hash agg
+    _, stmts, errors = parse_step(corpus, cfg)
+    stmts = ops.dedup(link_step(stmts, cfg))  # SHUFFLE: partial+final hash agg
     return stmts, errors
 
 
@@ -212,23 +222,12 @@ def build(
             sid = catalog.latest_snapshot_id() or 0
             return BuildResult(sid, run_id, 0, 0)
 
-    if not cfg.balance_partitions:
-        # r6, see transform()
-        dp = corpus.sparkSession.sparkContext.defaultParallelism
-        corpus = ops.widen_if_narrow(corpus, target=max(min(8, dp), dp // 4))
-    prepared = with_format(ops.with_sha256(corpus))
-    if cfg.balance_partitions:
-        prepared = ops.balance(prepared, cfg.balance_partitions)
-    raw = parse_corpus(prepared, canonicalize=cfg.canonicalize).persist()
-
-    stmts, errors = split_errors(raw)
-    stmts = ops.assign_graph(stmts, cfg.graph_override)
-    if cfg.link_entities:
-        edges = link.candidate_edges(stmts, cfg.link_key_preds, cfg.max_block)
-        mapping = link.connected_components(edges)
-        stmts = link.rewrite(stmts, mapping)
-
-    unit_deduped, data = shape_for_commit(stmts, catalog)
+    raw, stmts, errors = parse_step(corpus, cfg)
+    # persisted BEFORE link_step, whose eager edge checkpoint can be the
+    # first job over the parse; CacheManager substitutes by plan
+    # equality, so the statements/errors plans derived above read it
+    raw.persist()
+    unit_deduped, data = shape_for_commit(link_step(stmts, cfg), catalog)
     # Second staging materialization: `data` (the snapshot write) and
     # the lineage aggregation BOTH need the post-exchange unit-deduped
     # statements. Persisting it makes the lineage job a cache scan +

@@ -59,7 +59,7 @@ CORPUS = StructType(
 
 # ---------------------------------------------------------------------------
 # Parser output: raw statements + unioned error channel (SURVEY §2.A4-A8).
-# One mapInPandas pass emits both kinds of rows; `error` is null for good
+# One mapInArrow pass emits both kinds of rows; `error` is null for good
 # statement rows and non-null for error rows (then term columns are null).
 # bnode terms come out with obj_kind/subj markers and are skolemized in
 # canon.py (A10); the parser already emits skolem IRIs because the skolem

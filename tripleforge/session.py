@@ -9,16 +9,40 @@ batch size because corpus `content` rows are fat (KB-MB each).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def driver_memory(phys_bytes: int | None = None) -> str:
+    """Driver heap for a local-mode JVM: half of physical RAM (the other
+    half is headroom for the Python workers, Arrow buffers and the OS),
+    between 1g and 24g — the size tuned for local[32]."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(24, phys_bytes // 2**31))}g"
+
+
+def local_cores(master: str | None) -> int | None:
+    """Task slots of a local master (``local``, ``local[N]``,
+    ``local[*]``, with an optional ``,maxFailures``); None for any
+    other master. ``*`` is the cores this process may run on."""
+    m = re.fullmatch(r"local(?:\[(\*|\d+)(?:,\d+)?\])?", master or "")
+    if m is None:
+        return None
+    if m.group(1) is None:
+        return 1
+    return len(os.sched_getaffinity(0)) if m.group(1) == "*" else int(m.group(1))
+
 
 DEFAULT_CONFS = {
     # local-mode JVM heap: the default 1g OOMs at local[32] with fat
     # content rows in flight, and a small heap makes 32 concurrent tasks
     # spill in every aggregate (each task gets ~heap×0.6/32 of execution
-    # memory). Only applies before JVM launch; ignored when spark-submit
-    # already set it (real clusters size executors instead).
-    "spark.driver.memory": "24g",
+    # memory). Derived from physical RAM — see driver_memory. Only
+    # applies before JVM launch; ignored when spark-submit already set
+    # it (real clusters size executors instead).
+    "spark.driver.memory": driver_memory(),
     # AQE: runtime re-plan, shuffle-partition coalescing, skew-join split.
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -66,12 +90,12 @@ def get_spark(
     # on parquet row-group boundaries); at 100 TB inputs
     # totalBytes/minPartitionNum >> maxPartitionBytes, so split sizing
     # is governed by maxPartitionBytes exactly as before — this cannot
-    # shrink partitions at scale. Derived from the master, not
-    # hard-coded; clusters (non-local masters) are untouched.
-    if master and master.startswith("local["):
-        n = master[len("local["):-1]
-        if n.isdigit():
-            confs.setdefault("spark.sql.files.minPartitionNum", n)
+    # shrink partitions at scale. Derived from the master (local[*]
+    # resolves to the core count), not hard-coded; clusters (non-local
+    # masters) are untouched.
+    n = local_cores(master)
+    if n is not None:
+        confs.setdefault("spark.sql.files.minPartitionNum", str(n))
     if extra_conf:
         confs.update(extra_conf)
     for k, v in confs.items():

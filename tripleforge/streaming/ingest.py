@@ -2,10 +2,11 @@
 
 The reference is batch-only; this is the idiomatic-Spark extension for
 continuous corpus arrival, kept semantically identical to the batch
-path by reusing the batch build's parse/canon kernels and its
-``pipeline.shape_for_commit`` (unit-scoped lineage dedup + global dedup
-+ bucket-pruned live anti-join) inside ``foreachBatch`` — one source of
-truth for parse/canon/dedup/commit semantics (D9).
+path by reusing the batch build's prefix (``pipeline.parse_step`` and
+``pipeline.link_step``) and its ``pipeline.shape_for_commit``
+(unit-scoped lineage dedup + global dedup + bucket-pruned live
+anti-join) inside ``foreachBatch`` — one source of truth for
+parse/canon/dedup/commit semantics (D9).
 
 - D1: file-source stream over the corpus directory (explicit schema).
 - D2/D8: watermark on ingest time bounds state; late rows beyond it are
@@ -30,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, TimestampType
 
+from tripleforge import lineage, pipeline
 from tripleforge.catalog.base import Catalog
 from tripleforge.pipeline import BuildConfig
 from tripleforge.schema import CORPUS
@@ -145,30 +147,16 @@ def incremental_build(
         corpus = batch_df.select(*[f.name for f in CORPUS.fields])
         if corpus.isEmpty():
             return
-        # transform WITHOUT its batch-global dedup: commit shaping
-        # (unit dedup for lineage attribution + global dedup + live
-        # anti-join) is shared with the batch build — one source of
+        # the build prefix WITHOUT transform's batch-global dedup: commit
+        # shaping (unit dedup for lineage attribution + global dedup +
+        # live anti-join) is shared with the batch build — one source of
         # truth, and cross-micro-batch appends stay set-semantic.
-        from tripleforge import lineage as lmod
-        from tripleforge.detect import with_format
-        from tripleforge.ops import assign_graph, with_sha256
-        from tripleforge.parse import parse_corpus, split_errors
-        from tripleforge.pipeline import shape_for_commit
-
-        raw = parse_corpus(
-            with_format(with_sha256(corpus)), canonicalize=cfg.canonicalize
+        _, stmts, errors = pipeline.parse_step(corpus, cfg)
+        unit_deduped, data = pipeline.shape_for_commit(
+            pipeline.link_step(stmts, cfg), catalog
         )
-        stmts, errors = split_errors(raw)
-        stmts = assign_graph(stmts, cfg.graph_override)
-        if cfg.link_entities:
-            from tripleforge import link
-
-            edges = link.candidate_edges(stmts, cfg.link_key_preds, cfg.max_block)
-            mapping = link.connected_components(edges)
-            stmts = link.rewrite(stmts, mapping)
-        unit_deduped, data = shape_for_commit(stmts, catalog)
         lin = (
-            lmod.collect(unit_deduped, errors)
+            lineage.collect(unit_deduped, errors)
             .withColumn("run_id", F.lit(f"stream-{batch_id}"))
             .withColumn("committed_at", F.current_timestamp())
         )
