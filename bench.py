@@ -36,7 +36,9 @@ now adjudicates itself):
   2-3×; genuine code regressions in r1-r4 history were ≥1.5×).
   ``reference_delta`` holds per-query ratios; ``regressions`` lists
   queries past tolerance — trustworthy when ``load_gate`` is clean,
-  expected noise otherwise.
+  expected noise otherwise. The reference is keyed by (sf, cpus); on a
+  mismatch the JSON carries ``reference_sf_mismatch`` or
+  ``reference_cpus_mismatch`` and no regressions.
 """
 
 from __future__ import annotations
@@ -98,8 +100,11 @@ def _wait_for_quiet() -> str:
     return "clean"
 
 
-def _reference_deltas(timings: dict, sf: float) -> tuple[dict, list, dict]:
-    """(per-query time/ref ratios, queries past tolerance, ref meta)."""
+def _reference_deltas(timings: dict, sf: float, cpus: int) -> tuple[dict, list, dict]:
+    """(per-query time/ref ratios, queries past tolerance, ref meta).
+    The reference is keyed by (sf, cpus): a reference taken at another
+    scale factor or core count is reported as a mismatch and flags
+    nothing."""
     try:
         with open(REFERENCE) as fh:
             ref = json.load(fh)
@@ -107,6 +112,8 @@ def _reference_deltas(timings: dict, sf: float) -> tuple[dict, list, dict]:
         return {}, [], {}
     if ref.get("sf") != sf:
         return {}, [], {"reference_sf_mismatch": ref.get("sf")}
+    if ref.get("cpus") != cpus:
+        return {}, [], {"reference_cpus_mismatch": ref.get("cpus")}
     rq = ref.get("queries", {})
     deltas = {
         k: round(v / rq[k], 2) for k, v in timings.items() if rq.get(k)
@@ -180,7 +187,7 @@ def main() -> int:
         timings[name] = min(runs[name])
 
     total = round(sum(timings.values()), 3)
-    deltas, regressions, ref_meta = _reference_deltas(timings, sf)
+    deltas, regressions, ref_meta = _reference_deltas(timings, sf, int(CPUS))
     out = {
         "metric": "headline_suite_seconds",
         "value": total,

@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+import glob
+import os
 import shutil
 import tempfile
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -90,6 +93,106 @@ def test_idempotent_recommit(spark, cat_root):
     sid = cat.commit_snapshot(s2, lmod.collect(s2, e2).withColumn("run_id", F.lit("same")), run_id="same")
     assert sid == r1.snapshot_id
     assert cat.read_statements().count() == n
+
+
+def _bounded(fn, timeout=300):
+    """Run ``fn`` in a thread and fail if it does not return in time: a
+    build that read its observed totals without a write would block
+    forever instead of failing."""
+    out = {}
+
+    def run():
+        try:
+            out["value"] = fn()
+        except BaseException as exc:  # re-raised in the test thread
+            out["error"] = exc
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout)
+    assert not t.is_alive(), f"build() did not return within {timeout} s"
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
+
+
+def test_idempotent_build_rerun_reports_first_totals(spark, cat_root):
+    """A build whose run_id is already committed writes nothing, so its
+    totals cannot come from the lineage write's observed metrics; they
+    are the first run's committed ones."""
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    corpus = _corpus(spark)
+    cfg = BuildConfig(run_id="same", resume=False, link_entities=False)
+    r1 = _bounded(lambda: build(spark, corpus, cat, cfg))
+    n = cat.read_statements().count()
+    r2 = _bounded(lambda: build(spark, corpus, cat, cfg))
+    assert r2.snapshot_id == r1.snapshot_id
+    assert (r2.n_statements, r2.n_errors) == (r1.n_statements, r1.n_errors)
+    assert r1.n_statements > 0
+    assert cat.read_statements().count() == n
+    assert cat.latest_snapshot_id() == r1.snapshot_id
+
+
+def test_all_malformed_corpus_reports_errors_only(spark, cat_root):
+    """Every line malformed: no statement is committed, and the reported
+    error total is the committed lineage's."""
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    corpus = spark.createDataFrame(
+        [
+            ("org/r1", "a.nt", "c1", "N-Triples", "<urn:s> <urn:p> .\n<urn:s> <urn:p\n"),
+            ("org/r2", "b.nt", "c2", "N-Triples", "not rdf at all\n"),
+        ],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    res = _bounded(lambda: build(spark, corpus, cat, BuildConfig(link_entities=False)))
+    committed = cat.read_lineage().agg(F.sum("n_errors")).first()[0]
+    assert res.n_statements == 0
+    assert res.n_errors == committed > 0
+    assert cat.read_statements().count() == 0
+
+
+def test_empty_corpus_without_resume_reports_zero(spark, cat_root):
+    """No unit at all: the lineage write is empty, AQE may prune its
+    metrics node, and the totals read as 0 rather than failing."""
+    from tripleforge.schema import CORPUS
+
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    empty = spark.createDataFrame(spark.sparkContext.emptyRDD(), CORPUS)
+    res = _bounded(
+        lambda: build(spark, empty, cat, BuildConfig(resume=False, link_entities=False))
+    )
+    assert (res.n_statements, res.n_errors) == (0, 0)
+
+
+@pytest.mark.parametrize("n_buckets", [8, 64])
+def test_build_writes_one_sorted_file_per_bucket(spark, cat_root, n_buckets):
+    """The bucket write lets AQE size its task count, but each
+    graph_bucket directory still holds exactly one file, sorted by
+    subject (tight row-group stats for bound-subject scans)."""
+    import pyarrow.parquet as pq
+
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=n_buckets)
+    corpus = corpus_df(spark, CorpusSpec(n_repos=12, files_per_repo=2, stmts_per_file=10))
+    res = build(spark, corpus, cat, BuildConfig(link_entities=False))
+    dirs = glob.glob(os.path.join(cat_root, f"data/snap={res.snapshot_id}/graph_bucket=*"))
+    assert len(dirs) > 1
+    n = 0
+    for d in dirs:
+        files = glob.glob(os.path.join(d, "*.parquet"))
+        assert len(files) == 1, f"{d} holds {len(files)} files"
+        subj = pq.read_table(files[0], columns=["subj"]).column("subj").to_pylist()
+        assert subj == sorted(subj)
+        n += len(subj)
+    assert n == res.n_statements == cat.read_statements().count()
+
+
+def test_filter_pending_on_empty_catalog_plans_no_join(spark, cat_root):
+    """Nothing is committed in an empty catalog, so the resume filter
+    adds no join (and no exchange in front of the scan widening)."""
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    corpus = _corpus(spark)
+    plan = filter_pending(corpus, cat)._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan, plan
 
 
 def test_time_travel(spark, cat_root):

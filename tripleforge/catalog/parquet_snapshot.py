@@ -128,7 +128,13 @@ class ParquetSnapshotCatalog(Catalog):
         data_path = os.path.join(self.root, data_rel)
         (
             with_graph_bucket(statements.select(*[f.name for f in STATEMENT.fields]), self.n_buckets)
-            .repartition(self.n_buckets, F.col("graph_bucket"))
+            # hash on the bucket with no fixed count: each bucket still
+            # lands in exactly one task (one file per graph_bucket dir),
+            # while AQE coalesces the spark.sql.shuffle.partitions-wide
+            # exchange to as many tasks as the data needs — a small
+            # write is not n_buckets tasks, and a cluster-scale one is
+            # bounded by the shuffle width rather than n_buckets
+            .repartition(F.col("graph_bucket"))
             # sort by subject within each bucket file: parquet row-group
             # min/max stats become tight subject ranges, so bound-subject
             # scans (DESCRIBE, <s> ?p ?o patterns) skip whole row groups
@@ -230,7 +236,7 @@ class ParquetSnapshotCatalog(Catalog):
     def read_statements(self, snapshot_id: int | None = None) -> DataFrame:
         m = self._manifest_for(snapshot_id)
         if m is None or not m["live_paths"]:
-            return self.spark.createDataFrame([], with_graph_bucket_schema())
+            return self._empty(with_graph_bucket_schema())
         paths = [os.path.join(self.root, p) for p in m["live_paths"]]
         return self.spark.read.option(
             "basePath", os.path.join(self.root)
@@ -239,12 +245,17 @@ class ParquetSnapshotCatalog(Catalog):
     def read_lineage(self) -> DataFrame:
         m = self._manifest_for(None)
         if m is None or not m["lineage_paths"]:
-            from tripleforge.schema import LINEAGE
-
-            cols = [f.name for f in LINEAGE.fields if f.name in ("repo", "commit", "parser", "n_files", "n_triples", "n_errors", "checksum")]
-            return self.spark.createDataFrame([], "repo string, commit string, parser string, n_files long, n_triples long, n_errors long, checksum string")
+            return self._empty(
+                "repo string, commit string, parser string, n_files long, "
+                "n_triples long, n_errors long, checksum string"
+            )
         paths = [os.path.join(self.root, p) for p in m["lineage_paths"]]
         return self.spark.read.parquet(*paths)
+
+    def _empty(self, schema) -> DataFrame:
+        """An empty frame with zero partitions (``createDataFrame([])``
+        parallelizes a Python list into defaultParallelism of them)."""
+        return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), schema)
 
     def live_paths(self) -> list[str]:
         m = self._manifest_for(None)

@@ -22,14 +22,21 @@ def filter_pending(
 ) -> DataFrame:
     """Corpus rows whose (repo, commit) is not yet committed.
 
-    left_anti join; the committed set is lineage-derived and usually
-    small relative to the corpus → broadcast it. Size-aware like
-    link.rewrite (ADVICE r1 pattern): at 10^12 files the committed set
-    approaches 10^9 units, past any broadcast limit — above the
+    An empty catalog has nothing committed, so ``corpus`` comes back
+    unchanged: no count probe, no join. That keeps the plan free of an
+    exchange, so ``ops.widen_if_narrow`` still widens a narrow scan and
+    a first build parses on every core.
+
+    Otherwise a left_anti join; the committed set is lineage-derived
+    and usually small relative to the corpus → broadcast it. Size-aware
+    like link.rewrite (ADVICE r1 pattern): at 10^12 files the committed
+    set approaches 10^9 units, past any broadcast limit — above the
     threshold the anti-join becomes a plain shuffle join and AQE picks
     the strategy. The count probe reads only the (tiny, columnar)
     lineage table.
     """
+    if catalog.latest_snapshot_id() is None:
+        return corpus
     committed = catalog.committed_units()
     if committed.count() <= broadcast_threshold:
         committed = F.broadcast(committed)

@@ -157,17 +157,3 @@ def with_graph_bucket(df: DataFrame, n_buckets: int = N_GRAPH_BUCKETS) -> DataFr
         "graph_bucket", F.pmod(F.xxhash64("graph"), F.lit(n_buckets)).cast("int")
     )
 
-
-def write_statements_parquet(
-    df: DataFrame, path: str, mode: str = "append", n_buckets: int = N_GRAPH_BUCKETS
-) -> None:
-    """A20 — materialize deduplicated named-graph partitions (sandbox
-    Parquet path; catalog.ParquetSnapshotCatalog adds the snapshot
-    commit on top — see tripleforge/catalog/parquet_snapshot.py)."""
-    (
-        with_graph_bucket(df, n_buckets)
-        .repartition(n_buckets, F.col("graph_bucket"))
-        .write.partitionBy("graph_bucket")
-        .mode(mode)
-        .parquet(path)
-    )

@@ -106,15 +106,15 @@ def _empty_lineage(spark: SparkSession, op: str, n: int) -> DataFrame:
     )
 
 
-def observed_count(obs: Observation) -> int:
-    """The observed row count after the action ran. When AQE's
-    empty-relation propagation proves the written result empty, it
-    prunes the CollectMetrics node and the observation holds no
-    well-formed row — which happens exactly and only when the count
-    is 0 (verified empirically on Spark 4.1: a parquet scan filtered
+def observed_count(obs: Observation, key: str = "n") -> int:
+    """The observed count ``key`` after the action ran; a null sum
+    reads as 0. When AQE's empty-relation propagation proves the
+    written result empty, it prunes the CollectMetrics node and the
+    observation holds no well-formed row — which happens exactly and
+    only when the count is 0 (verified empirically on Spark 4.1: a parquet scan filtered
     to provably-empty + partitionBy write)."""
     try:
-        return int(obs.get["n"])
+        return int(obs.get[key])
     except Exception:
         return 0
 
