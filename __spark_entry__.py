@@ -1023,7 +1023,12 @@ def q_range_join(spark, sf):
     strict < becomes ≤ −(W+1)); ties in ``us`` are handled by the
     row_number's id tie-break. Σ cnt_i per user = the pair count; the
     final groupBy reuses the window's hash partitioning (no second
-    exchange)."""
+    exchange).
+
+    ``event_id`` is assumed unique (it is the fixture's key). Two rows
+    with equal (us, event_id) still get distinct row numbers, so each
+    counts the other as a pair partner, which the binned join's
+    ``id_a < id_b`` excluded; tests/test_opt_r06.py pins that count."""
     e = read_table(spark, sf, "events").select(
         "event_id",
         "user_id",

@@ -549,3 +549,92 @@ def test_mutations_are_single_pass(spark, cat_root, monkeypatch):
     assert ("insert_data", 1) in lin   # one new statement appended
     assert ("delete_data", 2) in lin   # s2 + s3 remained after the delete
     assert ("clear", 0) in lin         # clear left nothing
+
+
+def _insert_first_then_build(spark, cat_root):
+    """A store whose first commit is INSERT DATA, then a build: its
+    lineage files start with a mutation's row."""
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    update.insert_data(cat, _one_row(spark, "http://s0"), graph="urn:g", run_id="i0")
+    cfg = BuildConfig(run_id="b1", resume=False, link_entities=False)
+    return cat, cfg, _bounded(lambda: build(spark, _corpus(spark), cat, cfg))
+
+
+def test_compact_links_after_insert_first_store_is_idempotent(spark, cat_root):
+    from tripleforge.pipeline import compact_links
+
+    cat, _, _ = _insert_first_then_build(spark, cat_root)
+    c1 = compact_links(spark, cat, run_id="c1")
+    c2 = compact_links(spark, cat, run_id="c1")
+    assert c1 == c2
+    assert c1.snapshot_id == cat.latest_snapshot_id()
+    assert c1.n_statements == cat.read_statements().count()
+
+
+def test_same_run_id_build_after_insert_first_store_reports_first_totals(spark, cat_root):
+    cat, cfg, r1 = _insert_first_then_build(spark, cat_root)
+    r2 = _bounded(lambda: build(spark, _corpus(spark), cat, cfg))
+    assert r1.n_statements > 0
+    assert r2 == r1
+    assert cat.latest_snapshot_id() == r1.snapshot_id
+
+
+def test_lineage_has_schema_columns_after_every_commit_kind(spark, cat_root):
+    """The catalog stamps run_id/snapshot_id/committed_at and projects to
+    schema.LINEAGE, whatever the writer and whichever commit came first."""
+    from tripleforge.pipeline import compact_links
+    from tripleforge.schema import LINEAGE
+
+    want = [f.name for f in LINEAGE.fields]
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    assert cat.read_lineage().columns == want
+    steps = [
+        ("insert", lambda: update.insert_data(
+            cat, _one_row(spark, "http://a"), graph="urn:g", run_id="i1")),
+        ("build", lambda: build(
+            spark, _corpus(spark), cat, BuildConfig(run_id="b1", link_entities=False))),
+        ("compact_links", lambda: compact_links(spark, cat, run_id="c1")),
+        ("delete", lambda: update.delete_data(
+            cat, _one_row(spark, "http://a"), graph="urn:g", run_id="d1")),
+        ("modify", lambda: update.modify(
+            cat, inserts=_one_row(spark, "http://b"), run_id="m1")),
+        ("graph_op", lambda: update.graph_op(cat, "copy", None, "urn:h", run_id="g1")),
+        ("clear graph", lambda: update.clear(cat, graph="urn:h", run_id="x1")),
+        ("clear default", lambda: update.clear(cat, which="default", run_id="x2")),
+        ("compact_store", lambda: update.compact_store(cat, run_id="k1")),
+        ("clear named", lambda: update.clear(cat, which="named", run_id="x3")),
+        ("clear all", lambda: update.clear(cat, which="all", run_id="x4")),
+    ]
+    for kind, step in steps:
+        _bounded(step)
+        assert cat.read_lineage().columns == want, kind
+    lin = cat.read_lineage()
+    assert lin.where(F.col("run_id").isNull() | F.col("committed_at").isNull()).count() == 0
+    # one lineage row set per commit, stamped with that commit's snapshot
+    assert lin.select("snapshot_id").distinct().count() == cat.latest_snapshot_id()
+    assert cat.read_statements().count() == 0
+
+
+def test_delete_of_absent_triple_is_a_no_op(spark, cat_root):
+    """Deleting a triple that is not in the store removes nothing —
+    set semantics, the twin of test_insert_is_set_semantic."""
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    update.insert_data(cat, _one_row(spark, "http://s1"), graph="urn:g", run_id="i1")
+    update.delete_data(cat, _one_row(spark, "http://absent"), graph="urn:g", run_id="d1")
+    update.delete_data(cat, _one_row(spark, "http://s1"), graph="urn:other", run_id="d2")
+    left = cat.read_statements().select("subj", "graph").collect()
+    assert [(r.subj, r.graph) for r in left] == [("http://s1", "urn:g")]
+
+
+def test_insert_data_checks_emptiness_without_reading_the_store(spark, cat_root, monkeypatch):
+    """INSERT DATA into an empty catalog tells it is empty from the
+    snapshot log: it never reads the statements."""
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+
+    def banned_read(*a, **kw):
+        raise AssertionError("read_statements() on an empty catalog")
+
+    monkeypatch.setattr(cat, "read_statements", banned_read)
+    update.insert_data(cat, _one_row(spark, "http://s1"), graph="urn:g", run_id="i1")
+    monkeypatch.undo()
+    assert cat.read_statements().count() == 1

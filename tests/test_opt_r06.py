@@ -77,6 +77,26 @@ def test_range_pair_count_window_equals_binned_join(spark):
     assert 3 not in b  # zero-pair users dropped, as the join formulation does
 
 
+def test_range_join_counts_a_duplicated_event_row_as_a_pair(spark, tmp_path):
+    """q_range_join assumes event_id is unique. Pinned here: a row
+    duplicated on (ts, event_id) pairs with its copy, so user 1's three
+    rows count 3 pairs (the binned join's id_a < id_b would count 1)."""
+    import datetime as dt
+
+    import __spark_entry__ as em
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (10, t0, 1), (10, t0, 1), (11, t0 + dt.timedelta(minutes=1), 1),
+        (20, t0, 2), (21, t0 + dt.timedelta(minutes=11), 2),
+    ]
+    spark.createDataFrame(rows, "event_id long, ts timestamp, user_id long").write.parquet(
+        str(tmp_path / "events.parquet")
+    )
+    got = {r["user_id"]: r["n_pairs"] for r in em.q_range_join(spark, str(tmp_path)).collect()}
+    assert got == {1: 3}
+
+
 # ---------------------------------------------------------------------------
 # quality_score: positive-class regexp_count == negated-class replace
 # ---------------------------------------------------------------------------

@@ -137,6 +137,31 @@ def test_streaming_shadowed_unit_lineage_and_cross_batch_set_semantics(spark, di
     }
 
 
+def test_stream_batch_after_insert_first_store_stamps_lineage(spark, dirs):
+    """A micro-batch committed onto a store whose first commit was
+    INSERT DATA: the catalog stamps both lineage kinds to schema.LINEAGE."""
+    from tripleforge import update
+    from tripleforge.schema import LINEAGE
+
+    src, chk, root = dirs
+    cat = ParquetSnapshotCatalog(spark, root, n_buckets=4)
+    update.insert_data(
+        cat,
+        spark.createDataFrame(
+            [("http://s", "http://p", "http://o", "iri")],
+            "subj string, pred string, obj string, obj_kind string",
+        ),
+        graph="urn:g",
+        run_id="i0",
+    )
+    _landing(spark, src, CorpusSpec(n_repos=1, files_per_repo=2, stmts_per_file=4))
+    incremental_build(spark, src, cat, chk).awaitTermination(120)
+    lin = cat.read_lineage()
+    assert lin.columns == [f.name for f in LINEAGE.fields]
+    assert {r.run_id for r in lin.select("run_id").collect()} == {"i0", "stream-0"}
+    assert lin.where(F.col("committed_at").isNull()).count() == 0
+
+
 def test_streaming_ingests_jsonld(spark, dirs):
     """r4: the shared dispatcher means JSON-LD corpora stream through
     the incremental path identically to batch — format coverage check."""

@@ -16,10 +16,30 @@ from abc import ABC, abstractmethod
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from tripleforge.io import N_GRAPH_BUCKETS
+from tripleforge.schema import LINEAGE
 
 
 class Catalog(ABC):
-    """Snapshot-versioned statement store with lineage."""
+    """Snapshot-versioned statement store with lineage.
+
+    Every write goes through :meth:`commit_snapshot`. Writers hand it
+    lineage rows of ``(repo, commit, parser, n_files, n_triples,
+    n_errors, checksum)`` only; the catalog stamps ``run_id``,
+    ``snapshot_id`` and ``committed_at`` and projects to
+    ``schema.LINEAGE`` (:func:`stamp_lineage`), so ``read_lineage`` has
+    one shape whatever kind of commit came first.
+
+    The layout is declared here too: ``n_buckets`` is the graph-bucket
+    modulus of the statement layout (read pruning must use the same
+    one), and :meth:`live_paths` lists the live data paths of a
+    path-addressed catalog, or is None for one that is not (Iceberg),
+    in which case mutations cannot carry paths over and rewrite what
+    they read."""
+
+    n_buckets: int = N_GRAPH_BUCKETS
 
     @abstractmethod
     def commit_snapshot(
@@ -52,12 +72,32 @@ class Catalog(ABC):
 
     @abstractmethod
     def read_lineage(self) -> DataFrame:
-        """All committed lineage rows."""
+        """All committed lineage rows, with the ``schema.LINEAGE`` columns."""
 
     @abstractmethod
     def latest_snapshot_id(self) -> int | None: ...
+
+    def live_paths(self) -> list[str] | None:
+        """Live data paths of the latest snapshot; None when the catalog
+        is not path-addressed."""
+        return None
 
     def committed_units(self) -> DataFrame:
         """Distinct (repo, commit) already committed — the resume
         anti-join's right side (A22)."""
         return self.read_lineage().select("repo", "commit").dropDuplicates()
+
+
+def stamp_lineage(lineage: DataFrame, run_id: str, snapshot_id: int) -> DataFrame:
+    """A writer's lineage rows with the commit's ``run_id``,
+    ``snapshot_id`` and ``committed_at`` stamped on, projected to
+    ``schema.LINEAGE``."""
+    stamps = {
+        "run_id": F.lit(run_id),
+        "snapshot_id": F.lit(snapshot_id).cast("long"),
+        "committed_at": F.current_timestamp(),
+    }
+    # writers' columns pass through by name: one projection, no per-column casts
+    return lineage.select(
+        *[stamps[n].alias(n) if n in stamps else n for n in LINEAGE.fieldNames()]
+    )

@@ -10,12 +10,12 @@ that's the point of the Catalog interface.
 
 from __future__ import annotations
 
-import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tripleforge.catalog.base import Catalog
+from tripleforge.catalog.base import Catalog, stamp_lineage
 
 
 class IcebergCatalog(Catalog):
@@ -35,7 +35,7 @@ class IcebergCatalog(Catalog):
     def commit_snapshot(
         self,
         statements: DataFrame,
-        lineage: DataFrame,
+        lineage: DataFrame | Callable[[], DataFrame],
         run_id: str,
         operation: str = "append",
         replace_paths: list[str] | None = None,
@@ -64,12 +64,7 @@ class IcebergCatalog(Catalog):
                 "ORDER BY committed_at DESC LIMIT 1"
             ).first()["snapshot_id"]
         )
-        (
-            lineage.withColumn("run_id", F.lit(run_id))
-            .withColumn("snapshot_id", F.lit(snap))
-            .writeTo(self.lineage_table)
-            .append()
-        )
+        stamp_lineage(lineage, run_id, snap).writeTo(self.lineage_table).append()
         return int(snap)
 
     def read_statements(self, snapshot_id: int | None = None) -> DataFrame:

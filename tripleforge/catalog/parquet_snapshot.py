@@ -28,13 +28,14 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tripleforge.catalog.base import Catalog
+from tripleforge.catalog.base import Catalog, stamp_lineage
 from tripleforge.io import N_GRAPH_BUCKETS, with_graph_bucket
-from tripleforge.schema import STATEMENT
+from tripleforge.schema import LINEAGE, STATEMENT
 
 
 class ConcurrentOverwriteError(RuntimeError):
@@ -114,7 +115,7 @@ class ParquetSnapshotCatalog(Catalog):
     def commit_snapshot(
         self,
         statements: DataFrame,
-        lineage: DataFrame,
+        lineage: DataFrame | Callable[[], DataFrame],
         run_id: str,
         operation: str = "append",
         replace_paths: list[str] | None = None,
@@ -158,12 +159,7 @@ class ParquetSnapshotCatalog(Catalog):
             for d in os.listdir(data_path)
             if d.startswith("graph_bucket=")
         )
-        lineage_rel = f"lineage/snap={sid}"
-        stamp_sid = "snapshot_id" not in lineage.columns
-        (lineage.withColumn("snapshot_id", F.lit(sid).cast("long")) if stamp_sid
-         else lineage).write.mode("errorifexists").parquet(
-            os.path.join(self.root, lineage_rel)
-        )
+        lineage_rel = self._write_lineage(lineage, run_id, sid)
 
         # publish-then-validate (ADVICE r2): the parent is re-read AFTER
         # the data write, the manifest is hard-linked into place, and
@@ -186,13 +182,7 @@ class ParquetSnapshotCatalog(Catalog):
                 # plain path strings, so the reference stays valid) —
                 # but the lineage stamp must track the final sid
                 dst = os.path.join(self._snap_dir(), f"v{sid}.json")
-                if stamp_sid:
-                    lineage_rel = f"lineage/snap={sid}"
-                    lineage.withColumn(
-                        "snapshot_id", F.lit(sid).cast("long")
-                    ).write.mode("errorifexists").parquet(
-                        os.path.join(self.root, lineage_rel)
-                    )
+                lineage_rel = self._write_lineage(lineage, run_id, sid)
             if operation == "overwrite":
                 live = (replace_paths or []) + new_paths
             else:
@@ -232,6 +222,13 @@ class ParquetSnapshotCatalog(Catalog):
             if operation == "overwrite":
                 raise ConcurrentOverwriteError(sid, max(gap))
 
+    def _write_lineage(self, lineage: DataFrame, run_id: str, sid: int) -> str:
+        rel = f"lineage/snap={sid}"
+        stamp_lineage(lineage, run_id, sid).write.mode("errorifexists").parquet(
+            os.path.join(self.root, rel)
+        )
+        return rel
+
     # --- read ----------------------------------------------------------------
     def read_statements(self, snapshot_id: int | None = None) -> DataFrame:
         m = self._manifest_for(snapshot_id)
@@ -245,10 +242,7 @@ class ParquetSnapshotCatalog(Catalog):
     def read_lineage(self) -> DataFrame:
         m = self._manifest_for(None)
         if m is None or not m["lineage_paths"]:
-            return self._empty(
-                "repo string, commit string, parser string, n_files long, "
-                "n_triples long, n_errors long, checksum string"
-            )
+            return self._empty(LINEAGE)
         paths = [os.path.join(self.root, p) for p in m["lineage_paths"]]
         return self.spark.read.parquet(*paths)
 

@@ -98,6 +98,9 @@ def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame
     [compact-forward bound], which is what makes this survive hub skew
     at web scale; id-ordering alone would let one celebrity node
     generate deg² wedges.
+
+    Eager: building the returned DataFrame runs jobs, because the
+    undirected and the oriented edge sets are checkpointed eagerly.
     """
     # r6 (guide §5 caching / §3.3 plan truncation): the canonical edge
     # set feeds THREE consumers (degree agg, both rank joins, the
@@ -161,7 +164,8 @@ def clustering_coefficient(
     c(v) = 2·tri(v) / (deg(v)·(deg(v)−1)), 0 where deg < 2 —
     → (node, udeg, n_tri, lcc).  Reuses the compact-forward triangle
     count and one undirected-degree aggregate; the extra cost over
-    `triangles` is a single node-keyed join."""
+    `triangles` is a single node-keyed join. Eager like `triangles`:
+    building the returned DataFrame runs the checkpoint jobs."""
     und = _undirected(edges, src, dst).localCheckpoint(eager=True)  # r6
     deg = _udeg(und)
     tri = _triangles_from(und, deg)

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tripleforge.schema import CORPUS
@@ -153,7 +153,26 @@ def with_graph_bucket(df: DataFrame, n_buckets: int = N_GRAPH_BUCKETS) -> DataFr
     directory per named graph (10^9 at target scale); bucketing keeps
     partition-pruned reads for a bound graph while capping layout width.
     """
-    return df.withColumn(
-        "graph_bucket", F.pmod(F.xxhash64("graph"), F.lit(n_buckets)).cast("int")
-    )
+    return df.withColumn("graph_bucket", _bucket(F.col("graph"), n_buckets))
+
+
+def _bucket(graph: Column, n_buckets: int) -> Column:
+    """The layout hash: the graph-bucket id of ``graph``."""
+    return F.pmod(F.xxhash64(graph), F.lit(n_buckets)).cast("int")
+
+
+def prune_to_graphs(df: DataFrame, graphs: list[str], n_buckets: int | None) -> DataFrame:
+    """``df`` filtered to the graph buckets of ``graphs`` — a partition
+    filter on the bucketed layout (PartitionFilters in the plan), so the
+    scan reads only those buckets' files. Pass the CATALOG's bucket
+    count, never a guess: a wrong modulus drops rows. Unchanged without
+    ``n_buckets`` or a ``graph_bucket`` column; the caller still filters
+    on ``graph`` itself (a bucket holds many graphs)."""
+    if not n_buckets or "graph_bucket" not in df.columns:
+        return df
+    cond = None
+    for g in graphs:
+        term = F.col("graph_bucket") == _bucket(F.lit(g), n_buckets)
+        cond = term if cond is None else (cond | term)
+    return df.where(cond)
 

@@ -16,16 +16,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tripleforge.schema import STATEMENT_KEY
-
-
-def statement_checksum_col() -> F.Column:
-    return F.xxhash64(*[F.col(c) for c in STATEMENT_KEY], F.col("graph"))
+# BIT_XOR of per-row xxhash64 over the canonical quad key, as hex: the
+# one statement-set checksum of lineage rows and determinism tests
+_CHECKSUM = (
+    "conv(cast(bit_xor(xxhash64(subj, pred, obj, obj_kind, obj_dt, obj_lang, graph))"
+    " as string), 10, 16)"
+)
 
 
 def collect(stmts: DataFrame, errors: DataFrame) -> DataFrame:
-    """→ per-(repo, commit, parser) metrics rows (without run/snapshot
-    ids, which the snapshot commit stamps on)."""
+    """→ per-(repo, commit, parser) metrics rows; the catalog stamps
+    run_id, snapshot_id and committed_at on at commit."""
     s = stmts.groupBy(
         F.col("src_repo").alias("repo"),
         F.col("src_commit").alias("commit"),
@@ -33,9 +34,7 @@ def collect(stmts: DataFrame, errors: DataFrame) -> DataFrame:
     ).agg(
         F.count_distinct("src_path").alias("n_files"),
         F.count(F.lit(1)).alias("n_triples"),
-        F.expr(
-            "conv(cast(bit_xor(xxhash64(subj, pred, obj, obj_kind, obj_dt, obj_lang, graph)) as string), 10, 16)"
-        ).alias("checksum"),
+        F.expr(_CHECKSUM).alias("checksum"),
     )
     e = errors.groupBy(
         F.col("src_repo").alias("repo"),
@@ -54,9 +53,7 @@ def dataset_checksum(stmts: DataFrame) -> str:
     """One order/partitioning-independent checksum for a statement set —
     used by determinism tests (same value at local[2] and local[32])."""
     row = stmts.select(
-        F.expr(
-            "conv(cast(bit_xor(xxhash64(subj, pred, obj, obj_kind, obj_dt, obj_lang, graph)) as string), 10, 16)"
-        ).alias("c"),
+        F.expr(_CHECKSUM).alias("c"),
         F.count(F.lit(1)).alias("n"),
     ).first()
     return f"{row['c']}:{row['n']}"

@@ -10,8 +10,10 @@ Scale notes (the 100 TB story):
 - Key blocks emit **star edges** (every subject → block-min subject),
   never all-pairs: O(n) edges per block instead of O(n²), so a
   million-subject block costs a million edges, not 10^12.
-- Hot keys are salted (A13) and pathological blocks capped (A14). The
-  dropped volume is not reported anywhere yet.
+- Pathological blocks are capped (A14); the dropped volume is not
+  reported anywhere yet. ``candidate_edges`` does not salt its
+  star-edge join: AQE's skew-join split handles hot blocks there.
+  ``salted_join`` is the A13 hot-key join utility, tested on its own.
 - CC iterations ``localCheckpoint()`` each round to truncate lineage —
   else plan depth grows O(iterations) and re-optimization dominates.
 - The final mapping is usually tiny relative to the statement table →

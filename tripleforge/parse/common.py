@@ -121,29 +121,3 @@ def empty_raw_frame() -> pd.DataFrame:
 
 
 RAW_COLS = list(empty_raw_frame().columns)
-
-
-def error_frame(
-    repo: pd.Series | list,
-    path: pd.Series | list,
-    commit: pd.Series | list,
-    parser: str,
-    error: pd.Series | list,
-) -> pd.DataFrame:
-    out = empty_raw_frame()
-    n = len(error)
-    if n == 0:
-        return out
-    frame = pd.DataFrame(
-        {
-            "src_repo": list(repo),
-            "src_path": list(path),
-            "src_commit": list(commit),
-            "error": list(error),
-        }
-    )
-    for c in RAW_COLS:
-        if c not in frame.columns:
-            frame[c] = None
-    frame["parser"] = parser
-    return frame[RAW_COLS]

@@ -27,10 +27,9 @@ from tripleforge import link, lineage as lineage_mod, ops
 from tripleforge.catalog.base import Catalog
 from tripleforge.checkpoint import filter_pending
 from tripleforge.detect import with_format
-from tripleforge.io import N_GRAPH_BUCKETS
 from tripleforge.parse import parse_corpus, split_errors
-from tripleforge.schema import STATEMENT_QUAD_KEY
-from tripleforge.update import observed_count
+from tripleforge.schema import STATEMENT, STATEMENT_QUAD_KEY
+from tripleforge.update import anti_join_live, observed_count, observed_lineage
 
 
 @dataclass
@@ -72,34 +71,20 @@ def compact_links(
     rid = run_id or ("compact-" + uuid.uuid4().hex)
     if catalog.latest_snapshot_id() is None:
         return BuildResult(0, rid, 0, 0)  # empty catalog → no-op
-    # idempotent re-run: an already-committed run_id returns its prior
-    # snapshot without recomputing the closure (and without arming the
-    # observe() counter, which only resolves when a write actually runs)
-    prior = catalog.read_lineage().where(F.col("run_id") == rid).limit(1).collect()
-    if prior:
-        r = prior[0]
-        return BuildResult(int(r["snapshot_id"]), rid, int(r["n_triples"]), 0)
-    live = catalog.read_statements().select(
-        "subj", "pred", "obj", "obj_kind", "obj_dt", "obj_lang", "graph",
-        "src_repo", "src_path", "src_commit",
-    )
-    rewritten = ops.dedup(link_entities(live, cfg))
-    # single-pass commit: the row count rides the snapshot write via
-    # observe(), so compaction reads the live store once (VERDICT r2)
-    obs = Observation()
-    rewritten = rewritten.observe(obs, F.count(F.lit(1)).alias("n"))
+    # an already-committed run_id returns its prior snapshot without
+    # recomputing the closure; a fresh one reports what it committed
+    def committed():
+        return catalog.read_lineage().where(F.col("run_id") == rid).first()
 
-    def lin():
-        return spark.createDataFrame(
-            [("compact", None, None, 0, observed_count(obs), 0, None)],
-            "parser string, repo string, commit string, n_files long, "
-            "n_triples long, n_errors long, checksum string",
-        ).withColumn("run_id", F.lit(rid)).withColumn(
-            "committed_at", F.current_timestamp()
-        )
-
-    sid = catalog.commit_snapshot(rewritten, lin, run_id=rid, operation="overwrite")
-    return BuildResult(sid, rid, observed_count(obs), 0)
+    r = committed()
+    if r is None:
+        live = catalog.read_statements().select(*[f.name for f in STATEMENT.fields])
+        # single-pass commit: the row count rides the snapshot write via
+        # observe(), so compaction reads the live store once (VERDICT r2)
+        rewritten, lin = observed_lineage(ops.dedup(link_entities(live, cfg)), "compact")
+        catalog.commit_snapshot(rewritten, lin, run_id=rid, operation="overwrite")
+        r = committed()
+    return BuildResult(int(r["snapshot_id"]), rid, int(r["n_triples"]), 0)
 
 
 def parse_step(
@@ -177,20 +162,7 @@ def shape_for_commit(
     """
     stmts = stmts.repartition(*[F.col(c) for c in STATEMENT_QUAD_KEY])
     unit_deduped = ops.dedup(stmts, STATEMENT_QUAD_KEY + ["src_repo", "src_commit"])
-    data = ops.dedup(unit_deduped)
-    if catalog.latest_snapshot_id() is not None:
-        from tripleforge.update import (
-            _anti_on_quad_key,
-            restrict_to_buckets,
-            touched_buckets,
-        )
-
-        n_buckets = getattr(catalog, "n_buckets", N_GRAPH_BUCKETS)
-        live = restrict_to_buckets(
-            catalog.read_statements(), touched_buckets(data, n_buckets)
-        )
-        data = _anti_on_quad_key(data, live)
-    return unit_deduped, data
+    return unit_deduped, anti_join_live(catalog, ops.dedup(unit_deduped))
 
 
 def build(
@@ -244,11 +216,7 @@ def build(
     # derived above picks up this cache too.)
     unit_deduped = unit_deduped.persist()
 
-    lin = (
-        lineage_mod.collect(unit_deduped, errors)
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("committed_at", F.current_timestamp())
-    )
+    lin = lineage_mod.collect(unit_deduped, errors)
     totals = (F.sum("n_triples").alias("t"), F.sum("n_errors").alias("e"))
     obs = Observation()
     written = []

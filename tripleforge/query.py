@@ -18,6 +18,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tripleforge.io import prune_to_graphs
+
 
 def _is_var(term: str | None) -> bool:
     return isinstance(term, str) and term.startswith("?")
@@ -70,11 +72,8 @@ def match(
     for col, term in (("subj", s), ("pred", p), ("obj", o), ("graph", g)):
         if term is not None and not _is_var(term):
             df = df.where(F.col(col) == F.lit(term))
-            if col == "graph" and n_buckets and "graph_bucket" in df.columns:
-                df = df.where(
-                    F.col("graph_bucket")
-                    == F.pmod(F.xxhash64(F.lit(term)), F.lit(n_buckets)).cast("int")
-                )
+            if col == "graph":
+                df = prune_to_graphs(df, [term], n_buckets)
     cols = []
     for col, term in (("subj", s), ("pred", p), ("obj", o), ("graph", g)):
         if _is_var(term):
@@ -102,12 +101,7 @@ def _leaf_pairs(
 ) -> DataFrame:
     df = statements.where(F.col("pred") == F.lit(iri))
     if g is not None and not _is_var(g):
-        df = df.where(F.col("graph") == F.lit(g))
-        if n_buckets and "graph_bucket" in df.columns:
-            df = df.where(
-                F.col("graph_bucket")
-                == F.pmod(F.xxhash64(F.lit(g)), F.lit(n_buckets)).cast("int")
-            )
+        df = prune_to_graphs(df.where(F.col("graph") == F.lit(g)), [g], n_buckets)
     cols = [F.col("subj").alias("_ps"), F.col("obj").alias("_po")]
     if _is_var(g):
         # variable GRAPH term (r5): the graph rides as a _pg column so
@@ -244,12 +238,7 @@ def path_pairs(
         df = statements
         gv = _is_var(g)
         if g is not None and not gv:
-            df = df.where(F.col("graph") == F.lit(g))
-            if n_buckets and "graph_bucket" in df.columns:
-                df = df.where(
-                    F.col("graph_bucket")
-                    == F.pmod(F.xxhash64(F.lit(g)), F.lit(n_buckets)).cast("int")
-                )
+            df = prune_to_graphs(df.where(F.col("graph") == F.lit(g)), [g], n_buckets)
         gcol = [F.col("graph").alias("_pg")] if gv else []
         arms = []
         if fwd or not inv:

@@ -47,28 +47,18 @@ def _dataset_view(
     named: list[str],
     n_buckets: int | None = None,
 ) -> DataFrame:
-    from functools import reduce
-
     from pyspark.sql import functions as F
+
+    from tripleforge.io import prune_to_graphs
 
     cols = [col for col in statements.columns if col != "graph_bucket"]
 
     def restrict(graphs: list[str]) -> DataFrame:
         if not graphs:
             return statements.limit(0)
-        df = statements.where(F.col("graph").isin(graphs))
-        if n_buckets and "graph_bucket" in statements.columns:
-            df = df.where(
-                reduce(
-                    lambda a, b: a | b,
-                    [
-                        F.col("graph_bucket")
-                        == F.pmod(F.xxhash64(F.lit(g)), F.lit(n_buckets)).cast("int")
-                        for g in graphs
-                    ],
-                )
-            )
-        return df
+        return prune_to_graphs(
+            statements.where(F.col("graph").isin(graphs)), graphs, n_buckets
+        )
 
     d = restrict(default).withColumn("graph", F.lit(_DATASET_DEFAULT_G))
     return d.select(*cols).unionByName(restrict(named).select(*cols))

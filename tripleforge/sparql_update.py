@@ -491,7 +491,7 @@ def execute_update(
         from tripleforge.sparql import _instantiate, _solutions
 
         store = catalog.read_statements()
-        nb = getattr(catalog, "n_buckets", None)
+        nb = catalog.n_buckets
         if where_dataset is not None:
             store, groups, nb = _apply_dataset(
                 store, groups, where_dataset, nb

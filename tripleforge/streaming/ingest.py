@@ -11,7 +11,7 @@ parse/canon/dedup/commit semantics (D9).
 - D1: file-source stream over the corpus directory (explicit schema).
 - D2/D8: watermark on ingest time bounds state; late rows beyond it are
   dropped by windowed aggs (quantified via ``observe`` counters).
-- D3-D5: tumbling / sliding / session windows over the lineage metrics.
+- D3/D4: tumbling / sliding windows over the ingest metrics.
 - D6: ``dropDuplicatesWithinWatermark`` on (repo, path, commit) makes
   redelivery idempotent.
 - D9: ``foreachBatch`` commits each micro-batch as one catalog snapshot
@@ -73,18 +73,6 @@ def throughput_windows(
         .groupBy(win.alias("w"), F.col("repo"))
         .agg(F.count(F.lit(1)).alias("n_files"))
         .select(F.col("w.start").alias("w_start"), F.col("w.end").alias("w_end"), "repo", "n_files")
-    )
-
-
-def session_windows(
-    stream: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour"
-) -> DataFrame:
-    """D5 — per-repo load sessions (gap-based)."""
-    return (
-        stream.withWatermark("ingest_ts", watermark)
-        .groupBy(F.session_window("ingest_ts", gap).alias("s"), F.col("repo"))
-        .agg(F.count(F.lit(1)).alias("n_files"))
-        .select(F.col("s.start").alias("s_start"), F.col("s.end").alias("s_end"), "repo", "n_files")
     )
 
 
@@ -155,13 +143,10 @@ def incremental_build(
         unit_deduped, data = pipeline.shape_for_commit(
             pipeline.link_step(stmts, cfg), catalog
         )
-        lin = (
-            lineage.collect(unit_deduped, errors)
-            .withColumn("run_id", F.lit(f"stream-{batch_id}"))
-            .withColumn("committed_at", F.current_timestamp())
-        )
         # idempotent per batch_id → replays are no-ops (exactly-once)
-        catalog.commit_snapshot(data, lin, run_id=f"stream-{batch_id}")
+        catalog.commit_snapshot(
+            data, lineage.collect(unit_deduped, errors), run_id=f"stream-{batch_id}"
+        )
 
     writer = (
         stream.writeStream.foreachBatch(commit_batch)

@@ -53,12 +53,6 @@ def fingerprint(col: Column) -> Column:
     return F.md5(norm_text(col))
 
 
-def rolling_fingerprints(col: Column, window: int = 8) -> Column:
-    """Rolling-hash-style fingerprints: md5 of each ``window``-token
-    shingle — the winnowing primitive for partial-overlap detection."""
-    return F.transform(shingles(col, window), lambda s: F.md5(s))
-
-
 # ---------------------------------------------------------------------------
 # Exact deduplication (hash-groupBy)
 # ---------------------------------------------------------------------------
@@ -206,23 +200,6 @@ def jaccard_pairs(
 # ---------------------------------------------------------------------------
 # MinHash + banded LSH (approximate near-dup at scale)
 # ---------------------------------------------------------------------------
-
-
-def minhash_signature(col: Column, n_hashes: int = 32) -> Column:
-    """MinHash signature (array<bigint>) as a single column expression:
-    per hash function i, min over shingles of xxhash64(shingle, salt_i).
-
-    NOTE: higher-order lambdas are interpreted (not codegen) in Spark —
-    fine for ad-hoc column use, but the dedup pipeline uses
-    :func:`minhash_signatures` (explode + codegen hash aggregate)
-    which is ~10× faster at scale."""
-    sh = shingles(col)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(sh, lambda s: F.xxhash64(F.concat(s, F.lit("#"), i.cast("string"))))
-        ),
-    )
 
 
 def _signatures_from_posting(posting: DataFrame, n_hashes: int) -> DataFrame:

@@ -5,21 +5,25 @@ DELETE DATA / WITH <g> ...) against the repository. The columnar
 analog: statement-level mutation batches with graph targeting, each
 committed as a new catalog snapshot.
 
-- insert_data = assign_graph ∘ dedup ∘ append-snapshot
-- delete_data = anti-join the live statement set against the deletion
-  batch on the canonical quad key → overwrite snapshot
+- insert_data = assign_graph ∘ dedup ∘ :func:`anti_join_live` →
+  append snapshot (the build's commit shaping appends the same way)
+- delete_data, modify, clear and compact_store rewrite the live graph
+  buckets they touch → one partition-scoped overwrite
+  (:func:`_overwrite`)
 """
 
 from __future__ import annotations
 
 import uuid
+from collections import Counter
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from tripleforge import ops
 from tripleforge.catalog.base import Catalog
-from tripleforge.io import N_GRAPH_BUCKETS, with_graph_bucket
+from tripleforge.io import with_graph_bucket
 from tripleforge.schema import STATEMENT, STATEMENT_QUAD_KEY
 
 
@@ -60,15 +64,19 @@ def _bucket_of(path: str) -> int | None:
         return None
 
 
-def _keep_paths(catalog, touched: set[int]) -> list[str] | None:
+def _keep_paths(catalog: Catalog, touched: set[int] | None) -> list[str] | None:
     """Live paths a mutation carries over verbatim: every bucket-tagged
-    path outside the touched set. If ANY live path lacks a parseable
-    bucket segment (a pre-bucketing whole-snapshot entry), return None
-    → the caller skips partition pruning entirely and does a full
-    rewrite — excluding only the unparseable path from keep while still
-    bucket-pruning the read would silently drop its untouched rows."""
+    path outside the touched set. None — the caller rewrites everything
+    it reads — when nothing is touched-scoped (``touched`` is None), the
+    catalog is not path-addressed, or ANY live path lacks a parseable
+    bucket segment (a pre-bucketing whole-snapshot entry): excluding
+    only the unparseable path from keep while still bucket-pruning the
+    read would silently drop its untouched rows."""
+    paths = catalog.live_paths()
+    if touched is None or paths is None:
+        return None
     out = []
-    for p in catalog.live_paths():
+    for p in paths:
         b = _bucket_of(p)
         if b is None:
             return None
@@ -99,13 +107,6 @@ def _anti_on_quad_key(left: DataFrame, right: DataFrame) -> DataFrame:
     return left.join(r, cond, "left_anti")
 
 
-def _empty_lineage(spark: SparkSession, op: str, n: int) -> DataFrame:
-    return spark.createDataFrame(
-        [(op, None, None, 0, n, 0, None)],
-        "parser string, repo string, commit string, n_files long, n_triples long, n_errors long, checksum string",
-    )
-
-
 def observed_count(obs: Observation, key: str = "n") -> int:
     """The observed count ``key`` after the action ran; a null sum
     reads as 0. When AQE's empty-relation propagation proves the
@@ -119,16 +120,74 @@ def observed_count(obs: Observation, key: str = "n") -> int:
         return 0
 
 
-def _observed(data: DataFrame, op: str):
+def observed_lineage(data: DataFrame, op: str):
     """Single-pass mutation commit (VERDICT r2): attach an observe()
     counter to the statement plan and hand commit_snapshot a DEFERRED
     lineage factory — the row count rides the data write itself, so
     each mutation scans its touched buckets exactly once instead of
-    count-then-write reading them twice."""
+    count-then-write reading them twice. The one lineage row is
+    labelled with ``op`` as its parser."""
     spark = data.sparkSession
     obs = Observation()
     observed = data.observe(obs, F.count(F.lit(1)).alias("n"))
-    return observed, (lambda: _empty_lineage(spark, op, observed_count(obs)))
+
+    def lineage() -> DataFrame:
+        return spark.createDataFrame(
+            [(None, None, op, 0, observed_count(obs), 0, None)],
+            "repo string, commit string, parser string, n_files long, "
+            "n_triples long, n_errors long, checksum string",
+        )
+
+    return observed, lineage
+
+
+def anti_join_live(catalog: Catalog, batch: DataFrame) -> DataFrame:
+    """The rows of ``batch`` not already live — what makes an append
+    set-semantic across snapshots (re-adding a triple is a no-op, like
+    the reference's triplestore). Shared by INSERT DATA and the build's
+    commit shaping. The anti-join reads only the graph buckets the
+    batch touches (partition pruning): a small append against a 100 TB
+    store scans a bounded slice, never the whole table (VERDICT r1).
+    An empty catalog is told by its snapshot log, with no job."""
+    if catalog.latest_snapshot_id() is None:
+        return batch
+    live = restrict_to_buckets(
+        catalog.read_statements(), touched_buckets(batch, catalog.n_buckets)
+    )
+    return _anti_on_quad_key(batch, live)
+
+
+def _overwrite(
+    catalog: Catalog,
+    touched: set[int] | None,
+    rewrite: Callable[[DataFrame], DataFrame],
+    op: str,
+    run_id: str | None,
+) -> int:
+    """Partition-scoped overwrite, the commit path of every mutation
+    that drops rows: read the live store pruned to the ``touched`` graph
+    buckets (None: all of them), ``rewrite`` it, and commit the result
+    as an overwrite that carries every untouched bucket's data files
+    into the new snapshot verbatim (byte-identical, never re-read — the
+    Iceberg partition-level-overwrite shape; VERDICT r1: a full-table
+    rewrite per small mutation does not survive a 100 TB store).
+    Overwrite-while-reading is safe: snapshot data dirs are immutable
+    (the commit writes a NEW snap=<id> directory; prior files are only
+    dropped from live_paths, never touched)."""
+    live = catalog.read_statements()
+    keep = _keep_paths(catalog, touched)
+    if keep is not None:
+        live = restrict_to_buckets(live, sorted(touched))
+    data, lin = observed_lineage(
+        rewrite(live).select(*[f.name for f in STATEMENT.fields]), op
+    )
+    return catalog.commit_snapshot(
+        data,
+        lin,
+        run_id=run_id or uuid.uuid4().hex,
+        operation="overwrite",
+        replace_paths=keep,
+    )
 
 
 def insert_data(
@@ -137,21 +196,11 @@ def insert_data(
     graph: str | None = None,
     run_id: str | None = None,
 ) -> int:
-    """INSERT DATA [INTO GRAPH <graph>]: dedup against the live store
-    (set semantics — re-adding a triple is a no-op, like the reference's
-    triplestore) and append the remainder as a snapshot.
-
-    The set-semantics anti-join reads only the graph buckets the batch
-    touches (partition pruning) — a small mutation against a 100 TB
-    store scans a bounded slice, never the whole table (VERDICT r1)."""
-    spark = stmts.sparkSession
+    """INSERT DATA [INTO GRAPH <graph>]: dedup the batch, drop what is
+    already live (:func:`anti_join_live`) and append the remainder as a
+    snapshot."""
     batch = ops.dedup(ops.assign_graph(_conform(stmts), override=graph))
-    live = catalog.read_statements()
-    if "subj" in live.columns and not live.isEmpty():
-        n_buckets = getattr(catalog, "n_buckets", N_GRAPH_BUCKETS)
-        live = restrict_to_buckets(live, touched_buckets(batch, n_buckets))
-        batch = _anti_on_quad_key(batch, live)
-    batch, lin = _observed(batch, "insert_data")
+    batch, lin = observed_lineage(anti_join_live(catalog, batch), "insert_data")
     return catalog.commit_snapshot(
         batch, lin, run_id=run_id or uuid.uuid4().hex, operation="append"
     )
@@ -172,38 +221,26 @@ def modify(
     present (insert happens after delete)."""
     if deletes is None and inserts is None:
         raise ValueError("modify() needs deletes and/or inserts")
-    spark = (deletes if deletes is not None else inserts).sparkSession
-    live = catalog.read_statements()
-    n_buckets = getattr(catalog, "n_buckets", N_GRAPH_BUCKETS)
     probe = touched is None
     touched = set() if probe else set(touched)
     if deletes is not None:
         deletes = _conform(deletes)
         if probe:
-            touched |= set(touched_buckets(deletes, n_buckets))
+            touched |= set(touched_buckets(deletes, catalog.n_buckets))
     if inserts is not None:
         inserts = ops.dedup(_conform(inserts))
         if probe:
-            touched |= set(touched_buckets(inserts, n_buckets))
-    keep_paths = None
-    if hasattr(catalog, "live_paths") and "graph_bucket" in live.columns:
-        keep_paths = _keep_paths(catalog, touched)
-        if keep_paths is not None:
-            live = restrict_to_buckets(live, sorted(touched))
-    remaining = (
-        _anti_on_quad_key(live, deletes) if deletes is not None else live
-    ).select(*[f.name for f in STATEMENT.fields])
-    data = remaining
-    if inserts is not None:
-        data = data.unionByName(_anti_on_quad_key(inserts, remaining))
-    data, lin = _observed(data, "modify")
-    return catalog.commit_snapshot(
-        data,
-        lin,
-        run_id=run_id or uuid.uuid4().hex,
-        operation="overwrite",
-        replace_paths=keep_paths,
-    )
+            touched |= set(touched_buckets(inserts, catalog.n_buckets))
+
+    def rewrite(live: DataFrame) -> DataFrame:
+        remaining = (
+            _anti_on_quad_key(live, deletes) if deletes is not None else live
+        ).select(*[f.name for f in STATEMENT.fields])
+        if inserts is None:
+            return remaining
+        return remaining.unionByName(_anti_on_quad_key(inserts, remaining))
+
+    return _overwrite(catalog, touched, rewrite, "modify", run_id)
 
 
 def clear(
@@ -216,36 +253,19 @@ def clear(
     graph (``which="graph"``), the default graph (``"default"``), all
     named graphs (``"named"``), or everything (``"all"``). GRAPH and
     DEFAULT forms are partition-scoped (only the one bucket holding the
-    target graph is rewritten)."""
-    spark = catalog.read_statements().sparkSession
-    live = catalog.read_statements()
+    target graph is rewritten); named graphs span all buckets."""
     if which == "all":
-        data = live.limit(0).select(*[f.name for f in STATEMENT.fields])
-        lin = _empty_lineage(spark, "clear", 0)
-        return catalog.commit_snapshot(
-            data, lin, run_id=run_id or uuid.uuid4().hex,
-            operation="overwrite", replace_paths=[],
-        )
-    n_buckets = getattr(catalog, "n_buckets", N_GRAPH_BUCKETS)
-    if which == "named":
-        cond = F.col("graph").isNotNull()
-        keep_paths = None  # named graphs span all buckets → full rewrite
+        cond, touched = F.lit(True), None
+    elif which == "named":
+        cond, touched = F.col("graph").isNotNull(), None
     else:
         target = graph if which == "graph" else None
         cond = F.col("graph").eqNullSafe(F.lit(target))
-        probe = spark.createDataFrame([(target,)], "graph string")
-        touched = touched_buckets(probe, n_buckets)
-        keep_paths = None
-        if hasattr(catalog, "live_paths") and "graph_bucket" in live.columns:
-            keep_paths = _keep_paths(catalog, set(touched))
-            if keep_paths is not None:
-                live = restrict_to_buckets(live, touched)
-    remaining = live.where(~cond).select(*[f.name for f in STATEMENT.fields])
-    remaining, lin = _observed(remaining, "clear")
-    return catalog.commit_snapshot(
-        remaining, lin, run_id=run_id or uuid.uuid4().hex,
-        operation="overwrite", replace_paths=keep_paths,
-    )
+        probe = catalog.read_statements().sparkSession.createDataFrame(
+            [(target,)], "graph string"
+        )
+        touched = set(touched_buckets(probe, catalog.n_buckets))
+    return _overwrite(catalog, touched, lambda live: live.where(~cond), "clear", run_id)
 
 
 def graph_op(
@@ -269,10 +289,8 @@ def graph_op(
     live = catalog.read_statements()
     # the touched graphs are the two constants — compute their buckets
     # from a probe row (no live scan) and prune every read to them
-    spark = live.sparkSession
-    n_buckets = getattr(catalog, "n_buckets", N_GRAPH_BUCKETS)
-    probe = spark.createDataFrame([(src,), (dst,)], "graph string")
-    buckets = set(touched_buckets(probe, n_buckets))
+    probe = live.sparkSession.createDataFrame([(src,), (dst,)], "graph string")
+    buckets = set(touched_buckets(probe, catalog.n_buckets))
     live = restrict_to_buckets(live, sorted(buckets))
     src_rows = live.where(F.col("graph").eqNullSafe(F.lit(src)))
     inserts = src_rows.withColumn("graph", F.lit(dst))
@@ -291,38 +309,15 @@ def delete_data(
     graph: str | None = None,
     run_id: str | None = None,
 ) -> int:
-    """DELETE DATA [FROM GRAPH <graph>]: partition-scoped overwrite —
-    only the graph buckets the deletion batch touches are read and
-    rewritten; every untouched bucket's data files are carried into the
-    new snapshot verbatim (byte-identical, never re-read — the Iceberg
-    partition-level-overwrite shape; VERDICT r1: a full-table rewrite
-    per small mutation does not survive a 100 TB store).
-    """
-    spark = stmts.sparkSession
+    """DELETE DATA [FROM GRAPH <graph>]: a partition-scoped overwrite
+    (:func:`_overwrite`) — only the graph buckets the deletion batch
+    touches are read and rewritten."""
     batch = ops.assign_graph(_conform(stmts), override=graph).select(
         *STATEMENT_QUAD_KEY
     )
-    live = catalog.read_statements()
-    n_buckets = getattr(catalog, "n_buckets", N_GRAPH_BUCKETS)
-    touched = touched_buckets(batch, n_buckets)
-    keep_paths = None
-    if hasattr(catalog, "live_paths") and "graph_bucket" in live.columns:
-        keep_paths = _keep_paths(catalog, set(touched))
-        if keep_paths is not None:
-            live = restrict_to_buckets(live, touched)
-    remaining = _anti_on_quad_key(live, batch).select(
-        *[f.name for f in STATEMENT.fields]
-    )
-    # overwrite-while-reading is safe: snapshot data dirs are immutable
-    # (the commit writes a NEW snap=<id> directory; prior files are only
-    # dropped from live_paths, never touched)
-    remaining, lin = _observed(remaining, "delete_data")
-    return catalog.commit_snapshot(
-        remaining,
-        lin,
-        run_id=run_id or uuid.uuid4().hex,
-        operation="overwrite",
-        replace_paths=keep_paths,
+    touched = set(touched_buckets(batch, catalog.n_buckets))
+    return _overwrite(
+        catalog, touched, lambda live: _anti_on_quad_key(live, batch), "delete_data", run_id
     )
 
 
@@ -333,43 +328,19 @@ def compact_store(
     buckets whose live set spans ≥ ``min_dirs`` snapshot directories
     are read once and rewritten into a single new consolidated
     directory; every other bucket's files carry into the new snapshot
-    verbatim (partition-scoped overwrite — same shape as mutations).
+    verbatim (partition-scoped overwrite — same shape as mutations; a
+    pre-bucketing manifest can't be scoped and is rewritten whole).
     Returns the new snapshot id, or None when nothing needs compacting.
 
     At 100 TB this is the antidote to append-heavy ingestion: N small
     appends leave a bucket's rows scattered over N directories, and a
     bound-graph read opens N files; compaction restores one-dir-per-
     bucket without touching cold buckets."""
-    paths = catalog.live_paths() if hasattr(catalog, "live_paths") else []
+    paths = catalog.live_paths()
     if not paths:
         return None
-    from collections import Counter
-
-    cnt: Counter = Counter()
-    legacy = False
-    for p in paths:
-        b = _bucket_of(p)
-        if b is None:
-            legacy = True
-        else:
-            cnt[b] += 1
-    live = catalog.read_statements()
-    if legacy:
-        # pre-bucketing manifests can't be partition-scoped → full rewrite
-        keep: list[str] | None = None
-        data = live
-    else:
-        touched = sorted(b for b, n in cnt.items() if n >= min_dirs)
-        if not touched:
-            return None
-        keep = _keep_paths(catalog, set(touched))
-        data = restrict_to_buckets(live, touched)
-    data = data.select(*[f.name for f in STATEMENT.fields])
-    data, lin = _observed(data, "compact_store")
-    return catalog.commit_snapshot(
-        data,
-        lin,
-        run_id=run_id or uuid.uuid4().hex,
-        operation="overwrite",
-        replace_paths=keep,
-    )
+    cnt = Counter(_bucket_of(p) for p in paths)
+    touched = {b for b, n in cnt.items() if b is not None and n >= min_dirs}
+    if not touched and None not in cnt:
+        return None
+    return _overwrite(catalog, touched, lambda live: live, "compact_store", run_id)
