@@ -122,3 +122,61 @@ def test_image_features_grayscale_alpha_ignores_alpha():
     # features depend on pixel content, not transparency
     assert np.allclose(f1, f2)
     assert np.allclose(f1, 100 / 255.0)
+
+
+@pytest.mark.parametrize(
+    "where, expected",
+    [
+        pytest.param(
+            "?s <urn:p:age> ?v . OPTIONAL { ?s <urn:p:flag> ?f } "
+            'BIND(IF(BOUND(?f), "y", "n") AS ?n)',
+            {("urn:a", "n"), ("urn:b", "n")},
+            id="group-optional",
+        ),
+        pytest.param(
+            '?s <urn:p:age> ?v . BIND("n" AS ?n) MINUS { ?s <urn:p:age> ?w '
+            "OPTIONAL { ?s <urn:p:flag> ?f } FILTER(BOUND(?f)) }",
+            {("urn:a", "n"), ("urn:b", "n")},
+            id="optional-in-minus",
+        ),
+        pytest.param(
+            '?s <urn:p:age> ?v . BIND("n" AS ?n) '
+            'FILTER NOT EXISTS { ?s <urn:p:flag> "x" }',
+            {("urn:a", "n"), ("urn:b", "n")},
+            id="filter-not-exists",
+        ),
+        pytest.param(
+            '?s <urn:p:age> ?v . BIND("n" AS ?n) MINUS { '
+            '{ ?s <urn:p:flag> "x" } UNION { ?s <urn:p:other> ?z } }',
+            {("urn:a", "n"), ("urn:b", "n")},
+            id="union-in-minus",
+        ),
+        pytest.param(
+            "?s <urn:p:age> ?v . { SELECT ?s ?n WHERE { ?s <urn:p:age> ?w "
+            "OPTIONAL { ?s <urn:p:flag> ?f } "
+            'BIND(IF(BOUND(?f), "y", "n") AS ?n) } }',
+            {("urn:a", "n"), ("urn:b", "n")},
+            id="subquery",
+        ),
+    ],
+)
+def test_with_scopes_every_block_in_update_where(spark, cat_root, where, expected):
+    """WITH <g1> scopes every default-graph pattern of the WHERE clause,
+    in every block kind. The flag triple the blocks look for lives only
+    in g2, so both g1 subjects match with ?n = "n"; had a block escaped
+    the scoping, urn:a would be dropped or bound to "y"."""
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    _seed(spark, cat)
+    sparql.execute_update(
+        spark, cat,
+        f"WITH <urn:g1> INSERT {{ ?s <urn:p:hit> ?n }} WHERE {{ {where} }}",
+        run_id="w1",
+    )
+    hits = {
+        (r.subj, r.obj)
+        for r in cat.read_statements()
+        .where("pred = 'urn:p:hit' AND graph = 'urn:g1'")
+        .select("subj", "obj")
+        .collect()
+    }
+    assert hits == expected

@@ -182,3 +182,117 @@ def test_write_results_xml(bindings, tmp_path):
 
     root = ET.parse(path).getroot()
     assert root.tag.endswith("sparql")
+
+
+_EX = "http://ex.org/"
+
+
+@pytest.fixture(scope="module")
+def export_frames(spark):
+    """A small statement table (named + default graph, a language-tagged
+    literal needing escapes, a typed literal, rdf:type) and a bindings
+    table (a quote, comma and tab to escape, a null, a number)."""
+    stmts = spark.createDataFrame(
+        [
+            (_EX + "a", _EX + "name", 'Al "A" & <b>', "literal", None, "en",
+             _EX + "g1"),
+            (_EX + "a", _EX + "knows", _EX + "b", "iri", None, None, _EX + "g1"),
+            (_EX + "b", "http://www.w3.org/1999/02/22-rdf-syntax-ns#type",
+             _EX + "Person", "iri", None, None, None),
+            (_EX + "b", _EX + "age", "42", "literal",
+             "http://www.w3.org/2001/XMLSchema#integer", None, None),
+        ],
+        SCHEMA,
+    )
+    bindings = spark.createDataFrame(
+        [(_EX + "a", 'say "hi",\tok', 1), (_EX + "b", None, 2)],
+        "s string, label string, n bigint",
+    )
+    return stmts, bindings
+
+
+_EXACT = {
+    "csv": (
+        's,label,n\n'
+        'http://ex.org/a,"say ""hi"",\tok",1\n'
+        'http://ex.org/b,,2\n'
+    ),
+    "tsv": (
+        '?s\t?label\t?n\n'
+        '<http://ex.org/a>\t"say \\"hi\\",\\tok"\t1\n'
+        '<http://ex.org/b>\t\t2\n'
+    ),
+    "ttl": (
+        '<http://ex.org/a> <http://ex.org/knows> <http://ex.org/b> ;\n'
+        '    <http://ex.org/name> "Al \\"A\\" & <b>"@en .\n'
+        '<http://ex.org/b> <http://ex.org/age> "42"^^<http://www.w3.org/2001/XMLSchema#integer> ;\n'
+        '    a <http://ex.org/Person> .\n'
+    ),
+    "trig": (
+        '<http://ex.org/b> <http://ex.org/age> "42"^^<http://www.w3.org/2001/XMLSchema#integer> ;\n'
+        '    a <http://ex.org/Person> .\n'
+        'GRAPH <http://ex.org/g1> {\n'
+        '<http://ex.org/a> <http://ex.org/knows> <http://ex.org/b> ;\n'
+        '    <http://ex.org/name> "Al \\"A\\" & <b>"@en .\n'
+        '}\n'
+    ),
+    "jsonld-rdf": (
+        '[\n'
+        '{"@id": "http://ex.org/b", "@type": ["http://ex.org/Person"], "http://ex.org/age": [{"@value":"42","@type":"http://www.w3.org/2001/XMLSchema#integer"}]},\n'
+        '{"@id": "http://ex.org/g1", "@graph": [{"@id": "http://ex.org/a", "http://ex.org/knows": [{"@id":"http://ex.org/b"}], "http://ex.org/name": [{"@value":"Al \\"A\\" & <b>","@language":"en"}]}]}\n'
+        ']\n'
+    ),
+    "trix": (
+        '<?xml version="1.0" encoding="utf-8"?>\n'
+        '<TriX xmlns="http://www.w3.org/2004/03/trix/trix-1/">\n'
+        '  <graph>\n'
+        '    <uri>http://ex.org/g1</uri>\n'
+        '    <triple><uri>http://ex.org/a</uri><uri>http://ex.org/knows</uri><uri>http://ex.org/b</uri></triple>\n'
+        '    <triple><uri>http://ex.org/a</uri><uri>http://ex.org/name</uri><plainLiteral xml:lang="en">Al "A" &amp; &lt;b&gt;</plainLiteral></triple>\n'
+        '  </graph>\n'
+        '  <graph>\n'
+        '    <triple><uri>http://ex.org/b</uri><uri>http://ex.org/age</uri><typedLiteral datatype="http://www.w3.org/2001/XMLSchema#integer">42</typedLiteral></triple>\n'
+        '    <triple><uri>http://ex.org/b</uri><uri>http://www.w3.org/1999/02/22-rdf-syntax-ns#type</uri><uri>http://ex.org/Person</uri></triple>\n'
+        '  </graph>\n'
+        '</TriX>\n'
+    ),
+    "rdfxml": (
+        '<?xml version="1.0" encoding="utf-8"?>\n'
+        '<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#">\n'
+        '  <rdf:Description rdf:about="http://ex.org/a">\n'
+        '    <n:knows xmlns:n="http://ex.org/" rdf:resource="http://ex.org/b"/>\n'
+        '    <n:name xmlns:n="http://ex.org/" xml:lang="en">Al "A" &amp; &lt;b&gt;</n:name>\n'
+        '  </rdf:Description>\n'
+        '  <rdf:Description rdf:about="http://ex.org/b">\n'
+        '    <n:age xmlns:n="http://ex.org/" rdf:datatype="http://www.w3.org/2001/XMLSchema#integer">42</n:age>\n'
+        '    <n:type xmlns:n="http://www.w3.org/1999/02/22-rdf-syntax-ns#" rdf:resource="http://ex.org/Person"/>\n'
+        '  </rdf:Description>\n'
+        '</rdf:RDF>\n'
+    ),
+    "ttl-prefixed": (
+        '@prefix ex: <http://ex.org/> .\n'
+        '\n'
+        'ex:a ex:knows ex:b ;\n'
+        '    ex:name "Al \\"A\\" & <b>"@en .\n'
+        'ex:b a ex:Person ;\n'
+        '    ex:age "42"^^<http://www.w3.org/2001/XMLSchema#integer> .\n'
+    ),
+}
+
+
+@pytest.mark.parametrize("fmt", sorted(_EXACT))
+def test_single_file_export_text_is_pinned(export_frames, tmp_path, fmt):
+    """Every single-file writer assembles its document through the one
+    sink (io.write_single_file): the exact bytes are pinned per format,
+    and no temp directory is left beside the file."""
+    from tripleforge.turtle import write_turtle
+
+    stmts, bindings = export_frames
+    path = str(tmp_path / "out")
+    if fmt == "ttl-prefixed":
+        write_turtle(stmts, path, prefixes={"ex": _EX})
+    else:
+        results.write_results(bindings if fmt in ("csv", "tsv") else stmts, path, fmt)
+    with open(path, encoding="utf-8", newline="") as fh:
+        assert fh.read() == _EXACT[fmt]
+    assert os.listdir(tmp_path) == ["out"]

@@ -154,3 +154,76 @@ def test_dataset_with_subquery(df):
     rows = out.collect()
     assert sorted(r["s"] for r in rows) == ["urn:a", "urn:b"]
     assert all(r["n"] == 2 for r in rows)  # counts only g1+g2 rows
+
+
+@pytest.fixture(scope="module")
+def blocks_df(spark):
+    # the default graph is <urn:g1>; every block's matching triple sits
+    # only in <urn:g2>, so a block that escaped the rewrite would see it
+    rows = [
+        ("urn:a", "urn:p", "1", "literal", None, None, "urn:g1"),
+        ("urn:b", "urn:p", "2", "literal", None, None, "urn:g1"),
+        ("urn:a", "urn:q", "x", "literal", None, None, "urn:g2"),
+    ]
+    return spark.createDataFrame(rows, SCHEMA)
+
+
+@pytest.mark.parametrize(
+    "query, expected",
+    [
+        pytest.param(
+            "SELECT ?s ?f FROM <urn:g1> WHERE { "
+            "?s <urn:p> ?o OPTIONAL { ?s <urn:q> ?f } }",
+            {("urn:a", None), ("urn:b", None)},
+            id="group-optional",
+        ),
+        pytest.param(
+            "SELECT ?s ?f FROM <urn:g1> WHERE { ?s <urn:p> ?o "
+            "OPTIONAL { ?s <urn:p> ?w OPTIONAL { ?s <urn:q> ?f } } }",
+            {("urn:a", None), ("urn:b", None)},
+            id="optional-in-optional",
+        ),
+        pytest.param(
+            "SELECT ?s FROM <urn:g1> WHERE { ?s <urn:p> ?o MINUS { "
+            "?s <urn:p> ?w OPTIONAL { ?s <urn:q> ?f } FILTER(BOUND(?f)) } }",
+            {("urn:a",), ("urn:b",)},
+            id="optional-in-minus",
+        ),
+        pytest.param(
+            "SELECT ?s FROM <urn:g1> WHERE { "
+            "?s <urn:p> ?o FILTER NOT EXISTS { ?s <urn:q> ?f } }",
+            {("urn:a",), ("urn:b",)},
+            id="filter-not-exists",
+        ),
+        pytest.param(
+            "SELECT ?s FROM <urn:g1> WHERE { ?s <urn:p> ?o MINUS { "
+            "{ ?s <urn:q> ?f } UNION { ?s <urn:r> ?f } } }",
+            {("urn:a",), ("urn:b",)},
+            id="union-in-minus",
+        ),
+        pytest.param(
+            "SELECT ?s ?g FROM <urn:g1> FROM NAMED <urn:g2> WHERE { "
+            "?s <urn:p> ?o OPTIONAL { GRAPH ?g { ?s ?pp ?f } } }",
+            {("urn:a", "urn:g2"), ("urn:b", None)},
+            id="graph-var-in-optional",
+        ),
+        pytest.param(
+            "SELECT ?s FROM <urn:g1> FROM NAMED <urn:g2> WHERE { "
+            "?s <urn:p> ?o MINUS { GRAPH ?g { ?s <urn:p> ?w } } }",
+            {("urn:a",), ("urn:b",)},
+            id="graph-var-in-minus",
+        ),
+        pytest.param(
+            "SELECT ?s FROM <urn:g1> FROM NAMED <urn:g2> WHERE { "
+            "?s <urn:p> ?o FILTER EXISTS { GRAPH ?g { ?s ?pp ?f } } }",
+            {("urn:a",)},
+            id="graph-var-in-exists",
+        ),
+    ],
+)
+def test_dataset_rewrite_reaches_every_block(blocks_df, query, expected):
+    """FROM scopes, and FROM NAMED restricts GRAPH ?var in, every block
+    kind of the WHERE clause: the default-graph marker never binds a
+    graph variable, and no block sees a graph outside the dataset."""
+    out = sparql.select(blocks_df, query)
+    assert {tuple(r) for r in out.collect()} == expected

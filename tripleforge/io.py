@@ -9,7 +9,9 @@ here; the Iceberg implementation is a config switch on a real cluster.
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -144,6 +146,40 @@ def write_ntriples(
     """Serialize a statement DataFrame to N-Triples (or N-Quads with
     ``quads=True``) text files — the public CONSTRUCT-result export."""
     to_ntriples_lines(df, quads=quads).write.mode(mode).text(path)
+
+
+def write_single_file(
+    lines: DataFrame,
+    path: str,
+    head: str = "",
+    tail: str = "",
+    sep: str | None = None,
+    fmt: str = "text",
+    **options,
+) -> None:
+    """The writers' ``single_file=True`` sink: ``lines`` coalesced to
+    one part, written by Spark's ``fmt`` writer to a temp dir, then
+    assembled into one plain file at ``path`` as head + part + tail.
+    With ``sep`` the part's non-empty lines are joined by it instead of
+    copied verbatim. CLI scale only — at corpus scale the writers
+    export distributed (``single_file=False``)."""
+    tmp = path + ".__spark_tmp__"
+    lines.coalesce(1).write.mode("overwrite").options(**options).format(fmt).save(tmp)
+    with open(path, "w", encoding="utf-8") as out:
+        out.write(head)
+        first = True
+        for part in sorted(glob.glob(os.path.join(tmp, "part-*"))):
+            with open(part, encoding="utf-8") as fh:
+                if sep is None:
+                    shutil.copyfileobj(fh, out)
+                    continue
+                for line in fh:
+                    line = line.rstrip("\n")
+                    if line:
+                        out.write(line if first else sep + line)
+                        first = False
+        out.write(tail)
+    shutil.rmtree(tmp)
 
 
 def with_graph_bucket(df: DataFrame, n_buckets: int = N_GRAPH_BUCKETS) -> DataFrame:

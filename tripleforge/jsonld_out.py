@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tripleforge.io import _RDF_LANGSTRING, _XSD_STRING
+from tripleforge.io import _RDF_LANGSTRING, _XSD_STRING, write_single_file
 from tripleforge.schema import RDF_TYPE
 
 
@@ -128,23 +128,6 @@ def write_jsonld(
     if not single_file:
         jsonld_lines(df, quads=quads).write.mode("overwrite").text(path)
         return
-    import glob
-    import os
-    import shutil
-
-    tmp = path + "._jsonld_tmp"
-    jsonld_lines(df, quads=quads).coalesce(1).write.mode("overwrite").text(tmp)
-    parts = sorted(glob.glob(os.path.join(tmp, "part-*")))
-    with open(path, "w", encoding="utf-8") as out:
-        out.write("[\n")
-        first = True
-        for part in parts:
-            with open(part, encoding="utf-8") as fh:
-                for line in fh:
-                    line = line.rstrip("\n")
-                    if not line:
-                        continue
-                    out.write(("" if first else ",\n") + line)
-                    first = False
-        out.write("\n]\n")
-    shutil.rmtree(tmp)
+    write_single_file(
+        jsonld_lines(df, quads=quads), path, head="[\n", tail="\n]\n", sep=",\n"
+    )

@@ -282,7 +282,6 @@ def rewrite(
     stmts: DataFrame,
     mapping: DataFrame,
     broadcast: bool | None = None,
-    preserve_sameas: bool = True,
     broadcast_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Replace subj and IRI-valued obj by the component representative.
@@ -301,13 +300,8 @@ def rewrite(
     ``broadcast_threshold`` rows; above it the rewrite is a plain
     equi-join and AQE picks the physical strategy.
     """
-    if preserve_sameas:
-        sameas = stmts.where(F.col("pred") == OWL_SAMEAS)
-        rest = stmts.where(F.col("pred") != OWL_SAMEAS)
-        return rewrite(
-            rest, mapping, broadcast, preserve_sameas=False,
-            broadcast_threshold=broadcast_threshold,
-        ).unionByName(sameas)
+    sameas = stmts.where(F.col("pred") == OWL_SAMEAS)
+    rest = stmts.where(F.col("pred") != OWL_SAMEAS)
     if broadcast is None:
         broadcast = mapping.count() <= broadcast_threshold
     m = F.broadcast(mapping) if broadcast else mapping
@@ -318,7 +312,7 @@ def rewrite(
         "representative", "_orep"
     )
     out = (
-        stmts.join(ms, "subj", "left")
+        rest.join(ms, "subj", "left")
         .withColumn("subj", F.coalesce("_srep", "subj"))
         .drop("_srep")
     )
@@ -328,4 +322,4 @@ def rewrite(
         .withColumn("obj", F.coalesce("_orep", out.obj))
         .drop("_orep")
     )
-    return out
+    return out.unionByName(sameas)

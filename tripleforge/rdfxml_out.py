@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tripleforge.io import _RDF_LANGSTRING, _XSD_STRING
+from tripleforge.io import _RDF_LANGSTRING, _XSD_STRING, write_single_file
 from tripleforge.schema import RDF_NS
 from tripleforge.trix_out import _xml_escape
 
@@ -152,17 +152,4 @@ def write_rdfxml(df: DataFrame, path: str, single_file: bool = True) -> None:
             "overwrite"
         ).text(path)
         return
-    import glob
-    import os
-    import shutil
-
-    tmp = path + "._rdfxml_tmp"
-    rdfxml_blocks(df).coalesce(1).write.mode("overwrite").text(tmp)
-    parts = sorted(glob.glob(os.path.join(tmp, "part-*")))
-    with open(path, "w", encoding="utf-8") as out:
-        out.write(_HEADER)
-        for part in parts:
-            with open(part, encoding="utf-8") as fh:
-                shutil.copyfileobj(fh, out)
-        out.write(_FOOTER)
-    shutil.rmtree(tmp)
+    write_single_file(rdfxml_blocks(df), path, head=_HEADER, tail=_FOOTER)

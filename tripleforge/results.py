@@ -26,14 +26,14 @@ as bare numeric literals per the TSV spec.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import shutil
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType, StringType
+
+from tripleforge.io import write_single_file
 
 # absolute IRI shape; engine IRIs are RFC-3986-normalized so the scheme
 # is already lowercase, but accept uppercase for foreign data
@@ -81,18 +81,6 @@ def to_tsv_lines(df: DataFrame) -> DataFrame:
     )
 
 
-def _single_file(tmp_dir: str, dest: str, header: str | None = None) -> None:
-    """Collapse a 1-partition Spark text/csv output dir into one file."""
-    parts = sorted(glob.glob(os.path.join(tmp_dir, "part-*")))
-    with open(dest, "w", encoding="utf-8") as out:
-        if header is not None:
-            out.write(header + "\n")
-        for p in parts:
-            with open(p, encoding="utf-8") as fh:
-                shutil.copyfileobj(fh, out)
-    shutil.rmtree(tmp_dir)
-
-
 def write_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
     """W3C SPARQL Results CSV. ``single_file=True`` (CLI default)
     coalesces to one part and collapses to a plain file at ``path``;
@@ -102,10 +90,8 @@ def write_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
     # RFC 4180 doubled-quote convention the W3C CSV format requires
     opts = {"header": True, "emptyValue": "", "escape": '"'}
     if single_file:
-        tmp = path + ".__spark_tmp__"
-        out.coalesce(1).write.options(**opts).mode("overwrite").csv(tmp)
-        # Spark's CSV writer already emitted the header inside the part
-        _single_file(tmp, path, header=None)
+        # Spark's CSV writer emits the header inside the part
+        write_single_file(out, path, fmt="csv", **opts)
     else:
         out.write.options(**opts).csv(path)
 
@@ -115,9 +101,7 @@ def write_tsv(df: DataFrame, path: str, single_file: bool = True) -> None:
     header = "\t".join("?" + c for c in df.columns)
     lines = to_tsv_lines(df)
     if single_file:
-        tmp = path + ".__spark_tmp__"
-        lines.coalesce(1).write.mode("overwrite").text(tmp)
-        _single_file(tmp, path, header=header)
+        write_single_file(lines, path, head=header + "\n")
     else:
         # distributed: prepend the header as its own partition-0 file is
         # not expressible; emit a sidecar header file instead

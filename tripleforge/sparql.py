@@ -94,7 +94,6 @@ from tripleforge.sparql_dataset import (  # noqa: F401 — re-export
     _parse_dataset,
     _dataset_view,
     _dataset_pattern,
-    _dataset_rewrite_group,
     _apply_dataset,
 )
 from tripleforge.sparql_grammar import (  # noqa: F401 — re-export
@@ -296,12 +295,10 @@ def _apply_ops(
             # _optional_entry machinery compiles block-scoped ops and
             # outer-variable FILTERs, "outer" now meaning the enclosing
             # block's bindings)
+            # op shape: ("optional", block, bops)
             if statements is None:
                 raise SparqlError("OPTIONAL is not available here")
-            bops = list(op[2]) if len(op) > 2 and op[2] else []
-            gexcl = op[3] if len(op) > 3 else []
-            for v in gexcl:
-                bops.append(("cmp", v, "!=", _DATASET_DEFAULT_G, False))
+            bops = op[2]
             entry = _optional_entry(
                 op[1], bops, statements=statements,
                 allow_cartesian=allow_cartesian, n_buckets=n_buckets,
@@ -349,15 +346,10 @@ def _apply_ops(
             if statements is None:
                 raise SparqlError(f"{op[0].upper()} is not available here")
             # op shapes (r5 adds the block-scoped op list ``bops``):
-            #   ("minus",  block, bops[, gexcl])
-            #   ("exists", block, positive, bops[, gexcl])
+            #   ("minus",  block, bops)
+            #   ("exists", block, positive, bops)
             block = op[1]
-            if op[0] == "minus":
-                bops = op[2] if len(op) > 2 else []
-                gexcl = op[3] if len(op) > 3 else []
-            else:
-                bops = op[3] if len(op) > 3 else []
-                gexcl = op[4] if len(op) > 4 else []
+            bops = op[2] if op[0] == "minus" else op[3]
             # graph vars inherited from an enclosing GRAPH ?g node are
             # per-name restrictions, NOT block bindings (§18.3 attaches
             # the name AFTER the block evaluates) — extracted here so
@@ -376,15 +368,6 @@ def _apply_ops(
                 allow_cartesian=allow_cartesian, n_buckets=n_buckets,
                 certain={v for pt in block for v in pt.variables},
             )
-            # dataset-view evaluation appends the block's graph vars as
-            # a trailing element: exclude marker-relabelled default rows
-            # from their bindings (GRAPH ?var ranges over NAMED graphs)
-            if gexcl:
-                from pyspark.sql import functions as F
-
-                for v in gexcl:
-                    if v in sub.columns:
-                        sub = sub.where(F.col(v) != _DATASET_DEFAULT_G)
             shared = [
                 v for v in sub.columns if v in sol.columns and "__" not in v
             ]
@@ -455,7 +438,7 @@ def _group_all_vars(grp: tuple) -> set[str]:
         elif op[0] == "optional":
             for pt in op[1]:
                 out |= pt.variables
-            for o in op[2] if len(op) > 2 and op[2] else []:
+            for o in op[2]:
                 if o[0] == "bind":
                     out.add(o[1])
         elif op[0] == "graphdom" and op[1].startswith("?"):
@@ -587,7 +570,7 @@ def _optional_entry(
             pre.append(op)
             for pt in op[1]:
                 local |= pt.variables
-            for o in op[2] if len(op) > 2 and op[2] else []:
+            for o in op[2]:
                 if o[0] == "bind":
                     local.add(o[1])
         elif op[0] == "union":

@@ -1,8 +1,12 @@
-"""SPARQL 1.1 dataset clauses (§13.2 FROM / FROM NAMED) — split out of
-sparql.py in r4 (VERDICT r3 #6). The dataset view relabels the merged
-default graph with a reserved marker; pattern/op rewrites keep GRAPH
-?var bindings restricted to named graphs (incl. vars inherited into
-MINUS/EXISTS blocks — ADVICE r3).
+"""SPARQL 1.1 dataset clauses (§13.2 FROM / FROM NAMED, §3.1.3 USING
+and WITH) — split out of sparql.py in r4 (VERDICT r3 #6). The dataset
+view relabels the merged default graph with a reserved marker; the
+pattern rewrite keeps GRAPH ?var bindings restricted to named graphs
+(incl. vars inherited into MINUS/EXISTS blocks — ADVICE r3).
+
+This module owns the one group-pattern walker, :func:`_map_blocks`:
+the dataset rewrite and the update form's ``WITH <g>`` scoping are
+each one call of it, so every block kind is reached by both.
 """
 
 from __future__ import annotations
@@ -72,91 +76,58 @@ def _dataset_pattern(p: Pattern) -> Pattern:
     return p
 
 
-def _dataset_rewrite_group(grp: tuple) -> tuple:
-    """Rewrite one UNION arm for dataset-view evaluation: non-GRAPH
-    patterns match the reserved default marker; GRAPH ?var patterns
-    additionally filter the marker out of the variable's bindings."""
+def _map_blocks(grp: tuple, f) -> tuple:
+    """The one group-pattern walker: ``f(patterns, ops) -> (patterns,
+    ops)`` applied to every block of a ``(patterns, ops,
+    optional_blocks)`` group — the group's own, each group-level
+    OPTIONAL, and the blocks of ``minus``/``exists``/``optional`` ops at
+    any depth; ``union`` arms and ``subquery`` groups recurse as whole
+    groups. WITH <g> and the FROM/USING dataset rewrite are both one
+    call of it."""
     patterns, ops, optional_blocks = grp
-
-    def rewrite_subquery(parsed: tuple) -> tuple:
-        projected, sgroups, smods, sdistinct = parsed
-        return (
-            projected,
-            [_dataset_rewrite_group(g) for g in sgroups],
-            smods,
-            sdistinct,
-        )
-
-    def rewrite_op(op: tuple) -> tuple:
-        # graph vars INSIDE a block need the marker exclusion too
-        # (ADVICE r3: a default-graph triple must not bind GRAPH ?var
-        # and trigger MINUS removal / satisfy EXISTS — §13.3 restricts
-        # GRAPH ?var to named graphs); the exclusion list rides as a
-        # trailing op element applied to the sub-BGP. r5b: blocks nest
-        # (OPTIONAL/MINUS/EXISTS inside each other), so the rewrite
-        # recurses through every block-scoped op list.
-        def block_gvars(block) -> list[str]:
-            return sorted(
-                {p.g[1:] for p in block if p.g is not None and p.g.startswith("?")}
-            )
-
-        if op[0] == "minus":
-            # op shape: ("minus", block, bops[, gexcl])
-            bops = rewrite_bops(op[2]) if len(op) > 2 else []
-            return ("minus", [_dataset_pattern(p) for p in op[1]], bops,
-                    block_gvars(op[1]))
-        if op[0] == "exists":
-            # op shape: ("exists", block, positive, bops[, gexcl])
-            bops = rewrite_bops(op[3]) if len(op) > 3 else []
-            return ("exists", [_dataset_pattern(p) for p in op[1]], op[2],
-                    bops, block_gvars(op[1]))
-        if op[0] == "optional":
-            # op shape (r5b, nested only): ("optional", block, bops[, gexcl])
-            bops = rewrite_bops(op[2]) if len(op) > 2 else []
-            return ("optional", [_dataset_pattern(p) for p in op[1]], bops,
-                    block_gvars(op[1]))
-        if op[0] == "subquery":
-            return ("subquery", rewrite_subquery(op[1]))
-        if op[0] == "union":
-            # r5c: nested union — each arm is a full group, rewritten
-            # exactly like a whole-WHERE union arm (patterns get the
-            # marker, GRAPH ?var exclusions land per arm)
-            return ("union", [_dataset_rewrite_group(a) for a in op[1]])
-        return op
-
-    def rewrite_bops(bops: list[tuple]) -> list[tuple]:
-        return [rewrite_op(o) for o in bops]
-
-    new_patterns = [_dataset_pattern(p) for p in patterns]
-    new_ops: list[tuple] = [rewrite_op(op) for op in ops]
-    new_opts = []
+    patterns, ops = _map_block(patterns, ops, f)
+    opts = []
     for entry in optional_blocks:
-        block, bops = entry if isinstance(entry, tuple) else (entry, None)
-        # graph vars inside the OPTIONAL block get the marker exclusion
-        # as a BLOCK-SCOPED (pre-join) filter: it removes only the
-        # marker-relabelled default-row CANDIDATES from the sub-BGP, so
-        # an unmatched left row still survives null-extended (r4 — this
-        # was a loud rejection while the exclusion could only be
-        # expressed post-join)
-        block_gvars = sorted(
-            {p.g[1:] for p in block if p.g is not None and p.g.startswith("?")}
-        )
-        if bops is not None:
-            bops = rewrite_bops(bops)
-        if block_gvars:
-            bops = list(bops) if bops is not None else []
-            for v in block_gvars:
-                bops.append(("cmp", v, "!=", _DATASET_DEFAULT_G, False))
-        rewritten = [_dataset_pattern(p) for p in block]
-        new_opts.append((rewritten, bops) if bops is not None else rewritten)
-    gvars = {
-        p.g[1:]
-        for p in patterns
-        if p.g is not None and p.g.startswith("?")
-    }
-    for v in sorted(gvars):
-        new_ops.append(("cmp", v, "!=", _DATASET_DEFAULT_G, False))
-    return new_patterns, new_ops, new_opts
+        block, bops = entry if isinstance(entry, tuple) else (entry, [])
+        block, bops = _map_block(block, bops, f)
+        # the grammar's entry shape: a bare block unless ops are scoped
+        opts.append((block, bops) if bops else block)
+    return patterns, ops, opts
+
+
+def _map_block(patterns: list, ops: list[tuple], f) -> tuple[list, list[tuple]]:
+    patterns, ops = f(patterns, ops)
+    out = []
+    for op in ops:
+        if op[0] in ("minus", "optional"):
+            block, bops = _map_block(op[1], op[2], f)
+            op = (op[0], block, bops)
+        elif op[0] == "exists":
+            block, bops = _map_block(op[1], op[3], f)
+            op = ("exists", block, op[2], bops)
+        elif op[0] == "union":
+            op = ("union", [_map_blocks(arm, f) for arm in op[1]])
+        elif op[0] == "subquery":
+            projected, groups, mods, distinct = op[1]
+            op = ("subquery", (
+                projected, [_map_blocks(g, f) for g in groups], mods, distinct
+            ))
+        out.append(op)
+    return patterns, out
+
+
+def _dataset_block(patterns: list, ops: list[tuple]) -> tuple[list, list[tuple]]:
+    """Non-GRAPH patterns match the reserved default marker; each
+    GRAPH ?var of the block gets a marker exclusion in the block's own
+    op list — a block-scoped (pre-join / pre-anti-join) filter, so a
+    default-graph triple never binds GRAPH ?var (§13.3 restricts it to
+    named graphs), never triggers a MINUS removal or satisfies an
+    EXISTS, and an unmatched OPTIONAL left row survives null-extended."""
+    gvars = sorted({p.g[1:] for p in patterns if p.g and p.g.startswith("?")})
+    return (
+        [_dataset_pattern(p) for p in patterns],
+        ops + [("cmp", v, "!=", _DATASET_DEFAULT_G, False) for v in gvars],
+    )
 
 
 def _apply_dataset(
@@ -171,6 +142,6 @@ def _apply_dataset(
     if not dataset or not (dataset[0] or dataset[1]):
         return statements, groups, n_buckets
     view = _dataset_view(statements, dataset[0], dataset[1], n_buckets)
-    return view, [_dataset_rewrite_group(g) for g in groups], None
+    return view, [_map_blocks(g, _dataset_block) for g in groups], None
 
 

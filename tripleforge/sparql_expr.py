@@ -298,12 +298,10 @@ def _ops_need_meta(ops: list[tuple]) -> bool:
         if op[0] == "bind" and _expr_needs_meta(op[2]):
             return True
         # r5b: nested block op shapes carry their own scoped op lists
-        if op[0] in ("minus", "optional") and len(op) > 2 and op[2]:
-            if _ops_need_meta(op[2]):
-                return True
-        if op[0] == "exists" and len(op) > 3 and op[3]:
-            if _ops_need_meta(op[3]):
-                return True
+        if op[0] in ("minus", "optional") and _ops_need_meta(op[2]):
+            return True
+        if op[0] == "exists" and _ops_need_meta(op[3]):
+            return True
     return False
 
 

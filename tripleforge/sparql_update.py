@@ -12,13 +12,14 @@ from __future__ import annotations
 
 import hashlib
 import re
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tripleforge.parse.ttl import TurtleError, _Parser, _term_to_cols
 from tripleforge.query import Pattern
-from tripleforge.sparql_dataset import _apply_dataset, _parse_dataset
+from tripleforge.sparql_dataset import _apply_dataset, _map_blocks, _parse_dataset
 from tripleforge.sparql_expr import _reset_query_clock
 from tripleforge.sparql_grammar import (
     _parse_group_pattern,
@@ -430,62 +431,13 @@ def execute_update(
                 # provides the templates' default graph
                 where_dataset = using
             elif with_graph is not None:
-                # WITH <g> scopes the WHOLE WHERE clause (§3.1.3), so
-                # the graph injection must recurse through every
-                # block-scoped op list — MINUS/EXISTS/OPTIONAL blocks,
-                # nested-UNION arms and subqueries — mirroring
-                # _dataset_rewrite_group's traversal (ADVICE r5: the
-                # shallow rewrite left g=None inside MINUS/EXISTS, so a
-                # `WITH <g> DELETE … WHERE { … MINUS {…} }` matched the
-                # negation against ALL graphs).
-                def inject(pts):
-                    return [
-                        Pattern(s=pt.s, p=pt.p, o=pt.o, g=pt.g or with_graph)
-                        for pt in pts
-                    ]
+                # WITH <g> scopes the WHOLE WHERE clause (§3.1.3):
+                # every default-graph pattern, in every block, gets g
+                def scope(pts, block_ops):
+                    pts = [replace(pt, g=pt.g or with_graph) for pt in pts]
+                    return pts, block_ops
 
-                def inject_op(o):
-                    if o[0] == "minus":
-                        return ("minus", inject(o[1]),
-                                inject_ops(o[2]) if len(o) > 2 else [],
-                                *o[3:])
-                    if o[0] == "exists":
-                        return ("exists", inject(o[1]), o[2],
-                                inject_ops(o[3]) if len(o) > 3 else [],
-                                *o[4:])
-                    if o[0] == "optional":
-                        return ("optional", inject(o[1]),
-                                inject_ops(o[2]) if len(o) > 2 else [],
-                                *o[3:])
-                    if o[0] == "union":
-                        return ("union", [inject_group(a) for a in o[1]])
-                    if o[0] == "subquery":
-                        projected, sgroups, smods, sdistinct = o[1]
-                        return ("subquery", (
-                            projected,
-                            [inject_group(g) for g in sgroups],
-                            smods, sdistinct,
-                        ))
-                    return o
-
-                def inject_ops(ops_):
-                    return [inject_op(o) for o in ops_]
-
-                def inject_group(grp):
-                    gpat, gops, gopts = grp
-                    return (
-                        inject(gpat),
-                        inject_ops(gops),
-                        [
-                            (inject(e[0]),
-                             inject_ops(e[1]) if e[1] is not None else None)
-                            if isinstance(e, tuple)
-                            else inject(e)
-                            for e in gopts
-                        ],
-                    )
-
-                groups = [inject_group(g) for g in groups]
+                groups = [_map_blocks(g, scope) for g in groups]
         # evaluation/construct helpers live in tripleforge.sparql —
         # imported at call time to keep the module DAG acyclic
         from tripleforge.sparql import _instantiate, _solutions

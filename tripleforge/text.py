@@ -289,8 +289,8 @@ def minhash_lsh_pairs(
     Jaccard over the WHOLE corpus made LSH strictly more expensive than
     the exact algorithm it approximates). Shape (reworked for VERDICT r3
     #1 — the r2 'fast' number turned out to be subsidized by a leaked
-    persist() cache shared with jaccard_pairs, measured in
-    tools/ab_share.py): ONE groupBy over the exploded posting computes
+    persist() cache shared with jaccard_pairs, recorded in SCALE.md
+    §12): ONE groupBy over the exploded posting computes
     all n_hashes minima AND ``collect_set`` of the doc's shingle hashes,
     so the expensive scan+shuffle runs exactly once. The per-doc result
     (one row per document) is eagerly checkpointed — lazy blocks only
@@ -425,7 +425,7 @@ def simhash_pairs(
     r = n_bits // n_bands
     # per-doc result is one short row; eager-share it so the token
     # explode + 64-bit-sum aggregate runs once, not once per downstream
-    # stage (profiled 5.4 s → 2.3 s at sf0.1, tools/ab_share.py)
+    # stage (5.4 s → 2.7 s at sf0.1, recorded in SCALE.md §12)
     hashed = _share(simhash_df(df, id_col, text_col, n_bits), eager=True)
     band_structs = [
         F.struct(

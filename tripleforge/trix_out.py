@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tripleforge.io import _RDF_LANGSTRING, _XSD_STRING
+from tripleforge.io import _RDF_LANGSTRING, _XSD_STRING, write_single_file
 
 TRIX_NS = "http://www.w3.org/2004/03/trix/trix-1/"
 _HEADER = '<?xml version="1.0" encoding="utf-8"?>\n<TriX xmlns="%s">\n' % TRIX_NS
@@ -135,17 +135,4 @@ def write_trix(df: DataFrame, path: str, single_file: bool = True) -> None:
             "overwrite"
         ).text(path)
         return
-    import glob
-    import os
-    import shutil
-
-    tmp = path + "._trix_tmp"
-    trix_blocks(df).coalesce(1).write.mode("overwrite").text(tmp)
-    parts = sorted(glob.glob(os.path.join(tmp, "part-*")))
-    with open(path, "w", encoding="utf-8") as out:
-        out.write(_HEADER)
-        for part in parts:
-            with open(part, encoding="utf-8") as fh:
-                shutil.copyfileobj(fh, out)
-        out.write(_FOOTER)
-    shutil.rmtree(tmp)
+    write_single_file(trix_blocks(df), path, head=_HEADER, tail=_FOOTER)

@@ -24,7 +24,12 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tripleforge.io import _RDF_LANGSTRING, _XSD_STRING, _escape_nt_literal
+from tripleforge.io import (
+    _RDF_LANGSTRING,
+    _XSD_STRING,
+    _escape_nt_literal,
+    write_single_file,
+)
 from tripleforge.schema import RDF_TYPE
 
 # conservative PN_LOCAL subset: compaction applies only when the local
@@ -126,21 +131,6 @@ def write_turtle(
             "overwrite"
         ).text(path)
         return
-    import glob
-    import os
-    import shutil
-
-    tmp = path + "._ttl_tmp"
-    turtle_blocks(df, prefixes=prefixes, quads=quads).coalesce(1).write.mode(
-        "overwrite"
-    ).text(tmp)
-    parts = sorted(glob.glob(os.path.join(tmp, "part-*")))
-    with open(path, "w", encoding="utf-8") as out:
-        for pfx, ns in (prefixes or {}).items():
-            out.write(f"@prefix {pfx}: <{ns}> .\n")
-        if prefixes:
-            out.write("\n")
-        for part in parts:
-            with open(part, encoding="utf-8") as fh:
-                shutil.copyfileobj(fh, out)
-    shutil.rmtree(tmp)
+    head = "".join(f"@prefix {p}: <{ns}> .\n" for p, ns in (prefixes or {}).items())
+    blocks = turtle_blocks(df, prefixes=prefixes, quads=quads)
+    write_single_file(blocks, path, head=head + "\n" if prefixes else "")
