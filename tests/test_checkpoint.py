@@ -547,7 +547,7 @@ def test_mutations_are_single_pass(spark, cat_root, monkeypatch):
     lin = {(r["parser"], r["n_triples"]) for r in cat.read_lineage().collect()}
     assert ("insert_data", 2) in lin   # seed batch
     assert ("insert_data", 1) in lin   # one new statement appended
-    assert ("delete_data", 2) in lin   # s2 + s3 remained after the delete
+    assert ("delete_data", 1) in lin   # s2: only s1's path was rewritten
     assert ("clear", 0) in lin         # clear left nothing
 
 
@@ -638,3 +638,124 @@ def test_insert_data_checks_emptiness_without_reading_the_store(spark, cat_root,
     update.insert_data(cat, _one_row(spark, "http://s1"), graph="urn:g", run_id="i1")
     monkeypatch.undo()
     assert cat.read_statements().count() == 1
+
+
+# ---------------------------------------------------------------------------
+# Path-granular DELETE DATA: only the live paths holding a deleted row
+# ---------------------------------------------------------------------------
+def _two_path_bucket(spark, cat_root):
+    """One graph whose bucket holds two live paths: a base insert of s1
+    and s2, then a later insert of s3."""
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    base = spark.createDataFrame(
+        [
+            ("http://s1", "http://p", "http://o", "iri"),
+            ("http://s2", "http://p", "http://o", "iri"),
+        ],
+        "subj string, pred string, obj string, obj_kind string",
+    )
+    update.insert_data(cat, base, graph="urn:g", run_id="base")
+    (base_path,) = cat.live_paths()
+    update.insert_data(cat, _one_row(spark, "http://s3"), graph="urn:g", run_id="later")
+    (later_path,) = [p for p in cat.live_paths() if p != base_path]
+    return cat, base_path, later_path
+
+
+def _file_bytes(cat_root, rel):
+    out = {}
+    for f in glob.glob(os.path.join(cat_root, rel, "*.parquet")):
+        with open(f, "rb") as fh:
+            out[f] = fh.read()
+    return out
+
+
+def _subjects(cat):
+    return {r.subj for r in cat.read_statements().select("subj").collect()}
+
+
+def test_delete_of_a_later_triple_keeps_the_base_path_verbatim(spark, cat_root):
+    cat, base, later = _two_path_bucket(spark, cat_root)
+    blobs = _file_bytes(cat_root, base)
+    assert blobs
+    update.delete_data(cat, _one_row(spark, "http://s3"), graph="urn:g", run_id="d1")
+    assert cat.live_paths() == [base]
+    assert _file_bytes(cat_root, base) == blobs
+    assert _subjects(cat) == {"http://s1", "http://s2"}
+
+
+def test_delete_of_a_base_triple_rewrites_only_the_base_path(spark, cat_root):
+    cat, base, later = _two_path_bucket(spark, cat_root)
+    blobs = _file_bytes(cat_root, later)
+    update.delete_data(cat, _one_row(spark, "http://s1"), graph="urn:g", run_id="d1")
+    live = cat.live_paths()
+    assert later in live and base not in live and len(live) == 2
+    assert _file_bytes(cat_root, later) == blobs
+    assert _subjects(cat) == {"http://s2", "http://s3"}
+    lin = {(r.parser, r.n_triples) for r in cat.read_lineage().collect()}
+    assert ("delete_data", 1) in lin  # the rows of the one rewritten path
+
+
+def test_delete_of_an_absent_triple_writes_no_data_file(spark, cat_root):
+    cat, _, _ = _two_path_bucket(spark, cat_root)
+    before = cat.live_paths()
+    sid = update.delete_data(cat, _one_row(spark, "http://absent"), graph="urn:g", run_id="d1")
+    assert sid == cat.latest_snapshot_id()
+    assert cat.live_paths() == before
+    written = glob.glob(os.path.join(cat_root, f"data/snap={sid}", "**", "*.parquet"), recursive=True)
+    assert written == []
+    assert _subjects(cat) == {"http://s1", "http://s2", "http://s3"}
+
+
+def test_delete_on_a_legacy_manifest_rewrites_only_the_paths_it_hits(spark, cat_root):
+    """A whole-snapshot live path (no bucket segment) is one more path:
+    carried over when it holds no deleted row, rewritten whole when it
+    does."""
+    import json
+
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    rows = spark.createDataFrame(
+        [
+            ("http://s1", "http://p", "http://o", "iri"),
+            ("http://s2", "http://p", "http://o", "iri"),
+        ],
+        "subj string, pred string, obj string, obj_kind string",
+    )
+    update.insert_data(cat, rows, graph="urn:g", run_id="i1")
+    mpath = os.path.join(cat_root, "_snapshots", "v1.json")
+    with open(mpath) as fh:
+        m = json.load(fh)
+    m["live_paths"] = ["data/snap=1"]
+    os.unlink(mpath)
+    with open(mpath, "w") as fh:
+        json.dump(m, fh)
+
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    update.insert_data(cat, _one_row(spark, "http://s3"), graph="urn:g", run_id="i2")
+    update.delete_data(cat, _one_row(spark, "http://s3"), graph="urn:g", run_id="d1")
+    assert cat.live_paths() == ["data/snap=1"]
+    assert _subjects(cat) == {"http://s1", "http://s2"}
+    update.delete_data(cat, _one_row(spark, "http://s1"), graph="urn:g", run_id="d2")
+    assert "data/snap=1" not in cat.live_paths()
+    assert _subjects(cat) == {"http://s2"}
+
+
+def test_path_granular_delete_raises_on_a_race(spark, cat_root):
+    from tripleforge.catalog.parquet_snapshot import ConcurrentOverwriteError
+
+    cat, _, _ = _two_path_bucket(spark, cat_root)
+    orig = cat._reserve_sid
+
+    def racy_reserve(parent):
+        sid = orig(parent)
+        cat._reserve_sid = orig
+        other = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+        update.insert_data(
+            other, _one_row(spark, "http://concurrent"), graph="urn:g", run_id="race"
+        )
+        return sid
+
+    cat._reserve_sid = racy_reserve
+    with pytest.raises(ConcurrentOverwriteError):
+        update.delete_data(cat, _one_row(spark, "http://s3"), graph="urn:g", run_id="d1")
+    final = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    assert _subjects(final) == {"http://s1", "http://s2", "http://s3", "http://concurrent"}

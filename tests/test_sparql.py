@@ -305,6 +305,61 @@ def test_update_canonicalizes_like_the_build_path(spark, cat_root):
     assert rows == [("http://ex.org/n", "http://ex.org/q", "42")]
 
 
+_XSD = "http://www.w3.org/2001/XMLSchema#"
+
+
+@pytest.mark.parametrize(
+    "where, obj, dt",
+    [
+        # expression literals evaluate as doubles, so 1 binds 1.0E0
+        ("?s <urn:p> ?o BIND(1 AS ?n)", "1.0E0", "double"),
+        ("?s <urn:p> ?o BIND(IF(?o = <urn:o>, 1, 0) AS ?n)", "1.0E0", "double"),
+        ("?s <urn:p> ?o BIND(?o = <urn:o> AS ?n)", "true", "boolean"),
+        ("{ SELECT (COUNT(*) AS ?n) WHERE { ?s ?p ?o } }", "1", "integer"),
+    ],
+    ids=["bind", "if", "comparison", "count"],
+)
+def test_update_template_stores_numeric_bindings_as_typed_literals(spark, cat_root, where, obj, dt):
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    sparql.execute_update(spark, cat, "INSERT DATA { <urn:s> <urn:p> <urn:o> }")
+    sparql.execute_update(spark, cat, f"INSERT {{ <urn:x> <urn:q> ?n }} WHERE {{ {where} }}")
+    rows = cat.read_statements().where(F.col("pred") == "urn:q").collect()
+    assert [(r.obj, r.obj_kind, r.obj_dt, r.obj_lang) for r in rows] == [
+        (obj, "literal", _XSD + dt, None)
+    ]
+
+
+@pytest.mark.parametrize(
+    "value, ddl, obj, dt",
+    [
+        (7, "int", "7", "integer"),
+        (-7, "bigint", "-7", "integer"),
+        ("1.50", "decimal(4,2)", "1.5", "decimal"),
+        (1.5, "double", "1.5E0", "double"),
+        (0.25, "float", "2.5E-1", "double"),
+        (float("inf"), "double", "INF", "double"),
+        (float("-inf"), "double", "-INF", "double"),
+        (False, "boolean", "false", "boolean"),
+    ],
+    ids=["int", "bigint", "decimal", "double", "float", "inf", "-inf", "boolean"],
+)
+def test_instantiated_numeric_binding_reads_back_canonical(spark, cat_root, value, ddl, obj, dt):
+    from decimal import Decimal
+
+    from tripleforge import update
+    from tripleforge.canon import canonicalize
+    from tripleforge.sparql import _instantiate
+
+    if ddl.startswith("decimal"):
+        value = Decimal(value)
+    sol = spark.createDataFrame([(value,)], f"n {ddl}")
+    template = [(("iri", "urn:x"), ("iri", "urn:q"), ("var", "n"), None)]
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    update.insert_data(cat, canonicalize(_instantiate(sol, template, "urn:g")))
+    rows = cat.read_statements().collect()
+    assert [(r.obj, r.obj_kind, r.obj_dt) for r in rows] == [(obj, "literal", _XSD + dt)]
+
+
 def test_filter_pending_plain_join_path_matches_broadcast(spark, cat_root):
     """checkpoint.filter_pending above the broadcast threshold (plain
     shuffle anti-join) must produce the same pending set."""

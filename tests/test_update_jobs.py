@@ -1,0 +1,121 @@
+"""Fixed per-call Spark jobs on the serve path: a catalog read, the
+graph-bucket probe of a DATA batch and one INSERT/DELETE DATA stay
+within their job counts, counted per job group."""
+
+from __future__ import annotations
+
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+
+from tripleforge import ops, update
+from tripleforge.catalog import ParquetSnapshotCatalog
+from tripleforge.datagen import CorpusSpec, corpus_df
+from tripleforge.pipeline import BuildConfig, build
+from tripleforge.schema import STATEMENT_QUAD_KEY
+from tripleforge.sparql_update import _data_batch, execute_update, parse_update
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture()
+def served(spark, tmp_path):
+    cat = ParquetSnapshotCatalog(spark, str(tmp_path / "cat"), n_buckets=8)
+    corpus = corpus_df(spark, CorpusSpec(n_repos=2, files_per_repo=2, stmts_per_file=20))
+    build(spark, corpus, cat, BuildConfig(run_id="b", link_entities=False))
+    return cat
+
+
+_TRIPLES = " ".join(f'<http://ex.org/s> <http://ex.org/p{j}> "v{j}" .' for j in range(3))
+
+
+def test_catalog_reads_run_no_job(spark, served):
+    stmts, n = _jobs(spark, served.read_statements)
+    assert n == 0
+    assert stmts.count() > 0
+    lineage, n = _jobs(spark, served.read_lineage)
+    assert n == 0
+    assert lineage.count() > 0
+
+
+def test_data_batch_buckets_run_no_job(spark, served):
+    graphs = " ".join(f"GRAPH <urn:h{i}> {{ {_TRIPLES} }}" for i in range(4))
+    _, _, rows = parse_update(f"INSERT DATA {{ {_TRIPLES} {graphs} }}")
+    batch = _data_batch(spark, rows)
+    touched, n = _jobs(spark, lambda: update.local_buckets(batch, served.n_buckets, "urn:g"))
+    assert n == 0
+    assigned = ops.assign_graph(update._conform(batch), override="urn:g")
+    assert touched == set(update.touched_buckets(assigned, served.n_buckets))
+    assert len(touched) > 1
+
+
+def test_graph_probe_runs_no_job(spark, served):
+    touched, n = _jobs(spark, lambda: update._graph_buckets(["urn:g", None], served.n_buckets))
+    assert n == 0
+    probe = spark.createDataFrame([("urn:g",), (None,)], "graph string")
+    assert touched == set(update.touched_buckets(probe, served.n_buckets))
+
+
+def test_data_updates_stay_within_their_job_counts(spark, served):
+    before = served.read_statements().count()
+    _, n_insert = _jobs(
+        spark, lambda: execute_update(spark, served, f"INSERT DATA {{ GRAPH <urn:g> {{ {_TRIPLES} }} }}")
+    )
+    assert served.read_statements().count() == before + 3
+    _, n_delete = _jobs(
+        spark, lambda: execute_update(spark, served, f"DELETE DATA {{ GRAPH <urn:g> {{ {_TRIPLES} }} }}")
+    )
+    assert served.read_statements().count() == before
+    assert n_insert <= 5
+    assert n_delete <= 7
+
+
+def test_anti_join_ignores_duplicates_on_the_right(spark):
+    """The right side is not de-duplicated: a left-anti (or semi) join's
+    result does not depend on duplicates there, null obj_dt/obj_lang
+    included."""
+    ddl = (
+        "subj string, pred string, obj string, obj_kind string, obj_dt string, "
+        "obj_lang string, graph string"
+    )
+    left = spark.createDataFrame(
+        [
+            ("s1", "p", "o", "iri", None, None, "g"),
+            ("s2", "p", "o", "literal", None, "en", "g"),
+            ("s3", "p", "1", "literal", "xsd:int", None, None),
+            ("s4", "p", "o", "iri", None, None, "g"),
+        ],
+        ddl,
+    )
+    right = spark.createDataFrame(
+        [
+            ("s1", "p", "o", "iri", None, None, "g"),
+            ("s1", "p", "o", "iri", None, None, "g"),
+            ("s3", "p", "1", "literal", "xsd:int", None, None),
+            ("s3", "p", "1", "literal", "xsd:int", None, None),
+            ("s4", "p", "o", "iri", None, None, "other"),
+        ],
+        ddl,
+    )
+    deduped = right.select(*STATEMENT_QUAD_KEY).dropDuplicates()
+    cond = None
+    for c in STATEMENT_QUAD_KEY:
+        term = left[c].eqNullSafe(deduped[c])
+        cond = term if cond is None else cond & term
+    want = sorted(left.join(deduped, cond, "left_anti").collect())
+    got = sorted(update._anti_on_quad_key(left, right).collect())
+    assert got == want
+    assert [r.subj for r in got] == ["s2", "s4"]
+    kept = update._on_quad_key(left, right, "left_semi").orderBy(F.col("subj"))
+    assert [r.subj for r in kept.collect()] == ["s1", "s3"]

@@ -32,12 +32,18 @@ class Catalog(ABC):
     ``schema.LINEAGE`` (:func:`stamp_lineage`), so ``read_lineage`` has
     one shape whatever kind of commit came first.
 
+    Reads are typed: :meth:`read_statements` and :meth:`read_lineage`
+    pass their declared schema, so building the DataFrame runs no
+    schema-inference job (every SPARQL read and update starts with one).
+
     The layout is declared here too: ``n_buckets`` is the graph-bucket
     modulus of the statement layout (read pruning must use the same
     one), and :meth:`live_paths` lists the live data paths of a
     path-addressed catalog, or is None for one that is not (Iceberg),
     in which case mutations cannot carry paths over and rewrite what
-    they read."""
+    they read. A live path's ``key=value`` segments are partition
+    columns of :meth:`read_statements`, so a mutation can read or
+    rewrite single paths."""
 
     n_buckets: int = N_GRAPH_BUCKETS
 
@@ -78,8 +84,9 @@ class Catalog(ABC):
     def latest_snapshot_id(self) -> int | None: ...
 
     def live_paths(self) -> list[str] | None:
-        """Live data paths of the latest snapshot; None when the catalog
-        is not path-addressed."""
+        """Live data paths of the latest snapshot (Hive-style: their
+        ``key=value`` segments are partition values of the rows under
+        them); None when the catalog is not path-addressed."""
         return None
 
     def committed_units(self) -> DataFrame:

@@ -230,21 +230,25 @@ class ParquetSnapshotCatalog(Catalog):
         return rel
 
     # --- read ----------------------------------------------------------------
+    # Both reads pass their schema: an untyped spark.read.parquet runs a
+    # schema-inference job on every call (every SPARQL read and update).
     def read_statements(self, snapshot_id: int | None = None) -> DataFrame:
         m = self._manifest_for(snapshot_id)
         if m is None or not m["live_paths"]:
             return self._empty(with_graph_bucket_schema())
         paths = [os.path.join(self.root, p) for p in m["live_paths"]]
-        return self.spark.read.option(
-            "basePath", os.path.join(self.root)
-        ).parquet(*paths)
+        return (
+            self.spark.read.schema(with_graph_bucket_schema())
+            .option("basePath", self.root)
+            .parquet(*paths)
+        )
 
     def read_lineage(self) -> DataFrame:
         m = self._manifest_for(None)
         if m is None or not m["lineage_paths"]:
             return self._empty(LINEAGE)
         paths = [os.path.join(self.root, p) for p in m["lineage_paths"]]
-        return self.spark.read.parquet(*paths)
+        return self.spark.read.schema(LINEAGE).parquet(*paths)
 
     def _empty(self, schema) -> DataFrame:
         """An empty frame with zero partitions (``createDataFrame([])``

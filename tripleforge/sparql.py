@@ -42,10 +42,11 @@ import hashlib
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import BooleanType, DecimalType, IntegralType, NumericType
 
 from tripleforge.parse.ttl import _TOKEN, _Parser, TurtleError, _term_to_cols
 from tripleforge.query import Pattern, bgp, left_join_optional
-from tripleforge.schema import RDF_TYPE
+from tripleforge.schema import RDF_TYPE, XSD_BOOLEAN, XSD_DECIMAL, XSD_DOUBLE, XSD_INTEGER
 
 
 from tripleforge.sparql_lex import (  # noqa: F401 — re-export
@@ -1267,6 +1268,20 @@ def construct(
     return _instantiate(sol, template, default_graph=None)
 
 
+def _xsd_of(dtype) -> str | None:
+    """The XSD datatype a typed solution column stands for, or None for
+    a string column (a term with its own kind/datatype metadata)."""
+    if isinstance(dtype, BooleanType):
+        return XSD_BOOLEAN
+    if isinstance(dtype, IntegralType):
+        return XSD_INTEGER
+    if isinstance(dtype, DecimalType):
+        return XSD_DECIMAL
+    if isinstance(dtype, NumericType):
+        return XSD_DOUBLE
+    return None
+
+
 def _instantiate(
     sol: DataFrame, template: list[tuple], default_graph: str | None
 ) -> DataFrame:
@@ -1287,12 +1302,27 @@ def _instantiate(
 
     parts = []
     for s, p, o, g in template:
+        # a numeric or boolean binding (BIND, COUNT, IF …) is a typed
+        # literal: its lexical form with the XSD datatype, which the
+        # canonicalizer then brings to canonical form
+        xsd = _xsd_of(sol.schema[o[1]].dataType) if o[0] == "var" and o[1] in bound else None
+        obj = (
+            resolve(o, "object")
+            if xsd is None
+            else F.regexp_replace(F.col(o[1]).cast("string"), "Infinity", "INF")
+        )
         cols = [
             resolve(s, "subject").alias("subj"),
             resolve(p, "predicate").alias("pred"),
-            resolve(o, "object").alias("obj"),
+            obj.alias("obj"),
         ]
-        if o[0] == "var":
+        if xsd is not None:
+            cols += [
+                F.lit("literal").alias("obj_kind"),
+                F.lit(xsd).alias("obj_dt"),
+                F.lit(None).cast("string").alias("obj_lang"),
+            ]
+        elif o[0] == "var":
             v = o[1]
             has_meta = f"{v}__kind" in bound
             cols += [

@@ -14,6 +14,7 @@ import hashlib
 import re
 from dataclasses import replace
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,6 +31,10 @@ from tripleforge.sparql_lex import SparqlError, _Cursor, _kw, _tokenize
 # ---------------------------------------------------------------------------
 # INSERT DATA / DELETE DATA
 # ---------------------------------------------------------------------------
+# the columns of a parse_update statement row
+_DATA_COLUMNS = ["subj", "pred", "obj", "obj_kind", "obj_dt", "obj_lang", "graph"]
+
+
 def parse_update(text: str) -> tuple[str, str | None, list[tuple]]:
     """→ (op ∈ {insert, delete}, WITH graph or None, statement rows).
 
@@ -95,6 +100,17 @@ def parse_update(text: str) -> tuple[str, str | None, list[tuple]]:
     if not rows:
         raise SparqlError("empty data block")
     return op, with_graph, rows
+
+
+def _data_batch(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """:func:`parse_update` rows as a canonical statement batch that stays
+    on the driver: canonicalized in-process (``canon.canonicalize_table``,
+    the one canonicalizer) and handed to Spark as a LocalRelation, so no
+    Python worker runs for it."""
+    from tripleforge.canon import canonicalize_table
+
+    tbl = pa.table([pa.array(col, pa.string()) for col in zip(*rows)], names=_DATA_COLUMNS)
+    return spark.createDataFrame(canonicalize_table(tbl))
 
 
 def _graph_term(c: _Cursor) -> tuple:
@@ -373,25 +389,18 @@ def execute_update(
             raise SparqlError(f"trailing tokens after LOAD: {c.peek()!r}")
         return _exec_load(spark, catalog, source, graph, run_id)
 
-    def as_df(rows):
-        return canonicalize(
-            spark.createDataFrame(
-                rows,
-                "subj string, pred string, obj string, obj_kind string, "
-                "obj_dt string, obj_lang string, graph string",
-            )
-        )
-
     if _kw(t, "INSERT") or _kw(t, "DELETE"):
         op = "insert" if _kw(t, "INSERT") else "delete"
         c.next()
         nxt = c.peek()
         if _kw(nxt, "DATA"):
-            # existing DATA path (TriG-parsed quad block)
+            # the TriG-parsed quad block stays on the driver, and so do
+            # its graph buckets: neither runs a job
             _, _, rows = parse_update(text)
-            df = as_df(rows)
+            df = _data_batch(spark, rows)
+            touched = update_mod.local_buckets(df, catalog.n_buckets, with_graph)
             fn = update_mod.insert_data if op == "insert" else update_mod.delete_data
-            return fn(catalog, df, graph=with_graph, run_id=run_id)
+            return fn(catalog, df, graph=with_graph, run_id=run_id, touched=touched)
         delete_tmpl = insert_tmpl = None
         where_dataset: tuple[list[str], list[str]] | None = None
         if op == "delete" and _kw(nxt, "WHERE"):

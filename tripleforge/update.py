@@ -7,9 +7,15 @@ committed as a new catalog snapshot.
 
 - insert_data = assign_graph ∘ dedup ∘ :func:`anti_join_live` →
   append snapshot (the build's commit shaping appends the same way)
-- delete_data, modify, clear and compact_store rewrite the live graph
-  buckets they touch → one partition-scoped overwrite
-  (:func:`_overwrite`)
+- delete_data rewrites only the live paths holding a deleted row;
+  modify, clear and compact_store rewrite the live paths of the graph
+  buckets they touch → one path-scoped overwrite (:func:`_overwrite`)
+
+A DATA batch parsed on the driver stays there: the caller hands it in
+as a LocalRelation (canonicalized in-process) with its touched buckets
+from :func:`local_buckets`, so neither the bucket probe nor the batch
+itself runs a Python worker, and the one-row lineage of a mutation is
+a LocalRelation too (one task).
 """
 
 from __future__ import annotations
@@ -18,7 +24,8 @@ import uuid
 from collections import Counter
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Observation
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from tripleforge import ops
@@ -41,6 +48,31 @@ def touched_buckets(batch: DataFrame, n_buckets: int) -> list[int]:
     return sorted(r["graph_bucket"] for r in rows)
 
 
+def local_buckets(batch: DataFrame, n_buckets: int, graph: str | None = None) -> set[int]:
+    """:func:`touched_buckets` of a driver-resident batch (a LocalRelation)
+    after graph assignment (``graph``: the INTO/FROM GRAPH override).
+    The projection folds into the LocalRelation on the driver, so the
+    collect runs no job, and the set is taken in Python rather than by a
+    Spark ``distinct()``. Over a distributed batch it would collect
+    every row: use :func:`touched_buckets` there."""
+    assigned = ops.assign_graph(_conform(batch), override=graph)
+    return _buckets_of_local(assigned, n_buckets)
+
+
+def _graph_buckets(graphs: list[str | None], n_buckets: int) -> set[int]:
+    """Buckets of constant graphs (None: the default graph), from a
+    driver-resident probe — no live scan and no job."""
+    probe = SparkSession.active().createDataFrame(
+        pa.table({"graph": pa.array(graphs, pa.string())})
+    )
+    return _buckets_of_local(probe, n_buckets)
+
+
+def _buckets_of_local(df: DataFrame, n_buckets: int) -> set[int]:
+    rows = with_graph_bucket(df.select("graph"), n_buckets).collect()
+    return {r["graph_bucket"] for r in rows}
+
+
 def restrict_to_buckets(live: DataFrame, buckets: list[int]) -> DataFrame:
     """Partition-pruned view of the live store: ``graph_bucket`` is a
     physical partition column, so this filter prunes whole directories
@@ -50,39 +82,58 @@ def restrict_to_buckets(live: DataFrame, buckets: list[int]) -> DataFrame:
     return live.where(F.col("graph_bucket").isin(buckets))
 
 
+def _segments(path: str) -> dict[str, str]:
+    """The ``key=value`` segments of a live path. They are partition
+    values of every row under it (the catalog reads with its root as
+    basePath): ``data/snap=3/graph_bucket=17`` holds rows of snap 3,
+    bucket 17."""
+    return dict(seg.split("=", 1) for seg in path.split("/") if "=" in seg)
+
+
 def _bucket_of(path: str) -> int | None:
     """graph_bucket id encoded in a live-path entry, or None for paths
     written before bucket-granular manifests (e.g. a whole-snapshot
-    ``data/snap=N`` entry) — ADVICE r2: those must be treated as
-    always-touched (rewritten), never crash the mutation."""
-    _, sep, tail = path.rpartition("graph_bucket=")
-    if not sep:
-        return None
+    ``data/snap=N`` entry) — ADVICE r2: those hold rows of every bucket
+    and must never crash a mutation."""
     try:
-        return int(tail.split("/", 1)[0])
-    except ValueError:
+        return int(_segments(path)["graph_bucket"])
+    except (KeyError, ValueError):
         return None
 
 
-def _keep_paths(catalog: Catalog, touched: set[int] | None) -> list[str] | None:
-    """Live paths a mutation carries over verbatim: every bucket-tagged
-    path outside the touched set. None — the caller rewrites everything
-    it reads — when nothing is touched-scoped (``touched`` is None), the
-    catalog is not path-addressed, or ANY live path lacks a parseable
-    bucket segment (a pre-bucketing whole-snapshot entry): excluding
-    only the unparseable path from keep while still bucket-pruning the
-    read would silently drop its untouched rows."""
+def _under(paths: list[str]) -> Column:
+    """Rows under any of the live ``paths``: a filter on partition
+    columns only, so the scan lists just their directories."""
+    cond = F.lit(False)
+    for p in paths:
+        term = F.lit(True)
+        for k, v in _segments(p).items():
+            term = term & (F.col(k).cast("string") == v)
+        cond = cond | term
+    return cond
+
+
+def _bucket_paths(catalog: Catalog, touched: set[int] | None) -> list[str] | None:
+    """Live paths that may hold rows of the ``touched`` graph buckets:
+    each path of a touched bucket, and each path with no bucket segment
+    (a pre-bucketing whole-snapshot entry holds rows of every bucket).
+    None when ``touched`` is None or the catalog is not path-addressed."""
     paths = catalog.live_paths()
     if touched is None or paths is None:
         return None
-    out = []
-    for p in paths:
-        b = _bucket_of(p)
-        if b is None:
-            return None
-        if b not in touched:
-            out.append(p)
-    return out
+    return [p for p in paths if _bucket_of(p) in touched | {None}]
+
+
+def _keep_paths(catalog: Catalog, rewrite: list[str] | None) -> list[str] | None:
+    """Live paths a mutation carries over verbatim: every live path it
+    does not ``rewrite``. None — the caller rewrites everything it
+    reads — when ``rewrite`` is None or the catalog is not
+    path-addressed."""
+    paths = catalog.live_paths()
+    if rewrite is None or paths is None:
+        return None
+    rewrite = set(rewrite)
+    return [p for p in paths if p not in rewrite]
 
 
 def _conform(stmts: DataFrame) -> DataFrame:
@@ -94,17 +145,24 @@ def _conform(stmts: DataFrame) -> DataFrame:
     return out.select(*[f.name for f in STATEMENT.fields])
 
 
-def _anti_on_quad_key(left: DataFrame, right: DataFrame) -> DataFrame:
-    """left_anti on the canonical quad key with NULL-SAFE equality —
-    obj_dt/obj_lang are null for IRI objects and plain equi-join keys
-    never match on null (two identical IRI-object quads would look
-    distinct). EqualNullSafe stays hash-joinable in Catalyst."""
-    r = right.select(*STATEMENT_QUAD_KEY).dropDuplicates()
+def _on_quad_key(left: DataFrame, right: DataFrame, how: str) -> DataFrame:
+    """``left`` joined (``left_anti``/``left_semi``) with ``right`` on the
+    canonical quad key with NULL-SAFE equality — obj_dt/obj_lang are
+    null for IRI objects and plain equi-join keys never match on null
+    (two identical IRI-object quads would look distinct). EqualNullSafe
+    stays hash-joinable in Catalyst. Neither join's result depends on
+    duplicates on the right, so the right side is not de-duplicated."""
+    r = right.select(*STATEMENT_QUAD_KEY)
     cond = None
     for c in STATEMENT_QUAD_KEY:
         term = left[c].eqNullSafe(r[c])
         cond = term if cond is None else (cond & term)
-    return left.join(r, cond, "left_anti")
+    return left.join(r, cond, how)
+
+
+def _anti_on_quad_key(left: DataFrame, right: DataFrame) -> DataFrame:
+    """The rows of ``left`` whose quad is not in ``right``."""
+    return _on_quad_key(left, right, "left_anti")
 
 
 def observed_count(obs: Observation, key: str = "n") -> int:
@@ -120,6 +178,14 @@ def observed_count(obs: Observation, key: str = "n") -> int:
         return 0
 
 
+# the lineage columns a writer hands the catalog (catalog.base.Catalog)
+_LINEAGE_ROW = pa.schema(
+    [("repo", pa.string()), ("commit", pa.string()), ("parser", pa.string()),
+     ("n_files", pa.int64()), ("n_triples", pa.int64()), ("n_errors", pa.int64()),
+     ("checksum", pa.string())]
+)
+
+
 def observed_lineage(data: DataFrame, op: str):
     """Single-pass mutation commit (VERDICT r2): attach an observe()
     counter to the statement plan and hand commit_snapshot a DEFERRED
@@ -132,52 +198,55 @@ def observed_lineage(data: DataFrame, op: str):
     observed = data.observe(obs, F.count(F.lit(1)).alias("n"))
 
     def lineage() -> DataFrame:
-        return spark.createDataFrame(
-            [(None, None, op, 0, observed_count(obs), 0, None)],
-            "repo string, commit string, parser string, n_files long, "
-            "n_triples long, n_errors long, checksum string",
-        )
+        # a LocalRelation: written by one task, where a parallelized
+        # Python list is split into defaultParallelism slices
+        row = {"parser": op, "n_files": 0, "n_triples": observed_count(obs), "n_errors": 0}
+        return spark.createDataFrame(pa.Table.from_pylist([row], _LINEAGE_ROW))
 
     return observed, lineage
 
 
-def anti_join_live(catalog: Catalog, batch: DataFrame) -> DataFrame:
+def anti_join_live(
+    catalog: Catalog, batch: DataFrame, touched: set[int] | None = None
+) -> DataFrame:
     """The rows of ``batch`` not already live — what makes an append
     set-semantic across snapshots (re-adding a triple is a no-op, like
     the reference's triplestore). Shared by INSERT DATA and the build's
     commit shaping. The anti-join reads only the graph buckets the
     batch touches (partition pruning): a small append against a 100 TB
     store scans a bounded slice, never the whole table (VERDICT r1).
-    An empty catalog is told by its snapshot log, with no job."""
+    ``touched``: those buckets when the caller has them already
+    (:func:`local_buckets`). An empty catalog is told by its snapshot
+    log, with no job."""
     if catalog.latest_snapshot_id() is None:
         return batch
-    live = restrict_to_buckets(
-        catalog.read_statements(), touched_buckets(batch, catalog.n_buckets)
-    )
+    if touched is None:
+        touched = touched_buckets(batch, catalog.n_buckets)
+    live = restrict_to_buckets(catalog.read_statements(), sorted(touched))
     return _anti_on_quad_key(batch, live)
 
 
 def _overwrite(
     catalog: Catalog,
-    touched: set[int] | None,
+    paths: list[str] | None,
     rewrite: Callable[[DataFrame], DataFrame],
     op: str,
     run_id: str | None,
 ) -> int:
-    """Partition-scoped overwrite, the commit path of every mutation
-    that drops rows: read the live store pruned to the ``touched`` graph
-    buckets (None: all of them), ``rewrite`` it, and commit the result
-    as an overwrite that carries every untouched bucket's data files
-    into the new snapshot verbatim (byte-identical, never re-read — the
-    Iceberg partition-level-overwrite shape; VERDICT r1: a full-table
-    rewrite per small mutation does not survive a 100 TB store).
-    Overwrite-while-reading is safe: snapshot data dirs are immutable
-    (the commit writes a NEW snap=<id> directory; prior files are only
-    dropped from live_paths, never touched)."""
+    """Path-scoped overwrite, the commit path of every mutation that
+    drops rows: read the rows under the live ``paths`` (None: the whole
+    store), ``rewrite`` them, and commit the result as an overwrite that
+    carries every other live path into the new snapshot verbatim
+    (byte-identical, never re-read — the Iceberg partition-level-
+    overwrite shape; VERDICT r1: a full-table rewrite per small mutation
+    does not survive a 100 TB store). Overwrite-while-reading is safe:
+    snapshot data dirs are immutable (the commit writes a NEW
+    snap=<id> directory; prior files are only dropped from live_paths,
+    never touched)."""
     live = catalog.read_statements()
-    keep = _keep_paths(catalog, touched)
+    keep = _keep_paths(catalog, paths)
     if keep is not None:
-        live = restrict_to_buckets(live, sorted(touched))
+        live = live.where(_under(paths))
     data, lin = observed_lineage(
         rewrite(live).select(*[f.name for f in STATEMENT.fields]), op
     )
@@ -195,12 +264,14 @@ def insert_data(
     stmts: DataFrame,
     graph: str | None = None,
     run_id: str | None = None,
+    touched: set[int] | None = None,
 ) -> int:
     """INSERT DATA [INTO GRAPH <graph>]: dedup the batch, drop what is
     already live (:func:`anti_join_live`) and append the remainder as a
-    snapshot."""
+    snapshot. ``touched``: the batch's graph buckets, when the caller
+    already has them (:func:`local_buckets`)."""
     batch = ops.dedup(ops.assign_graph(_conform(stmts), override=graph))
-    batch, lin = observed_lineage(anti_join_live(catalog, batch), "insert_data")
+    batch, lin = observed_lineage(anti_join_live(catalog, batch, touched), "insert_data")
     return catalog.commit_snapshot(
         batch, lin, run_id=run_id or uuid.uuid4().hex, operation="append"
     )
@@ -215,9 +286,9 @@ def modify(
 ) -> int:
     """SPARQL 1.1 Modify (§3.1.3): apply deletions then insertions,
     both evaluated against the pre-update store, in ONE snapshot
-    commit. Partition-scoped like delete_data: only graph buckets
-    touched by either side are read/rewritten; untouched data files
-    carry over verbatim. A quad both deleted and inserted ends up
+    commit. Partition-scoped: only the live paths of graph buckets
+    touched by either side are read/rewritten; every other data file
+    carries over verbatim. A quad both deleted and inserted ends up
     present (insert happens after delete)."""
     if deletes is None and inserts is None:
         raise ValueError("modify() needs deletes and/or inserts")
@@ -240,7 +311,7 @@ def modify(
             return remaining
         return remaining.unionByName(_anti_on_quad_key(inserts, remaining))
 
-    return _overwrite(catalog, touched, rewrite, "modify", run_id)
+    return _overwrite(catalog, _bucket_paths(catalog, touched), rewrite, "modify", run_id)
 
 
 def clear(
@@ -252,8 +323,9 @@ def clear(
     """SPARQL 1.1 §3.2.2/3.2.3 CLEAR/DROP: remove all statements of one
     graph (``which="graph"``), the default graph (``"default"``), all
     named graphs (``"named"``), or everything (``"all"``). GRAPH and
-    DEFAULT forms are partition-scoped (only the one bucket holding the
-    target graph is rewritten); named graphs span all buckets."""
+    DEFAULT forms are partition-scoped (only the live paths of the one
+    bucket holding the target graph are rewritten); named graphs span
+    all buckets."""
     if which == "all":
         cond, touched = F.lit(True), None
     elif which == "named":
@@ -261,11 +333,10 @@ def clear(
     else:
         target = graph if which == "graph" else None
         cond = F.col("graph").eqNullSafe(F.lit(target))
-        probe = catalog.read_statements().sparkSession.createDataFrame(
-            [(target,)], "graph string"
-        )
-        touched = set(touched_buckets(probe, catalog.n_buckets))
-    return _overwrite(catalog, touched, lambda live: live.where(~cond), "clear", run_id)
+        touched = _graph_buckets([target], catalog.n_buckets)
+    return _overwrite(
+        catalog, _bucket_paths(catalog, touched), lambda live: live.where(~cond), "clear", run_id
+    )
 
 
 def graph_op(
@@ -286,12 +357,10 @@ def graph_op(
         raise ValueError(f"unknown graph op {op!r}")
     if src == dst:
         return catalog.latest_snapshot_id() or 0  # no-op per spec
-    live = catalog.read_statements()
-    # the touched graphs are the two constants — compute their buckets
-    # from a probe row (no live scan) and prune every read to them
-    probe = live.sparkSession.createDataFrame([(src,), (dst,)], "graph string")
-    buckets = set(touched_buckets(probe, catalog.n_buckets))
-    live = restrict_to_buckets(live, sorted(buckets))
+    # the touched graphs are the two constants — their buckets come from
+    # a driver-resident probe (no live scan), and every read is pruned to them
+    buckets = _graph_buckets([src, dst], catalog.n_buckets)
+    live = restrict_to_buckets(catalog.read_statements(), sorted(buckets))
     src_rows = live.where(F.col("graph").eqNullSafe(F.lit(src)))
     inserts = src_rows.withColumn("graph", F.lit(dst))
     deletes = None
@@ -303,21 +372,48 @@ def graph_op(
     return modify(catalog, deletes, inserts, run_id=run_id, touched=buckets)
 
 
+def _paths_holding(live: DataFrame, paths: list[str], batch: DataFrame) -> list[str]:
+    """The live ``paths`` that hold a row of ``batch``: one scan of their
+    directories, semi-joined with the batch on the quad key. The store
+    is a set, so at most one row per batch row reaches the driver."""
+    keys = sorted({k for p in paths for k in _segments(p)})
+    found = [
+        r.asDict()
+        for r in _on_quad_key(live.where(_under(paths)), batch, "left_semi")
+        .select(*[F.col(k).cast("string").alias(k) for k in keys])
+        .collect()
+    ]
+    return [
+        p for p in paths
+        if any(all(r[k] == v for k, v in _segments(p).items()) for r in found)
+    ]
+
+
 def delete_data(
     catalog: Catalog,
     stmts: DataFrame,
     graph: str | None = None,
     run_id: str | None = None,
+    touched: set[int] | None = None,
 ) -> int:
-    """DELETE DATA [FROM GRAPH <graph>]: a partition-scoped overwrite
-    (:func:`_overwrite`) — only the graph buckets the deletion batch
-    touches are read and rewritten."""
+    """DELETE DATA [FROM GRAPH <graph>]: a path-granular overwrite
+    (:func:`_overwrite`). Of the live paths of the graph buckets the
+    batch touches, only those holding a deleted row are read and
+    rewritten; every other path carries over verbatim, and deleting
+    only absent triples writes no data file. Its lineage ``n_triples``
+    counts the rows written, i.e. those left in the rewritten paths.
+    ``touched``: the batch's graph buckets, when the caller already has
+    them (:func:`local_buckets`)."""
     batch = ops.assign_graph(_conform(stmts), override=graph).select(
         *STATEMENT_QUAD_KEY
     )
-    touched = set(touched_buckets(batch, catalog.n_buckets))
+    if touched is None:
+        touched = set(touched_buckets(batch, catalog.n_buckets))
+    paths = _bucket_paths(catalog, touched)
+    if paths is not None:
+        paths = _paths_holding(catalog.read_statements(), paths, batch)
     return _overwrite(
-        catalog, touched, lambda live: _anti_on_quad_key(live, batch), "delete_data", run_id
+        catalog, paths, lambda live: _anti_on_quad_key(live, batch), "delete_data", run_id
     )
 
 
@@ -328,8 +424,8 @@ def compact_store(
     buckets whose live set spans ≥ ``min_dirs`` snapshot directories
     are read once and rewritten into a single new consolidated
     directory; every other bucket's files carry into the new snapshot
-    verbatim (partition-scoped overwrite — same shape as mutations; a
-    pre-bucketing manifest can't be scoped and is rewritten whole).
+    verbatim (path-scoped overwrite — same shape as mutations; a
+    pre-bucketing whole-snapshot path is rewritten whole).
     Returns the new snapshot id, or None when nothing needs compacting.
 
     At 100 TB this is the antidote to append-heavy ingestion: N small
@@ -343,4 +439,6 @@ def compact_store(
     touched = {b for b, n in cnt.items() if b is not None and n >= min_dirs}
     if not touched and None not in cnt:
         return None
-    return _overwrite(catalog, touched, lambda live: live, "compact_store", run_id)
+    return _overwrite(
+        catalog, _bucket_paths(catalog, touched), lambda live: live, "compact_store", run_id
+    )
