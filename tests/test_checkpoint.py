@@ -597,7 +597,7 @@ def test_lineage_has_schema_columns_after_every_commit_kind(spark, cat_root):
         ("delete", lambda: update.delete_data(
             cat, _one_row(spark, "http://a"), graph="urn:g", run_id="d1")),
         ("modify", lambda: update.modify(
-            cat, inserts=_one_row(spark, "http://b"), run_id="m1")),
+            cat, lambda live: (None, _one_row(spark, "http://b")), run_id="m1")),
         ("graph_op", lambda: update.graph_op(cat, "copy", None, "urn:h", run_id="g1")),
         ("clear graph", lambda: update.clear(cat, graph="urn:h", run_id="x1")),
         ("clear default", lambda: update.clear(cat, which="default", run_id="x2")),
@@ -759,3 +759,155 @@ def test_path_granular_delete_raises_on_a_race(spark, cat_root):
         update.delete_data(cat, _one_row(spark, "http://s3"), graph="urn:g", run_id="d1")
     final = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
     assert _subjects(final) == {"http://s1", "http://s2", "http://s3", "http://concurrent"}
+
+
+def _race_before_the_reservation(spark, cat, cat_root):
+    """Make ``cat``'s next commit meet a concurrent INSERT DATA, published
+    by a second catalog instance after the commit read its parent and
+    before it reserves its snapshot id."""
+    orig = cat._reserve_sid
+
+    def racy_reserve(parent):
+        cat._reserve_sid = orig
+        other = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+        update.insert_data(
+            other, _one_row(spark, "http://concurrent"), graph="urn:g", run_id="race"
+        )
+        return orig(parent)
+
+    cat._reserve_sid = racy_reserve
+
+
+def test_delete_raises_on_a_race_before_the_reservation(spark, cat_root):
+    from tripleforge.catalog.parquet_snapshot import ConcurrentOverwriteError
+
+    cat, _, _ = _two_path_bucket(spark, cat_root)
+    _race_before_the_reservation(spark, cat, cat_root)
+    with pytest.raises(ConcurrentOverwriteError):
+        update.delete_data(cat, _one_row(spark, "http://s3"), graph="urn:g", run_id="d1")
+    final = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    assert _subjects(final) == {"http://s1", "http://s2", "http://s3", "http://concurrent"}
+
+
+def test_compact_links_raises_on_a_race_before_the_reservation(spark, cat_root):
+    from tripleforge.catalog.parquet_snapshot import ConcurrentOverwriteError
+    from tripleforge.pipeline import compact_links
+
+    cat, _, _ = _two_path_bucket(spark, cat_root)
+    _race_before_the_reservation(spark, cat, cat_root)
+    with pytest.raises(ConcurrentOverwriteError):
+        compact_links(spark, cat, run_id="c1")
+    final = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    assert _subjects(final) == {"http://s1", "http://s2", "http://s3", "http://concurrent"}
+
+
+# ---------------------------------------------------------------------------
+# Lineage rows of a mixed-format corpus with error rows, pinned
+# ---------------------------------------------------------------------------
+_RDFXML = (
+    '<?xml version="1.0"?>\n<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" '
+    'xmlns:ex="http://ex.org/">\n<rdf:Description rdf:about="http://ex.org/d1">'
+    '<ex:name>Dee</ex:name><ex:knows rdf:resource="http://ex.org/d2"/></rdf:Description>\n'
+    "</rdf:RDF>\n"
+)
+# seven files in four units: nt, ttl, nq and rdfxml; malformed lines in
+# three units, and a unit (org/r2, c2) whose one file has only errors
+MIXED_CORPUS = [
+    ("org/r1", "a.nt", "c1", "N-Triples",
+     "<http://ex.org/a> <http://ex.org/p> <http://ex.org/b> .\n"
+     '<http://ex.org/a> <http://ex.org/p> "x"@en .\n'
+     "<http://ex.org/a> <http://ex.org/p> .\n"),
+    ("org/r1", "g.nt", "c1", "N-Triples",
+     "<http://ex.org/a> <http://ex.org/p> <http://ex.org/b> .\n"
+     '<http://ex.org/g> <http://ex.org/p> "5"^^<http://www.w3.org/2001/XMLSchema#integer> .\n'),
+    ("org/r1", "b.ttl", "c1", "Turtle",
+     '@prefix ex: <http://ex.org/> .\nex:t1 ex:p ex:t2 ; ex:q "lit" .\n'),
+    ("org/r1", "c.nq", "c2", "N-Quads",
+     "<http://ex.org/q1> <http://ex.org/p> <http://ex.org/q2> <http://ex.org/G> .\n"
+     '<http://ex.org/q1> <http://ex.org/p> "v" <http://ex.org/G> .\n'
+     '<http://ex.org/q1> <http://ex.org/p> "broken <http://ex.org/G> .\n'),
+    ("org/r2", "d.rdf", "c1", "RDF/XML", _RDFXML),
+    ("org/r2", "e.nt", "c1", "N-Triples",
+     '<http://ex.org/e1> <http://ex.org/name> "Eee" .\nnot a triple at all\n'),
+    ("org/r2", "f.nt", "c2", "N-Triples", "garbage line one\n<http://ex.org/x> <http://ex.org/p>\n"),
+]
+MIXED_CORPUS_DDL = "repo string, path string, commit string, lang string, content string"
+LINEAGE_ROW = ["repo", "commit", "parser", "n_files", "n_triples", "n_errors", "checksum"]
+
+
+def test_mixed_corpus_lineage_rows_are_pinned(spark, cat_root):
+    """Every lineage row of a build, checksums included; the unit with
+    only errors has 0 files and triples and a null checksum."""
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    corpus = spark.createDataFrame(MIXED_CORPUS, MIXED_CORPUS_DDL)
+    res = build(spark, corpus, cat, BuildConfig(run_id="b", link_entities=False))
+    assert (res.n_statements, res.n_errors) == (10, 5)
+    rows = sorted(tuple(r) for r in cat.read_lineage().select(*LINEAGE_ROW).collect())
+    assert rows == [
+        ("org/r1", "c1", "nt", 2, 3, 1, "A00668575FE30B0F"),
+        ("org/r1", "c1", "ttl", 1, 2, 0, "ABD14C856976C738"),
+        ("org/r1", "c2", "nq", 1, 2, 1, "894FACCED61A79B0"),
+        ("org/r2", "c1", "nt", 1, 1, 1, "930286899F52E830"),
+        ("org/r2", "c1", "rdfxml", 1, 2, 0, "2DC39434BBB6F97A"),
+        ("org/r2", "c2", "nt", 0, 0, 2, None),
+    ]
+
+
+def test_move_copies_what_its_commit_reads(spark, cat_root):
+    """A concurrent INSERT into the source graph that publishes before
+    MOVE pins its snapshot is moved with the rest: MOVE leaves the
+    source graph empty."""
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    update.insert_data(cat, _one_row(spark, "http://s1"), graph="urn:src", run_id="i1")
+    orig = cat.latest_snapshot_id
+
+    def racy_latest():
+        cat.latest_snapshot_id = orig
+        other = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+        update.insert_data(other, _one_row(spark, "http://s2"), graph="urn:src", run_id="race")
+        return orig()
+
+    cat.latest_snapshot_id = racy_latest
+    update.graph_op(cat, "move", "urn:src", "urn:dst", run_id="m1")
+    final = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    got = {(r.graph, r.subj) for r in final.read_statements().collect()}
+    assert got == {("urn:dst", "http://s1"), ("urn:dst", "http://s2")}
+
+
+def test_delete_where_matches_what_its_commit_reads(spark, cat_root):
+    """DELETE … WHERE evaluates its WHERE on the snapshot it commits
+    against: a concurrent INSERT into the graph that publishes before
+    the pin is matched and deleted with the rest."""
+    from tripleforge.sparql_update import execute_update
+
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    execute_update(spark, cat, "INSERT DATA { GRAPH <urn:g> { <urn:s1> <urn:p> <urn:o> } }")
+    orig = cat.latest_snapshot_id
+    raced = []
+
+    def racy_latest():
+        cat.latest_snapshot_id = orig
+        other = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+        raced.append(
+            execute_update(spark, other, "INSERT DATA { GRAPH <urn:g> { <urn:s2> <urn:p> <urn:o> } }")
+        )
+        return orig()
+
+    cat.latest_snapshot_id = racy_latest
+    execute_update(
+        spark, cat,
+        "DELETE { GRAPH <urn:g> { ?s ?p ?o } } WHERE { GRAPH <urn:g> { ?s ?p ?o } }",
+    )
+    assert raced  # the concurrent INSERT DATA published
+    final = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    assert final.read_statements().count() == 0
+
+
+def test_overwrite_commit_needs_the_snapshot_it_read(spark, cat_root):
+    """An overwrite that does not say which snapshot it read is refused
+    before it writes anything."""
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    row = _one_row(spark, "http://s1")
+    with pytest.raises(ValueError, match="base_snapshot_id"):
+        cat.commit_snapshot(row, row, run_id="o1", operation="overwrite")
+    assert cat.latest_snapshot_id() is None

@@ -330,6 +330,33 @@ def test_update_template_stores_numeric_bindings_as_typed_literals(spark, cat_ro
 
 
 @pytest.mark.parametrize(
+    "expr, obj, kind",
+    [
+        ('CONCAT("a", "b")', "ab", "literal"),
+        ("STR(?o)", "urn:o", "literal"),
+        ('IRI("urn:made")', "urn:made", "iri"),
+        ("<urn:const>", "urn:const", "iri"),
+        ("?o", "urn:o", "iri"),
+        ('IF(?o = <urn:o>, "y", "n")', "y", "literal"),
+        ("IF(?o = <urn:o>, <urn:a>, <urn:b>)", "urn:a", "iri"),
+        ('COALESCE(?o, "z")', "urn:o", "iri"),
+        ("COALESCE(<urn:a>, <urn:b>)", "urn:a", "iri"),
+        ('IF(?o = <urn:o>, IRI(STR(?o)), <urn:b>)', "urn:o", "iri"),
+    ],
+    ids=["concat", "str", "iri-fn", "iri-const", "var-copy", "if-str", "if-iri",
+         "coalesce-mixed", "coalesce-iri", "if-iri-fn"],
+)
+def test_update_template_stores_string_bindings_as_literals(spark, cat_root, expr, obj, kind):
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    sparql.execute_update(spark, cat, "INSERT DATA { <urn:s> <urn:p> <urn:o> }")
+    sparql.execute_update(
+        spark, cat, f"INSERT {{ <urn:x> <urn:q> ?n }} WHERE {{ ?s <urn:p> ?o BIND({expr} AS ?n) }}"
+    )
+    rows = cat.read_statements().where(F.col("pred") == "urn:q").collect()
+    assert [(r.obj, r.obj_kind, r.obj_dt, r.obj_lang) for r in rows] == [(obj, kind, None, None)]
+
+
+@pytest.mark.parametrize(
     "value, ddl, obj, dt",
     [
         (7, "int", "7", "integer"),

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -56,6 +57,65 @@ def test_incremental_build_matches_batch(spark, dirs):
         assert dataset_checksum(got) == dataset_checksum(solo.read_statements())
     finally:
         shutil.rmtree(solo_root, ignore_errors=True)
+
+
+def _landing_with_a_malformed_line(spark, src):
+    spec = CorpusSpec(n_repos=2, files_per_repo=2, stmts_per_file=6, formats=("nt", "ttl"))
+    bad = spark.createDataFrame(
+        [("org9/bad", "x.nt", "c9", "N-Triples", "<urn:s> <urn:p> <urn:o> .\n<urn:s> <urn:p> .\n")],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    corpus = corpus_df(spark, spec).unionByName(bad)
+    corpus.withColumn("ingest_ts", F.lit("2024-01-01 00:00:00").cast("timestamp")).write.parquet(
+        src, mode="append"
+    )
+    return corpus
+
+
+def test_micro_batch_commits_the_lineage_of_a_batch_build(spark, dirs):
+    """Lineage rows of a micro-batch with a malformed line, stamps aside,
+    equal those of build() over the same corpus."""
+    src, chk, root = dirs
+    corpus = _landing_with_a_malformed_line(spark, src)
+    cat = ParquetSnapshotCatalog(spark, root, n_buckets=4)
+    incremental_build(spark, src, cat, chk).awaitTermination(120)
+    cols = ["repo", "commit", "parser", "n_files", "n_triples", "n_errors", "checksum"]
+    solo_root = tempfile.mkdtemp(prefix="tfsolo_")
+    try:
+        solo = ParquetSnapshotCatalog(spark, solo_root, n_buckets=4)
+        build(spark, corpus, solo, BuildConfig(run_id="b", link_entities=False))
+        want = sorted(tuple(r) for r in solo.read_lineage().select(*cols).collect())
+    finally:
+        shutil.rmtree(solo_root, ignore_errors=True)
+    got = sorted(tuple(r) for r in cat.read_lineage().select(*cols).collect())
+    assert got == want
+    assert ("org9/bad", "c9", "nt", 1, 1, 1) in [r[:6] for r in got]
+
+
+def test_micro_batch_runs_the_parse_kernel_once(spark, dirs, monkeypatch, tmp_path):
+    """Each partition of a micro-batch's parse runs the kernel once: the
+    data write and both lineage branches read one materialization."""
+    from tripleforge.parse import dispatch
+
+    src, chk, root = dirs
+    _landing_with_a_malformed_line(spark, src)
+    log = str(tmp_path / "kernel.log")
+    kernel = dispatch._parse_batches
+
+    def logged(batches, canonicalize=False):
+        from pyspark import TaskContext
+
+        with open(log, "a") as fh:
+            fh.write(f"{TaskContext.get().partitionId()}\n")
+        return kernel(batches, canonicalize=canonicalize)
+
+    # the mapInArrow closure captures the module global when pickled
+    monkeypatch.setattr(dispatch, "_parse_batches", logged)
+    cat = ParquetSnapshotCatalog(spark, root, n_buckets=4)
+    incremental_build(spark, src, cat, chk).awaitTermination(120)
+    with open(log) as fh:
+        runs = Counter(fh.read().split())
+    assert runs and set(runs.values()) == {1}, runs
 
 
 def test_streaming_catchup_processes_only_new(spark, dirs):

@@ -6,6 +6,7 @@ Checked properties:
 - pruned scan: PushedFilters non-empty + ReadSchema excludes unused cols
 - parse: exactly ONE Python map stage (MapInArrow), no `content` above it
 - broadcast dims actually broadcast (BroadcastHashJoin)
+- lineage: one aggregate, so exactly one exchange
 - dedup: partial_ + final HashAggregate around one exchange
 - rewrite joins broadcast the CC mapping
 - topk: TakeOrderedAndProject (no global sort)
@@ -74,6 +75,22 @@ def main() -> int:
     if not ok:
         failures.append("kg_parse_fused: python stages != 1")
     print("kg_parse_fused | one python stage:", ok, flush=True)
+
+    # 2b. lineage: one aggregate over statements ∪ error rows, so the
+    # parsed corpus crosses exactly one exchange on its way to the rows
+    from tripleforge import lineage
+    from tripleforge.pipeline import parse_step
+
+    _, parsed, errors = parse_step(
+        corpus_df(spark, CorpusSpec(n_repos=2, files_per_repo=2)),
+        BuildConfig(link_entities=False),
+    )
+    audit(
+        "lineage_one_exchange",
+        lineage.collect(parsed, errors),
+        [("an exchange", r"\(\d+\) Exchange", True),
+         ("no second exchange", r"\(\d+\) Exchange[\s\S]*\(\d+\) Exchange", False)],
+    )
 
     # 3. broadcast join of dims
     audit(

@@ -55,6 +55,7 @@ class Catalog(ABC):
         run_id: str,
         operation: str = "append",
         replace_paths: list[str] | None = None,
+        base_snapshot_id: int | None = None,
     ) -> int:
         """Atomically commit statements + their lineage rows as one new
         snapshot; returns the snapshot id. Idempotent per ``run_id``:
@@ -62,7 +63,10 @@ class Catalog(ABC):
         existing id) — the resume safety property (A22). For
         ``operation="overwrite"``, ``replace_paths`` lists prior live
         paths to CARRY into the new snapshot (partition-scoped
-        overwrite); None replaces everything.
+        overwrite); None replaces everything. An overwrite must pass
+        ``base_snapshot_id``, the snapshot it read (0: the empty store):
+        a snapshot published after it raises a conflict instead of being
+        dropped.
 
         ``lineage`` may be a zero-arg callable resolved AFTER the
         statement write: callers attach ``df.observe()`` counters to
@@ -83,10 +87,11 @@ class Catalog(ABC):
     @abstractmethod
     def latest_snapshot_id(self) -> int | None: ...
 
-    def live_paths(self) -> list[str] | None:
-        """Live data paths of the latest snapshot (Hive-style: their
-        ``key=value`` segments are partition values of the rows under
-        them); None when the catalog is not path-addressed."""
+    def live_paths(self, snapshot_id: int | None = None) -> list[str] | None:
+        """Live data paths as of ``snapshot_id`` (default: latest), like
+        :meth:`read_statements` (Hive-style: their ``key=value``
+        segments are partition values of the rows under them); None
+        when the catalog is not path-addressed."""
         return None
 
     def committed_units(self) -> DataFrame:

@@ -39,10 +39,15 @@ class IcebergCatalog(Catalog):
         run_id: str,
         operation: str = "append",
         replace_paths: list[str] | None = None,
+        base_snapshot_id: int | None = None,
     ) -> int:
         # replace_paths is a parquet-snapshot concept; Iceberg's
         # overwritePartitions already replaces only the partitions the
-        # write touches, so partition-scoped DELETE is native here.
+        # write touches, so partition-scoped DELETE is native here, and
+        # serializable validation from base_snapshot_id fails a commit
+        # that conflicts with one published after the read.
+        if operation == "overwrite" and base_snapshot_id is None:
+            raise ValueError("an overwrite needs the base_snapshot_id it read")
         # Idempotence: skip if this run_id already committed.
         existing = (
             self.spark.read.table(self.lineage_table)
@@ -53,6 +58,9 @@ class IcebergCatalog(Catalog):
             return int(existing.first()["snapshot_id"])
         writer = statements.writeTo(self.table)
         if operation == "overwrite":
+            writer = writer.option("isolation-level", "serializable")
+            if base_snapshot_id:
+                writer = writer.option("validate-from-snapshot-id", str(base_snapshot_id))
             writer.overwritePartitions()
         else:
             writer.append()

@@ -119,7 +119,10 @@ class ParquetSnapshotCatalog(Catalog):
         run_id: str,
         operation: str = "append",
         replace_paths: list[str] | None = None,
+        base_snapshot_id: int | None = None,
     ) -> int:
+        if operation == "overwrite" and base_snapshot_id is None:
+            raise ValueError("an overwrite needs the base_snapshot_id it read")
         for m in self._manifests():
             if m["run_id"] == run_id:
                 return m["snapshot_id"]  # idempotent re-commit
@@ -167,15 +170,16 @@ class ParquetSnapshotCatalog(Catalog):
         # landed between our parent and our sid, an append REBASES its
         # live_paths onto the fresh parent and republishes (appends only
         # ever add paths, so the merge is trivially correct), while an
-        # overwrite must abort: its replace_paths/anti-joins were
+        # overwrite must abort if anything published above the snapshot
+        # it read (base_snapshot_id): its replace_paths/anti-joins were
         # computed against a live set that no longer exists.
         dst = os.path.join(self._snap_dir(), f"v{sid}.json")
         while True:
             parent = self._manifest_for(None)
             parent_sid = parent["snapshot_id"] if parent else 0
+            if operation == "overwrite" and parent_sid != base_snapshot_id:
+                raise ConcurrentOverwriteError(sid, parent_sid)
             if parent_sid >= sid:  # someone published past our reservation
-                if operation == "overwrite":
-                    raise ConcurrentOverwriteError(sid, parent_sid)
                 sid = self._reserve_sid(parent)
                 # data files stay at their original snap=<id> directory;
                 # only the manifest id moves forward (live_paths are
@@ -255,8 +259,8 @@ class ParquetSnapshotCatalog(Catalog):
         parallelizes a Python list into defaultParallelism of them)."""
         return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), schema)
 
-    def live_paths(self) -> list[str]:
-        m = self._manifest_for(None)
+    def live_paths(self, snapshot_id: int | None = None) -> list[str]:
+        m = self._manifest_for(snapshot_id)
         return list(m["live_paths"]) if m else []
 
     # --- maintenance ---------------------------------------------------------

@@ -18,34 +18,26 @@ from pyspark.sql import functions as F
 
 # BIT_XOR of per-row xxhash64 over the canonical quad key, as hex: the
 # one statement-set checksum of lineage rows and determinism tests
-_CHECKSUM = (
-    "conv(cast(bit_xor(xxhash64(subj, pred, obj, obj_kind, obj_dt, obj_lang, graph))"
-    " as string), 10, 16)"
-)
+_HASH = "xxhash64(subj, pred, obj, obj_kind, obj_dt, obj_lang, graph)"
+_CHECKSUM = "conv(cast(bit_xor({}) as string), 10, 16)"
 
 
 def collect(stmts: DataFrame, errors: DataFrame) -> DataFrame:
     """→ per-(repo, commit, parser) metrics rows; the catalog stamps
-    run_id, snapshot_id and committed_at on at commit."""
-    s = stmts.groupBy(
-        F.col("src_repo").alias("repo"),
-        F.col("src_commit").alias("commit"),
-        F.col("parser"),
-    ).agg(
-        F.count_distinct("src_path").alias("n_files"),
-        F.count(F.lit(1)).alias("n_triples"),
-        F.expr(_CHECKSUM).alias("checksum"),
-    )
-    e = errors.groupBy(
-        F.col("src_repo").alias("repo"),
-        F.col("src_commit").alias("commit"),
-        F.col("parser"),
-    ).agg(F.count(F.lit(1)).alias("n_errors"))
-    return (
-        s.join(e, ["repo", "commit", "parser"], "full_outer")
-        .withColumn("n_files", F.coalesce("n_files", F.lit(0)))
-        .withColumn("n_triples", F.coalesce("n_triples", F.lit(0)))
-        .withColumn("n_errors", F.coalesce("n_errors", F.lit(0)))
+    run_id, snapshot_id and committed_at on at commit.
+
+    One aggregate, one exchange, over the union of statement rows (with
+    ``src_path`` and quad hash) and error rows (nulls there, and a
+    flag): a unit with only errors gets 0 files and triples and a null
+    checksum. ``count_distinct(src_path)`` would plan a second exchange."""
+    key = ["src_repo AS repo", "src_commit AS commit", "parser"]
+    rows = stmts.selectExpr(*key, "src_path", f"{_HASH} AS h", "CAST(NULL AS INT) AS err")
+    errs = errors.selectExpr(*key, "CAST(NULL AS STRING)", "CAST(NULL AS BIGINT)", "1")
+    return rows.union(errs).groupBy("repo", "commit", "parser").agg(
+        F.expr("CAST(size(collect_set(src_path)) AS BIGINT)").alias("n_files"),
+        F.count("h").alias("n_triples"),
+        F.count("err").alias("n_errors"),
+        F.expr(_CHECKSUM.format("h")).alias("checksum"),
     )
 
 
@@ -53,7 +45,7 @@ def dataset_checksum(stmts: DataFrame) -> str:
     """One order/partitioning-independent checksum for a statement set —
     used by determinism tests (same value at local[2] and local[32])."""
     row = stmts.select(
-        F.expr(_CHECKSUM).alias("c"),
+        F.expr(_CHECKSUM.format(_HASH)).alias("c"),
         F.count(F.lit(1)).alias("n"),
     ).first()
     return f"{row['c']}:{row['n']}"

@@ -9,10 +9,12 @@ between them); the explicit shuffles are the narrow-scan widening, the
 linking joins/CC rounds, the dedup aggregate, and the bucket
 repartition before write.
 
-The prefix shared by ``transform``, ``build`` and the streaming ingest
-is written once, as two steps: ``parse_step`` (widen → fingerprint →
-format → parse+canon → split) and ``link_step`` (graph injection →
-entity linking).
+The prefix shared by ``transform`` and ``build`` is written once, as
+two steps: ``parse_step`` (widen → fingerprint → format → parse+canon →
+split) and ``link_step`` (graph injection → entity linking). ``build``
+is the one corpus → append commit: the streaming ingest commits each
+micro-batch with it. ``compact_links`` commits through the mutation
+overwrite (``update.overwrite``), the one live store → rewrite commit.
 """
 
 from __future__ import annotations
@@ -28,8 +30,8 @@ from tripleforge.catalog.base import Catalog
 from tripleforge.checkpoint import filter_pending
 from tripleforge.detect import with_format
 from tripleforge.parse import parse_corpus, split_errors
-from tripleforge.schema import STATEMENT, STATEMENT_QUAD_KEY
-from tripleforge.update import anti_join_live, observed_count, observed_lineage
+from tripleforge.schema import STATEMENT_QUAD_KEY
+from tripleforge.update import anti_join_live, observed_count, overwrite
 
 
 @dataclass
@@ -61,15 +63,16 @@ def compact_links(
     CC is not streamable with bounded state, so linking runs as periodic
     batch compaction over committed snapshots).
 
-    Reads ALL live statements, resolves the full equivalence closure
+    Resolves the full equivalence closure over ALL live statements
     (sameAs edges may span snapshots committed by different runs),
-    rewrites subjects/objects to component representatives, dedups, and
-    commits the result as a full-replacement (overwrite) snapshot —
-    previous snapshots stay readable via time travel.
+    rewrites subjects/objects to component representatives and dedups:
+    one whole-store :func:`update.overwrite`, whose row count rides the
+    snapshot write. Previous snapshots stay readable via time travel.
     """
     cfg = cfg or BuildConfig()
     rid = run_id or ("compact-" + uuid.uuid4().hex)
-    if catalog.latest_snapshot_id() is None:
+    sid = catalog.latest_snapshot_id()
+    if sid is None:
         return BuildResult(0, rid, 0, 0)  # empty catalog → no-op
     # an already-committed run_id returns its prior snapshot without
     # recomputing the closure; a fresh one reports what it committed
@@ -78,11 +81,9 @@ def compact_links(
 
     r = committed()
     if r is None:
-        live = catalog.read_statements().select(*[f.name for f in STATEMENT.fields])
-        # single-pass commit: the row count rides the snapshot write via
-        # observe(), so compaction reads the live store once (VERDICT r2)
-        rewritten, lin = observed_lineage(ops.dedup(link_entities(live, cfg)), "compact")
-        catalog.commit_snapshot(rewritten, lin, run_id=rid, operation="overwrite")
+        overwrite(
+            catalog, sid, None, lambda live: ops.dedup(link_entities(live, cfg)), "compact", rid
+        )
         r = committed()
     return BuildResult(int(r["snapshot_id"]), rid, int(r["n_triples"]), 0)
 
@@ -132,8 +133,7 @@ def transform(
 ) -> tuple[DataFrame, DataFrame]:
     """Pure dataflow (no catalog side effects): corpus → (statements,
     errors), batch-globally deduped. Used by tests and tools; the build
-    and the streaming ingest share its prefix but shape for commit
-    instead of deduping here."""
+    shares its prefix but shapes for commit instead of deduping here."""
     cfg = cfg or BuildConfig()
     _, stmts, errors = parse_step(corpus, cfg)
     stmts = ops.dedup(link_step(stmts, cfg))  # SHUFFLE: partial+final hash agg
@@ -143,10 +143,8 @@ def transform(
 def shape_for_commit(
     stmts: DataFrame, catalog: Catalog
 ) -> tuple[DataFrame, DataFrame]:
-    """→ (unit_deduped, committable_data) — the set-semantics shaping
-    shared by the batch build and the streaming foreachBatch path
-    (ADVICE r1-high; one source of truth so the two ingest paths
-    cannot drift).
+    """→ (unit_deduped, committable_data) — the build's set-semantics
+    shaping (ADVICE r1-high), and so the streaming ingest's too.
 
     ``unit_deduped`` dedups WITHIN each (repo, commit) work unit, so a
     unit whose quads are fully shadowed by another unit still keeps
@@ -221,11 +219,11 @@ def build(
     obs = Observation()
     written = []
 
-    def observed_lineage() -> DataFrame:
+    def lineage_rows() -> DataFrame:
         written.append(True)
         return lin.observe(obs, *totals)
 
-    sid = catalog.commit_snapshot(data, observed_lineage, run_id=run_id)
+    sid = catalog.commit_snapshot(data, lineage_rows, run_id=run_id)
     unit_deduped.unpersist()
     raw.unpersist()
     if written:

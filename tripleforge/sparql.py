@@ -121,12 +121,15 @@ def _bind_column(df: DataFrame, var: str, tree: tuple) -> DataFrame:
     carry_meta companion columns, so downstream LANG() / DATATYPE() /
     isLiteral() see the constructed tag instead of the pre-r4 behavior
     (serialization-only). Nested occurrences (e.g. inside CONCAT) still
-    lose their tag — solution columns are lexical by design."""
+    lose their tag — solution columns are lexical by design. Any other
+    expression typed ``str`` (CONCAT, STR, …, and IF/COALESCE over
+    them) binds a plain literal; an IRI-typed one, a plain variable
+    copy or a mix of kinds keeps the default kind."""
     from pyspark.sql import functions as F
 
     if var in df.columns:
         raise SparqlError(f"BIND target ?{var} is already bound")
-    col, _ = _compile_expr(tree, set(df.columns))
+    col, typ = _compile_expr(tree, set(df.columns))
     df = df.withColumn(var, col)
     if isinstance(tree, tuple) and tree[0] == "fn" and tree[1] in (
         "STRLANG", "STRDT",
@@ -142,6 +145,11 @@ def _bind_column(df: DataFrame, var: str, tree: tuple) -> DataFrame:
             df = df.withColumn(f"{var}__dt", tag)
             df = df.withColumn(f"{var}__lang", F.lit(None).cast("string"))
         df = df.withColumn(f"{var}__kind", F.lit("literal"))
+    elif typ == "str":
+        none = F.lit(None).cast("string")
+        df = df.withColumns(
+            {f"{var}__kind": F.lit("literal"), f"{var}__dt": none, f"{var}__lang": none}
+        )
     return df
 
 

@@ -331,7 +331,9 @@ def _as_bool(col, typ):
 
 
 def _compile_expr(tree: tuple, bound: set[str]):
-    """AST → (Catalyst Column, type tag ∈ num|str|bool|term)."""
+    """AST → (Catalyst Column, type tag ∈ num|str|iri|bool|term): ``str``
+    is a string literal's lexical form, ``iri`` an IRI's; both are
+    string columns."""
     from pyspark.sql import functions as F
 
     kind = tree[0]
@@ -346,7 +348,7 @@ def _compile_expr(tree: tuple, bound: set[str]):
         v = tree[1]
         return F.lit(v), "num"
     if kind in ("str", "iri"):
-        return F.lit(tree[1]), "str"
+        return F.lit(tree[1]), kind
     if kind == "boollit":
         return F.lit(tree[1]), "bool"
     if kind == "or":
@@ -523,8 +525,8 @@ def _compile_fn(name: str, args: list[tuple], bound: set[str]):
         _fn_arity(name, args, 1)
         mc = _meta_col(args, name, "dt", bound)
         if mc is None:
-            return F.lit(None).cast("string"), "str"
-        return mc, "str"
+            return F.lit(None).cast("string"), "iri"
+        return mc, "iri"
     if name in ("ISIRI", "ISURI"):
         _fn_arity(name, args, 1)
         mc = _meta_col(args, name, "kind", bound)
@@ -701,7 +703,7 @@ def _compile_fn(name: str, args: list[tuple], bound: set[str]):
         # passes through lexically (no base resolution at runtime)
         _fn_arity(name, args, 1)
         c, t = _compile_expr(args[0], bound)
-        return _as_str(c, t), "str"
+        return _as_str(c, t), "iri"
     if name in ("STRLANG", "STRDT"):
         # constructed-literal value (lexical column); when this call is
         # the TOP level of a BIND, sparql._bind_column additionally
@@ -738,7 +740,7 @@ def _compile_fn(name: str, args: list[tuple], bound: set[str]):
         # fresh blank node per solution row; blank nodes are skolem
         # IRIs in this engine (A10)
         _fn_arity(name, args, 0)
-        return F.concat(F.lit("urn:skolem:bnode:"), F.expr("uuid()")), "str"
+        return F.concat(F.lit("urn:skolem:bnode:"), F.expr("uuid()")), "iri"
     if name == "NOW":
         # fixed for the whole query (SPARQL 1.1 §17.4.5.1): captured on
         # the FIRST NOW() of a query compile and reused for every other
@@ -754,7 +756,7 @@ def _compile_fn(name: str, args: list[tuple], bound: set[str]):
         return F.lit(_QUERY_NOW[0]), "str"
     if name == "UUID":
         _fn_arity(name, args, 0)
-        return F.concat(F.lit("urn:uuid:"), F.expr("uuid()")), "str"
+        return F.concat(F.lit("urn:uuid:"), F.expr("uuid()")), "iri"
     if name == "STRUUID":
         _fn_arity(name, args, 0)
         return F.expr("uuid()"), "str"

@@ -451,27 +451,21 @@ def execute_update(
         # imported at call time to keep the module DAG acyclic
         from tripleforge.sparql import _instantiate, _solutions
 
-        store = catalog.read_statements()
-        nb = catalog.n_buckets
-        if where_dataset is not None:
-            store, groups, nb = _apply_dataset(
-                store, groups, where_dataset, nb
+        def where(store):
+            # evaluated by modify on the snapshot it commits against
+            blocks, nb = groups, catalog.n_buckets
+            if where_dataset is not None:
+                store, blocks, nb = _apply_dataset(store, blocks, where_dataset, nb)
+            # the WHERE clause is a full GroupGraphPattern: a multi-group
+            # parse is a top-level UNION, evaluated exactly as in SELECT
+            # (r5d lift — was a loud "UNION is not supported in updates")
+            sol = _solutions(store, blocks, carry_meta=True, n_buckets=nb)
+            return tuple(
+                canonicalize(_instantiate(sol, tmpl, with_graph)) if tmpl else None
+                for tmpl in (delete_tmpl, insert_tmpl)
             )
-        # the WHERE clause is a full GroupGraphPattern: a multi-group
-        # parse is a top-level UNION, evaluated exactly as in SELECT
-        # (r5d lift — was a loud "UNION is not supported in updates")
-        sol = _solutions(store, groups, carry_meta=True, n_buckets=nb)
-        deletes = (
-            canonicalize(_instantiate(sol, delete_tmpl, with_graph))
-            if delete_tmpl
-            else None
-        )
-        inserts = (
-            canonicalize(_instantiate(sol, insert_tmpl, with_graph))
-            if insert_tmpl
-            else None
-        )
-        return update_mod.modify(catalog, deletes, inserts, run_id=run_id)
+
+        return update_mod.modify(catalog, where, run_id=run_id)
     raise SparqlError("expected LOAD, INSERT, or DELETE")
 
 

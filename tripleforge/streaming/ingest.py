@@ -2,11 +2,9 @@
 
 The reference is batch-only; this is the idiomatic-Spark extension for
 continuous corpus arrival, kept semantically identical to the batch
-path by reusing the batch build's prefix (``pipeline.parse_step`` and
-``pipeline.link_step``) and its ``pipeline.shape_for_commit``
-(unit-scoped lineage dedup + global dedup + bucket-pruned live
-anti-join) inside ``foreachBatch`` — one source of truth for
-parse/canon/dedup/commit semantics (D9).
+path because ``foreachBatch`` commits each micro-batch with
+``pipeline.build`` — one source of truth for parse/canon/dedup/commit
+semantics, lineage and the parse's single materialization (D9).
 
 - D1: file-source stream over the corpus directory (explicit schema).
 - D2/D8: watermark on ingest time bounds state; late rows beyond it are
@@ -17,7 +15,9 @@ parse/canon/dedup/commit semantics (D9).
 - D9: ``foreachBatch`` commits each micro-batch as one catalog snapshot
   with run_id = f"stream-{batch_id}" — Spark replays a failed batch
   with the SAME id, and the catalog's idempotent commit turns the
-  replay into a no-op: exactly-once sink semantics.
+  replay into a no-op: exactly-once sink semantics. Resume is off: a
+  (repo, commit) unit whose files land in two micro-batches commits
+  both halves.
 - D10 (non-goal): incremental connected components is not streamable
   with bounded state; linking runs as periodic batch compaction over
   committed snapshots.
@@ -26,12 +26,13 @@ parse/canon/dedup/commit semantics (D9).
 from __future__ import annotations
 
 import os
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, TimestampType
 
-from tripleforge import lineage, pipeline
+from tripleforge import pipeline
 from tripleforge.catalog.base import Catalog
 from tripleforge.pipeline import BuildConfig
 from tripleforge.schema import CORPUS
@@ -135,17 +136,8 @@ def incremental_build(
         corpus = batch_df.select(*[f.name for f in CORPUS.fields])
         if corpus.isEmpty():
             return
-        # the build prefix WITHOUT transform's batch-global dedup: commit
-        # shaping (unit dedup for lineage attribution + global dedup +
-        # live anti-join) is shared with the batch build — one source of
-        # truth, and cross-micro-batch appends stay set-semantic.
-        _, stmts, errors = pipeline.parse_step(corpus, cfg)
-        unit_deduped, data = pipeline.shape_for_commit(
-            pipeline.link_step(stmts, cfg), catalog
-        )
-        # idempotent per batch_id → replays are no-ops (exactly-once)
-        catalog.commit_snapshot(
-            data, lineage.collect(unit_deduped, errors), run_id=f"stream-{batch_id}"
+        pipeline.build(
+            spark, corpus, catalog, replace(cfg, run_id=f"stream-{batch_id}", resume=False)
         )
 
     writer = (

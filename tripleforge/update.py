@@ -9,7 +9,8 @@ committed as a new catalog snapshot.
   append snapshot (the build's commit shaping appends the same way)
 - delete_data rewrites only the live paths holding a deleted row;
   modify, clear and compact_store rewrite the live paths of the graph
-  buckets they touch → one path-scoped overwrite (:func:`_overwrite`)
+  buckets they touch, and ``pipeline.compact_links`` the whole store →
+  one path-scoped overwrite (:func:`overwrite`), pinned to one snapshot
 
 A DATA batch parsed on the driver stays there: the caller hands it in
 as a LocalRelation (canonicalized in-process) with its touched buckets
@@ -113,29 +114,6 @@ def _under(paths: list[str]) -> Column:
     return cond
 
 
-def _bucket_paths(catalog: Catalog, touched: set[int] | None) -> list[str] | None:
-    """Live paths that may hold rows of the ``touched`` graph buckets:
-    each path of a touched bucket, and each path with no bucket segment
-    (a pre-bucketing whole-snapshot entry holds rows of every bucket).
-    None when ``touched`` is None or the catalog is not path-addressed."""
-    paths = catalog.live_paths()
-    if touched is None or paths is None:
-        return None
-    return [p for p in paths if _bucket_of(p) in touched | {None}]
-
-
-def _keep_paths(catalog: Catalog, rewrite: list[str] | None) -> list[str] | None:
-    """Live paths a mutation carries over verbatim: every live path it
-    does not ``rewrite``. None — the caller rewrites everything it
-    reads — when ``rewrite`` is None or the catalog is not
-    path-addressed."""
-    paths = catalog.live_paths()
-    if rewrite is None or paths is None:
-        return None
-    rewrite = set(rewrite)
-    return [p for p in paths if p not in rewrite]
-
-
 def _conform(stmts: DataFrame) -> DataFrame:
     """Fill lineage columns absent from a user-supplied statement batch."""
     out = stmts
@@ -226,26 +204,42 @@ def anti_join_live(
     return _anti_on_quad_key(batch, live)
 
 
-def _overwrite(
+def overwrite(
     catalog: Catalog,
-    paths: list[str] | None,
+    sid: int | None,
+    touched: set[int] | None,
     rewrite: Callable[[DataFrame], DataFrame],
     op: str,
     run_id: str | None,
+    holding: DataFrame | None = None,
 ) -> int:
-    """Path-scoped overwrite, the commit path of every mutation that
-    drops rows: read the rows under the live ``paths`` (None: the whole
-    store), ``rewrite`` them, and commit the result as an overwrite that
+    """Path-scoped overwrite, the one live store → rewrite commit (every
+    mutation that drops rows, and ``pipeline.compact_links``): read the
+    live paths of the ``touched`` graph buckets (None: the whole store)
+    — with ``holding``, only those holding one of its quads —
+    ``rewrite`` their rows, and commit the result as an overwrite that
     carries every other live path into the new snapshot verbatim
     (byte-identical, never re-read — the Iceberg partition-level-
     overwrite shape; VERDICT r1: a full-table rewrite per small mutation
-    does not survive a 100 TB store). Overwrite-while-reading is safe:
-    snapshot data dirs are immutable (the commit writes a NEW
-    snap=<id> directory; prior files are only dropped from live_paths,
-    never touched)."""
-    live = catalog.read_statements()
-    keep = _keep_paths(catalog, paths)
-    if keep is not None:
+    does not survive a 100 TB store).
+
+    ``sid`` is the snapshot the caller pinned before its first read of
+    the store (``catalog.latest_snapshot_id()``; None: the empty store).
+    Every read here is of it too, and the commit is told which one: a
+    commit published after it makes the overwrite raise
+    ``ConcurrentOverwriteError`` instead of dropping that commit's rows.
+    Overwrite-while-reading is safe: snapshot data dirs are immutable
+    (the commit writes a NEW snap=<id> directory; prior files are only
+    dropped from live_paths, never touched)."""
+    live, all_paths = catalog.read_statements(sid), catalog.live_paths(sid)
+    keep = None  # None: replace everything (whole store, or not path-addressed)
+    if touched is not None and all_paths is not None:
+        # a path with no bucket segment (a pre-bucketing whole-snapshot
+        # entry) holds rows of every bucket
+        paths = [p for p in all_paths if _bucket_of(p) in touched | {None}]
+        if holding is not None:
+            paths = _paths_holding(live, paths, holding)
+        keep = [p for p in all_paths if p not in paths]
         live = live.where(_under(paths))
     data, lin = observed_lineage(
         rewrite(live).select(*[f.name for f in STATEMENT.fields]), op
@@ -256,6 +250,7 @@ def _overwrite(
         run_id=run_id or uuid.uuid4().hex,
         operation="overwrite",
         replace_paths=keep,
+        base_snapshot_id=sid or 0,
     )
 
 
@@ -279,17 +274,22 @@ def insert_data(
 
 def modify(
     catalog: Catalog,
-    deletes: DataFrame | None = None,
-    inserts: DataFrame | None = None,
+    where: Callable[[DataFrame], tuple[DataFrame | None, DataFrame | None]],
     run_id: str | None = None,
     touched: set[int] | None = None,
 ) -> int:
     """SPARQL 1.1 Modify (§3.1.3): apply deletions then insertions,
     both evaluated against the pre-update store, in ONE snapshot
-    commit. Partition-scoped: only the live paths of graph buckets
-    touched by either side are read/rewritten; every other data file
-    carries over verbatim. A quad both deleted and inserted ends up
-    present (insert happens after delete)."""
+    commit. ``where`` maps the live store to the (deletes, inserts)
+    pair, either side None; it is called on the snapshot the overwrite
+    reads and commits against, so a commit published before that pin
+    is matched, and one published after it raises. Partition-scoped:
+    only the live paths of graph buckets touched by either side
+    (``touched``, when the caller knows them) are read/rewritten; every
+    other data file carries over verbatim. A quad both deleted and
+    inserted ends up present (insert happens after delete)."""
+    sid = catalog.latest_snapshot_id()
+    deletes, inserts = where(catalog.read_statements(sid))
     if deletes is None and inserts is None:
         raise ValueError("modify() needs deletes and/or inserts")
     probe = touched is None
@@ -311,7 +311,7 @@ def modify(
             return remaining
         return remaining.unionByName(_anti_on_quad_key(inserts, remaining))
 
-    return _overwrite(catalog, _bucket_paths(catalog, touched), rewrite, "modify", run_id)
+    return overwrite(catalog, sid, touched, rewrite, "modify", run_id)
 
 
 def clear(
@@ -334,8 +334,9 @@ def clear(
         target = graph if which == "graph" else None
         cond = F.col("graph").eqNullSafe(F.lit(target))
         touched = _graph_buckets([target], catalog.n_buckets)
-    return _overwrite(
-        catalog, _bucket_paths(catalog, touched), lambda live: live.where(~cond), "clear", run_id
+    return overwrite(
+        catalog, catalog.latest_snapshot_id(), touched, lambda live: live.where(~cond),
+        "clear", run_id,
     )
 
 
@@ -357,19 +358,19 @@ def graph_op(
         raise ValueError(f"unknown graph op {op!r}")
     if src == dst:
         return catalog.latest_snapshot_id() or 0  # no-op per spec
+    is_src = F.col("graph").eqNullSafe(F.lit(src))
+    is_dst = F.col("graph").eqNullSafe(F.lit(dst))
+    dropped = {"add": None, "copy": is_dst, "move": is_src | is_dst}[op]
     # the touched graphs are the two constants — their buckets come from
     # a driver-resident probe (no live scan), and every read is pruned to them
     buckets = _graph_buckets([src, dst], catalog.n_buckets)
-    live = restrict_to_buckets(catalog.read_statements(), sorted(buckets))
-    src_rows = live.where(F.col("graph").eqNullSafe(F.lit(src)))
-    inserts = src_rows.withColumn("graph", F.lit(dst))
-    deletes = None
-    if op in ("copy", "move"):
-        deletes = live.where(F.col("graph").eqNullSafe(F.lit(dst)))
-    if op == "move":
-        d2 = src_rows
-        deletes = deletes.unionByName(d2) if deletes is not None else d2
-    return modify(catalog, deletes, inserts, run_id=run_id, touched=buckets)
+
+    def where(live: DataFrame) -> tuple[DataFrame | None, DataFrame]:
+        live = restrict_to_buckets(live, sorted(buckets))
+        deletes = live.where(dropped) if dropped is not None else None
+        return deletes, live.where(is_src).withColumn("graph", F.lit(dst))
+
+    return modify(catalog, where, run_id=run_id, touched=buckets)
 
 
 def _paths_holding(live: DataFrame, paths: list[str], batch: DataFrame) -> list[str]:
@@ -397,7 +398,7 @@ def delete_data(
     touched: set[int] | None = None,
 ) -> int:
     """DELETE DATA [FROM GRAPH <graph>]: a path-granular overwrite
-    (:func:`_overwrite`). Of the live paths of the graph buckets the
+    (:func:`overwrite`). Of the live paths of the graph buckets the
     batch touches, only those holding a deleted row are read and
     rewritten; every other path carries over verbatim, and deleting
     only absent triples writes no data file. Its lineage ``n_triples``
@@ -409,11 +410,9 @@ def delete_data(
     )
     if touched is None:
         touched = set(touched_buckets(batch, catalog.n_buckets))
-    paths = _bucket_paths(catalog, touched)
-    if paths is not None:
-        paths = _paths_holding(catalog.read_statements(), paths, batch)
-    return _overwrite(
-        catalog, paths, lambda live: _anti_on_quad_key(live, batch), "delete_data", run_id
+    return overwrite(
+        catalog, catalog.latest_snapshot_id(), touched,
+        lambda live: _anti_on_quad_key(live, batch), "delete_data", run_id, holding=batch,
     )
 
 
@@ -432,13 +431,12 @@ def compact_store(
     appends leave a bucket's rows scattered over N directories, and a
     bound-graph read opens N files; compaction restores one-dir-per-
     bucket without touching cold buckets."""
-    paths = catalog.live_paths()
+    sid = catalog.latest_snapshot_id()
+    paths = catalog.live_paths(sid)
     if not paths:
         return None
     cnt = Counter(_bucket_of(p) for p in paths)
     touched = {b for b, n in cnt.items() if b is not None and n >= min_dirs}
     if not touched and None not in cnt:
         return None
-    return _overwrite(
-        catalog, _bucket_paths(catalog, touched), lambda live: live, "compact_store", run_id
-    )
+    return overwrite(catalog, sid, touched, lambda live: live, "compact_store", run_id)
