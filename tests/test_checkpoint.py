@@ -221,6 +221,26 @@ def test_insert_is_set_semantic(spark, cat_root):
     assert cat.read_statements().count() == 1
 
 
+def test_insert_batch_duplicates_and_null_keys(spark, cat_root):
+    """A batch holding one quad twice inserts it once. A null and an
+    empty obj_lang are different quads: both are inserted, re-inserting
+    either is a no-op, and deleting one leaves the other."""
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    ddl = "subj string, pred string, obj string, obj_kind string, obj_lang string"
+    null_lang, empty_lang = ("http://s", "http://p", "o", "literal", None), ("http://s", "http://p", "o", "literal", "")
+    batch = spark.createDataFrame([null_lang, null_lang, empty_lang], ddl)
+    update.insert_data(cat, batch, graph="urn:g", run_id="i1")
+    assert cat.read_statements().count() == 2
+    update.insert_data(cat, spark.createDataFrame([empty_lang], ddl), graph="urn:g", run_id="i2")
+    assert cat.read_statements().count() == 2
+    n_triples = {
+        r.run_id: r.n_triples for r in cat.read_lineage().select("run_id", "n_triples").collect()
+    }
+    assert n_triples == {"i1": 2, "i2": 0}
+    update.delete_data(cat, spark.createDataFrame([null_lang], ddl), graph="urn:g", run_id="d1")
+    assert [r.obj_lang for r in cat.read_statements().collect()] == [""]
+
+
 def test_delete_data(spark, cat_root):
     cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
     rows = spark.createDataFrame(
@@ -911,3 +931,91 @@ def test_overwrite_commit_needs_the_snapshot_it_read(spark, cat_root):
     with pytest.raises(ValueError, match="base_snapshot_id"):
         cat.commit_snapshot(row, row, run_id="o1", operation="overwrite")
     assert cat.latest_snapshot_id() is None
+
+
+# ---------------------------------------------------------------------------
+# One manifest parsed per op; a rebase re-stamps the lineage it computed
+# ---------------------------------------------------------------------------
+def test_ops_parse_one_manifest_on_a_long_snapshot_log(spark, cat_root, monkeypatch):
+    """A manifest is chosen by its file name: telling the latest id
+    parses none, and a read, a live-path listing or a commit parses one
+    or two, however many snapshots the log holds (50 here)."""
+    import json
+
+    from tripleforge.catalog import parquet_snapshot
+
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    update.insert_data(cat, _one_row(spark, "http://s0"), graph="urn:g", run_id="i0")
+    with open(os.path.join(cat_root, "_snapshots", "v1.json")) as fh:
+        first = json.load(fh)
+    for sid in range(2, 51):
+        with open(os.path.join(cat_root, "_snapshots", f"v{sid}.json"), "w") as fh:
+            json.dump({**first, "snapshot_id": sid, "run_id": f"r{sid}", "parent": sid - 1}, fh)
+    parsed = []
+
+    class CountingJson:
+        dump, dumps = staticmethod(json.dump), staticmethod(json.dumps)
+
+        @staticmethod
+        def load(fh):
+            parsed.append(fh)
+            return json.load(fh)
+
+        @staticmethod
+        def loads(text):
+            parsed.append(text)
+            return json.loads(text)
+
+    monkeypatch.setattr(parquet_snapshot, "json", CountingJson)
+
+    def parses(fn):
+        parsed.clear()
+        fn()
+        return len(parsed)
+
+    assert parses(cat.latest_snapshot_id) == 0
+    assert parses(cat.read_statements) == 1
+    assert parses(lambda: cat.live_paths(20)) == 1
+    insert = lambda subj, rid: update.insert_data(  # noqa: E731
+        cat, _one_row(spark, subj), graph="urn:g", run_id=rid
+    )
+    # the probe's read and the commit's parent
+    assert parses(lambda: insert("http://s1", "i1")) == 2
+    assert cat.latest_snapshot_id() == 51
+    # an already-committed run id: the probe's read and the one manifest holding it
+    assert parses(lambda: insert("http://s2", "r20")) == 2
+    assert cat.latest_snapshot_id() == 51
+    assert _subjects(cat) == {"http://s0", "http://s1"}
+
+
+def test_rebased_build_restamps_the_lineage_it_computed_once(spark, cat_root, monkeypatch):
+    """A build whose commit meets a concurrent one after reserving its
+    id rebases onto it: its lineage rows carry the final snapshot id,
+    and their aggregate ran once (the rebase re-stamps the same rows)."""
+    cat = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+    update.insert_data(cat, _one_row(spark, "http://a"), graph="urn:g", run_id="i1")
+    frame = type(spark.range(1))
+    to_arrow, collected = frame.toArrow, []
+
+    def counted(df):
+        collected.append(df)
+        return to_arrow(df)
+
+    monkeypatch.setattr(frame, "toArrow", counted)
+    orig = cat._reserve_sid
+
+    def racy_reserve(after):
+        sid = orig(after)
+        cat._reserve_sid = orig
+        other = ParquetSnapshotCatalog(spark, cat_root, n_buckets=4)
+        update.insert_data(other, _one_row(spark, "http://concurrent"), graph="urn:g", run_id="race")
+        return sid
+
+    cat._reserve_sid = racy_reserve
+    res = build(spark, _corpus(spark), cat, BuildConfig(run_id="b1", link_entities=False))
+    assert len(collected) == 1
+    assert res.snapshot_id == cat.latest_snapshot_id() == 4  # 2 reserved, 3 the race
+    lin = cat.read_lineage().where(F.col("run_id") == "b1")
+    assert {r.snapshot_id for r in lin.select("snapshot_id").collect()} == {4}
+    assert lin.agg(F.sum("n_triples")).first()[0] == res.n_statements > 0
+    assert {"http://a", "http://concurrent"} <= _subjects(cat)

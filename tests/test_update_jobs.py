@@ -1,9 +1,12 @@
 """Fixed per-call Spark jobs on the serve path: a catalog read, the
-graph-bucket probe of a DATA batch and one INSERT/DELETE DATA stay
-within their job counts, counted per job group."""
+collect of a DATA batch, a mutation's lineage write and one
+INSERT/DELETE DATA stay within their job counts, counted per job group;
+and reads between two commits reuse one resolved read."""
 
 from __future__ import annotations
 
+import json
+import os
 import uuid
 
 import pytest
@@ -13,7 +16,7 @@ from tripleforge import ops, update
 from tripleforge.catalog import ParquetSnapshotCatalog
 from tripleforge.datagen import CorpusSpec, corpus_df
 from tripleforge.pipeline import BuildConfig, build
-from tripleforge.schema import STATEMENT_QUAD_KEY
+from tripleforge.schema import LINEAGE, STATEMENT_QUAD_KEY
 from tripleforge.sparql_update import _data_batch, execute_update, parse_update
 
 
@@ -50,14 +53,18 @@ def test_catalog_reads_run_no_job(spark, served):
 
 
 def test_data_batch_buckets_run_no_job(spark, served):
+    """The one collect of a DATA batch (graph-assigned, bucketed, keyed
+    and de-duplicated) runs no job, and its buckets are the ones the
+    distributed probe finds."""
     graphs = " ".join(f"GRAPH <urn:h{i}> {{ {_TRIPLES} }}" for i in range(4))
-    _, _, rows = parse_update(f"INSERT DATA {{ {_TRIPLES} {graphs} }}")
+    _, _, rows = parse_update(f"INSERT DATA {{ {_TRIPLES} {_TRIPLES} {graphs} }}")
     batch = _data_batch(spark, rows)
-    touched, n = _jobs(spark, lambda: update.local_buckets(batch, served.n_buckets, "urn:g"))
+    got, n = _jobs(spark, lambda: update.collect_batch(batch, served.n_buckets, "urn:g"))
     assert n == 0
     assigned = ops.assign_graph(update._conform(batch), override="urn:g")
-    assert touched == set(update.touched_buckets(assigned, served.n_buckets))
-    assert len(touched) > 1
+    assert got.buckets == set(update.touched_buckets(assigned, served.n_buckets))
+    assert len(got.buckets) > 1
+    assert len(got.rows) == assigned.dropDuplicates(STATEMENT_QUAD_KEY).count() == 15
 
 
 def test_graph_probe_runs_no_job(spark, served):
@@ -77,8 +84,59 @@ def test_data_updates_stay_within_their_job_counts(spark, served):
         spark, lambda: execute_update(spark, served, f"DELETE DATA {{ GRAPH <urn:g> {{ {_TRIPLES} }} }}")
     )
     assert served.read_statements().count() == before
-    assert n_insert <= 5
-    assert n_delete <= 7
+    assert n_insert <= 3
+    assert n_delete <= 3
+
+
+def test_mutation_lineage_write_runs_no_job(spark, served):
+    """A mutation's lineage row is counted by the write it rides and
+    written from the driver: the lineage write itself runs no job."""
+    data, lineage = update.observed_lineage(served.read_statements(), "probe")
+    n_rows = data.count()
+    rel, n = _jobs(spark, lambda: served._write_lineage(lineage(), "lin", 99))
+    assert n == 0
+    (row,) = spark.read.schema(LINEAGE).parquet(os.path.join(served.root, rel)).collect()
+    assert (row.run_id, row.snapshot_id, row.parser, row.n_triples) == ("lin", 99, "probe", n_rows)
+    assert row.committed_at is not None
+
+
+def test_a_second_read_of_a_snapshot_reuses_the_first(spark, served):
+    """Reads between two commits resolve the live paths once; each
+    caller still gets a Dataset of its own, so two reads join as two."""
+    first = served.read_statements()
+    kept = served._kept
+    second, n = _jobs(spark, served.read_statements)
+    assert n == 0
+    assert served._kept is kept
+    assert second is not first
+    n_rows = first.count()
+    assert update._on_quad_key(first, second, "left_semi").count() == n_rows
+    assert update._anti_on_quad_key(first, second).count() == 0
+
+
+def test_a_read_after_another_catalog_commits_sees_its_rows(spark, served):
+    before = served.read_statements().count()
+    other = ParquetSnapshotCatalog(spark, served.root)
+    execute_update(spark, other, f"INSERT DATA {{ GRAPH <urn:g> {{ {_TRIPLES} }} }}")
+    assert served.read_statements().count() == before + 3
+
+
+def test_a_republished_snapshot_id_is_read_over_its_new_live_set(spark, served):
+    """The kept read is keyed on the live paths, not on the snapshot id:
+    a committer that retracts its manifest republishes the same id over
+    another live set."""
+    sid = served.latest_snapshot_id()
+    before = served.read_statements().count()
+    manifest = os.path.join(served.root, "_snapshots", f"v{sid}.json")
+    with open(manifest) as fh:
+        m = json.load(fh)
+    dropped = m["live_paths"].pop()
+    n_dropped = spark.read.parquet(os.path.join(served.root, dropped)).count()
+    os.unlink(manifest)
+    with open(manifest, "w") as fh:
+        json.dump(m, fh)
+    assert served.latest_snapshot_id() == sid
+    assert served.read_statements().count() == before - n_dropped > 0
 
 
 def test_anti_join_ignores_duplicates_on_the_right(spark):

@@ -7,6 +7,7 @@ Checked properties:
 - parse: exactly ONE Python map stage (MapInArrow), no `content` above it
 - broadcast dims actually broadcast (BroadcastHashJoin)
 - lineage: one aggregate, so exactly one exchange
+- a DATA update's live-store probe: one bucket-pruned scan, no exchange
 - dedup: partial_ + final HashAggregate around one exchange
 - rewrite joins broadcast the CC mapping
 - topk: TakeOrderedAndProject (no global sort)
@@ -202,6 +203,27 @@ def main() -> int:
         if not ok:
             failures.append("bound-graph query does not partition-prune")
         print("bound_graph_partition_pruning | PartitionFilters:", ok, flush=True)
+
+        # 6d. a DATA update's probe of the live store (INSERT: its quads
+        # already live; DELETE: the paths holding one) is one scan stage
+        # of the batch's graph buckets, with no exchange
+        from tripleforge.sparql_update import _data_batch, parse_update
+        from tripleforge.update import collect_batch, probe
+
+        _, _, quads = parse_update(
+            "INSERT DATA { GRAPH <urn:g3> { <urn:s3> <urn:p> <urn:o> . <urn:s8> <urn:p> <urn:o> } }"
+        )
+        batch = collect_batch(_data_batch(spark, quads), cat.n_buckets)
+        audit(
+            "data_update_probe",
+            probe(cat.read_statements(), batch),
+            [
+                ("graph_bucket in PartitionFilters", r"PartitionFilters: \[[^\]]*graph_bucket", True),
+                ("subject filter pushed to parquet", r"PushedFilters: \[[^\]]*In\(subj", True),
+                ("one scan", r"\(\d+\) Scan parquet[\s\S]*\(\d+\) Scan parquet", False),
+                ("no exchange", r"Exchange", False),
+            ],
+        )
     finally:
         shutil.rmtree(cat_root, ignore_errors=True)
 

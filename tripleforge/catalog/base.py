@@ -12,11 +12,13 @@ real cluster where the jar exists.
 
 from __future__ import annotations
 
+import time
 from abc import ABC, abstractmethod
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from tripleforge.io import N_GRAPH_BUCKETS
 from tripleforge.schema import LINEAGE
@@ -27,10 +29,10 @@ class Catalog(ABC):
 
     Every write goes through :meth:`commit_snapshot`. Writers hand it
     lineage rows of ``(repo, commit, parser, n_files, n_triples,
-    n_errors, checksum)`` only; the catalog stamps ``run_id``,
-    ``snapshot_id`` and ``committed_at`` and projects to
-    ``schema.LINEAGE`` (:func:`stamp_lineage`), so ``read_lineage`` has
-    one shape whatever kind of commit came first.
+    n_errors, checksum)`` only, as a ``pa.Table`` on the driver; the
+    catalog stamps ``run_id``, ``snapshot_id`` and ``committed_at`` and
+    projects to ``schema.LINEAGE`` (:func:`stamp_lineage`), so
+    ``read_lineage`` has one shape whatever kind of commit came first.
 
     Reads are typed: :meth:`read_statements` and :meth:`read_lineage`
     pass their declared schema, so building the DataFrame runs no
@@ -51,7 +53,7 @@ class Catalog(ABC):
     def commit_snapshot(
         self,
         statements: DataFrame,
-        lineage: DataFrame | Callable[[], DataFrame],
+        lineage: pa.Table | Callable[[], pa.Table],
         run_id: str,
         operation: str = "append",
         replace_paths: list[str] | None = None,
@@ -68,17 +70,25 @@ class Catalog(ABC):
         a snapshot published after it raises a conflict instead of being
         dropped.
 
-        ``lineage`` may be a zero-arg callable resolved AFTER the
+        ``lineage`` is a handful of rows on the driver (a ``pa.Table``),
+        or a zero-arg callable returning one, resolved once AFTER the
         statement write: callers attach ``df.observe()`` counters to
-        the statement plan and derive lineage rows from them, so one
-        scan feeds both the data files and the metrics (VERDICT r2:
-        count-then-write read every touched bucket twice). An
-        idempotent re-commit writes nothing and never calls it, so a
-        caller reads such counters only if its callable ran."""
+        the statement plan, or aggregate a frame the write has just
+        cached, and derive the rows from that, so one scan feeds both
+        the data files and the metrics (VERDICT r2: count-then-write
+        read every touched bucket twice). An idempotent re-commit
+        writes nothing and never calls it. The rows are stamped per
+        snapshot id they are published under (a commit that rebases
+        onto a newer parent re-stamps the same rows; it never
+        re-evaluates them) and written from the driver, with no Spark
+        job."""
 
     @abstractmethod
     def read_statements(self, snapshot_id: int | None = None) -> DataFrame:
-        """All live statements as of ``snapshot_id`` (default: latest)."""
+        """All live statements as of ``snapshot_id`` (default: latest).
+        Every call returns a DataFrame of its own, so a caller may
+        combine two reads (a mutation joins its rewrite with rows it
+        read before)."""
 
     @abstractmethod
     def read_lineage(self) -> DataFrame:
@@ -100,16 +110,25 @@ class Catalog(ABC):
         return self.read_lineage().select("repo", "commit").dropDuplicates()
 
 
-def stamp_lineage(lineage: DataFrame, run_id: str, snapshot_id: int) -> DataFrame:
+# schema.LINEAGE in Arrow: timestamps as UTC microseconds, which Spark
+# reads back as its TimestampType
+_LINEAGE_ARROW = to_arrow_schema(LINEAGE)
+
+
+def stamp_lineage(lineage: pa.Table, run_id: str, snapshot_id: int) -> pa.Table:
     """A writer's lineage rows with the commit's ``run_id``,
     ``snapshot_id`` and ``committed_at`` stamped on, projected to
-    ``schema.LINEAGE``."""
+    ``schema.LINEAGE`` (the writers' columns pass through by name)."""
+    n = lineage.num_rows
     stamps = {
-        "run_id": F.lit(run_id),
-        "snapshot_id": F.lit(snapshot_id).cast("long"),
-        "committed_at": F.current_timestamp(),
+        "run_id": pa.array([run_id] * n, pa.string()),
+        "snapshot_id": pa.array([snapshot_id] * n, pa.int64()),
+        "committed_at": pa.array([int(time.time() * 1e6)] * n, pa.int64()),
     }
-    # writers' columns pass through by name: one projection, no per-column casts
-    return lineage.select(
-        *[stamps[n].alias(n) if n in stamps else n for n in LINEAGE.fieldNames()]
+    return pa.table(
+        [
+            (stamps[f.name] if f.name in stamps else lineage[f.name]).cast(f.type)
+            for f in _LINEAGE_ARROW
+        ],
+        schema=_LINEAGE_ARROW,
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,7 +36,7 @@ class IcebergCatalog(Catalog):
     def commit_snapshot(
         self,
         statements: DataFrame,
-        lineage: DataFrame | Callable[[], DataFrame],
+        lineage: pa.Table | Callable[[], pa.Table],
         run_id: str,
         operation: str = "append",
         replace_paths: list[str] | None = None,
@@ -72,7 +73,11 @@ class IcebergCatalog(Catalog):
                 "ORDER BY committed_at DESC LIMIT 1"
             ).first()["snapshot_id"]
         )
-        stamp_lineage(lineage, run_id, snap).writeTo(self.lineage_table).append()
+        # the stamped rows are driver-resident: a LocalRelation append
+        # (unverified — no Iceberg runtime jar is available to run it)
+        self.spark.createDataFrame(stamp_lineage(lineage, run_id, snap)).writeTo(
+            self.lineage_table
+        ).append()
         return int(snap)
 
     def read_statements(self, snapshot_id: int | None = None) -> DataFrame:

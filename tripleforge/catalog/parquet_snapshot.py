@@ -12,9 +12,10 @@ Commit protocol (exactly-once without Iceberg):
 2. the manifest (listing the COMPLETE live data-path set after this
    snapshot, Iceberg-style) is written to a temp name and
    ``os.rename``-ed into place — atomic on POSIX;
-3. readers resolve the latest ``v*.json`` and read exactly its
-   ``live_paths`` — a torn/failed run's orphan directories are
-   invisible because no manifest references them;
+3. readers resolve the latest ``v*.json`` by file name, parse only
+   that manifest and read exactly its ``live_paths`` — a torn/failed
+   run's orphan directories are invisible because no manifest
+   references them;
 4. idempotence: a manifest with the same ``run_id`` short-circuits
    re-commit, so a retried driver can't double-append (A22).
 
@@ -26,10 +27,13 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 from collections.abc import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,11 +59,17 @@ class ConcurrentOverwriteError(RuntimeError):
         self.conflicting = other
 
 
+_MANIFEST = re.compile(r"v(\d+)\.json")
+
+
 class ParquetSnapshotCatalog(Catalog):
     def __init__(self, spark: SparkSession, root: str, n_buckets: int = N_GRAPH_BUCKETS):
         self.spark = spark
         self.root = root
         self.n_buckets = n_buckets
+        # (live paths, the DataFrame resolved over them): the last read,
+        # kept so reads between two commits list and analyze it once
+        self._kept: tuple[tuple[str, ...], DataFrame] | None = None
         os.makedirs(os.path.join(root, "_snapshots"), exist_ok=True)
         # the PHYSICAL layout's bucket count always wins over the ctor
         # arg — graph_bucket pruning computed with the wrong modulus
@@ -72,35 +82,58 @@ class ParquetSnapshotCatalog(Catalog):
     def _snap_dir(self) -> str:
         return os.path.join(self.root, "_snapshots")
 
-    def _manifests(self) -> list[dict]:
-        out = []
-        for f in sorted(os.listdir(self._snap_dir())):
-            if f.startswith("v") and f.endswith(".json"):
-                with open(os.path.join(self._snap_dir(), f)) as fh:
-                    out.append(json.load(fh))
-        return sorted(out, key=lambda m: m["snapshot_id"])
+    def _ids(self) -> list[int]:
+        """Published snapshot ids, ascending, from the manifest file
+        names: choosing a manifest parses none of them."""
+        return sorted(
+            int(m.group(1)) for f in os.listdir(self._snap_dir())
+            if (m := _MANIFEST.fullmatch(f))
+        )
+
+    def _load(self, sid: int) -> dict:
+        with open(os.path.join(self._snap_dir(), f"v{sid}.json")) as fh:
+            return json.load(fh)
 
     def latest_snapshot_id(self) -> int | None:
-        ms = self._manifests()
-        return ms[-1]["snapshot_id"] if ms else None
+        ids = self._ids()
+        return ids[-1] if ids else None
 
     def _manifest_for(self, snapshot_id: int | None) -> dict | None:
-        ms = self._manifests()
-        if not ms:
-            return None
-        if snapshot_id is None:
-            return ms[-1]
-        eligible = [m for m in ms if m["snapshot_id"] <= snapshot_id]
-        return eligible[-1] if eligible else None
+        """The manifest of the latest snapshot at or before
+        ``snapshot_id`` (default: the latest), the one file parsed."""
+        while True:
+            ids = [i for i in self._ids() if snapshot_id is None or i <= snapshot_id]
+            if not ids:
+                return None
+            try:
+                return self._load(ids[-1])
+            except FileNotFoundError:
+                continue  # retracted by a committer's gap check: list again
+
+    def _committed_sid(self, run_id: str) -> int | None:
+        """The snapshot ``run_id`` already committed, or None. Manifests
+        are written by ``json.dump`` with its default separators, so only
+        one whose text holds the run id's field is parsed."""
+        field = '"run_id": ' + json.dumps(run_id)
+        for sid in self._ids():
+            try:
+                with open(os.path.join(self._snap_dir(), f"v{sid}.json")) as fh:
+                    text = fh.read()
+            except FileNotFoundError:
+                continue
+            if field in text and (m := json.loads(text))["run_id"] == run_id:
+                return m["snapshot_id"]
+        return None
 
     # --- commit --------------------------------------------------------------
-    def _reserve_sid(self, parent: dict | None) -> int:
-        """Exclusive-create a reservation marker so two concurrent
+    def _reserve_sid(self, after: int | None) -> int:
+        """Exclusive-create a reservation marker for the first free id
+        above ``after`` (None: the empty store) so two concurrent
         committers (e.g. build and compact_links) can never share a
         snapshot id — ADVICE r1: a plain ``os.rename`` of the manifest
         silently clobbered the loser's commit. A crash after reserving
         just burns an id (the orphan marker is skipped forever)."""
-        sid = (parent["snapshot_id"] + 1) if parent else 1
+        sid = (after or 0) + 1
         while True:
             try:
                 fd = os.open(
@@ -115,7 +148,7 @@ class ParquetSnapshotCatalog(Catalog):
     def commit_snapshot(
         self,
         statements: DataFrame,
-        lineage: DataFrame | Callable[[], DataFrame],
+        lineage: pa.Table | Callable[[], pa.Table],
         run_id: str,
         operation: str = "append",
         replace_paths: list[str] | None = None,
@@ -123,15 +156,15 @@ class ParquetSnapshotCatalog(Catalog):
     ) -> int:
         if operation == "overwrite" and base_snapshot_id is None:
             raise ValueError("an overwrite needs the base_snapshot_id it read")
-        for m in self._manifests():
-            if m["run_id"] == run_id:
-                return m["snapshot_id"]  # idempotent re-commit
-        sid = self._reserve_sid(self._manifest_for(None))
+        done = self._committed_sid(run_id)
+        if done is not None:
+            return done  # idempotent re-commit
+        sid = self._reserve_sid(self.latest_snapshot_id())
 
         data_rel = f"data/snap={sid}"
         data_path = os.path.join(self.root, data_rel)
         (
-            with_graph_bucket(statements.select(*[f.name for f in STATEMENT.fields]), self.n_buckets)
+            with_graph_bucket(statements.selectExpr(*STATEMENT.fieldNames()), self.n_buckets)
             # hash on the bucket with no fixed count: each bucket still
             # lands in exactly one task (one file per graph_bucket dir),
             # while AQE coalesces the spark.sql.shuffle.partitions-wide
@@ -150,7 +183,8 @@ class ParquetSnapshotCatalog(Catalog):
         )
         # deferred lineage (base.Catalog contract): resolved only now,
         # after the statement write, so df.observe() counters attached
-        # to the statement plan are available — one scan, not two
+        # to the statement plan are available — one scan, not two — and
+        # only once: a rebase below re-stamps these rows
         if callable(lineage):
             lineage = lineage()
         # live paths are recorded at graph_bucket granularity so an
@@ -180,11 +214,12 @@ class ParquetSnapshotCatalog(Catalog):
             if operation == "overwrite" and parent_sid != base_snapshot_id:
                 raise ConcurrentOverwriteError(sid, parent_sid)
             if parent_sid >= sid:  # someone published past our reservation
-                sid = self._reserve_sid(parent)
+                sid = self._reserve_sid(parent_sid)
                 # data files stay at their original snap=<id> directory;
                 # only the manifest id moves forward (live_paths are
                 # plain path strings, so the reference stays valid) —
-                # but the lineage stamp must track the final sid
+                # but the lineage stamp must track the final sid: the
+                # same rows, re-stamped and written again
                 dst = os.path.join(self._snap_dir(), f"v{sid}.json")
                 lineage_rel = self._write_lineage(lineage, run_id, sid)
             if operation == "overwrite":
@@ -215,21 +250,25 @@ class ParquetSnapshotCatalog(Catalog):
             finally:
                 os.unlink(tmp)
             # validate: did anything publish between our parent and us?
-            gap = [
-                m["snapshot_id"]
-                for m in self._manifests()
-                if parent_sid < m["snapshot_id"] < sid
-            ]
+            gap = [i for i in self._ids() if parent_sid < i < sid]
             if not gap:
                 return sid
             os.unlink(dst)  # retract and retry the merge on a fresh parent
             if operation == "overwrite":
                 raise ConcurrentOverwriteError(sid, max(gap))
 
-    def _write_lineage(self, lineage: DataFrame, run_id: str, sid: int) -> str:
+    def _write_lineage(self, lineage: pa.Table, run_id: str, sid: int) -> str:
+        """Write the stamped rows from the driver: a few rows are one
+        small file, with no Spark job. Without the Arrow schema blob in
+        the footer (``store_schema=False``): Spark reads the columns by
+        their Parquet types."""
         rel = f"lineage/snap={sid}"
-        stamp_lineage(lineage, run_id, sid).write.mode("errorifexists").parquet(
-            os.path.join(self.root, rel)
+        out = os.path.join(self.root, rel)
+        os.makedirs(out)  # fails on an existing directory, like errorifexists
+        pq.write_table(
+            stamp_lineage(lineage, run_id, sid),
+            os.path.join(out, "part-00000.parquet"),
+            store_schema=False,
         )
         return rel
 
@@ -237,15 +276,27 @@ class ParquetSnapshotCatalog(Catalog):
     # Both reads pass their schema: an untyped spark.read.parquet runs a
     # schema-inference job on every call (every SPARQL read and update).
     def read_statements(self, snapshot_id: int | None = None) -> DataFrame:
+        """The live statements, resolved (files listed, plan analyzed)
+        once per live-path set: reads between two commits share the kept
+        DataFrame. It is keyed on the live paths, not the snapshot id —
+        a commit that retracts its manifest may republish the same id
+        over another live set — and data files are immutable, so the
+        listing stays valid. Each caller gets an alias of its own over
+        it, never the kept Dataset."""
         m = self._manifest_for(snapshot_id)
-        if m is None or not m["live_paths"]:
+        live = tuple(m["live_paths"]) if m else ()
+        if not live:
             return self._empty(with_graph_bucket_schema())
-        paths = [os.path.join(self.root, p) for p in m["live_paths"]]
-        return (
-            self.spark.read.schema(with_graph_bucket_schema())
-            .option("basePath", self.root)
-            .parquet(*paths)
-        )
+        kept = self._kept  # one read of the field: another thread may replace it
+        if kept is None or kept[0] != live:
+            paths = [os.path.join(self.root, p) for p in live]
+            kept = self._kept = (
+                live,
+                self.spark.read.schema(with_graph_bucket_schema())
+                .option("basePath", self.root)
+                .parquet(*paths),
+            )
+        return kept[1].alias("statements")
 
     def read_lineage(self) -> DataFrame:
         m = self._manifest_for(None)
@@ -276,20 +327,21 @@ class ParquetSnapshotCatalog(Catalog):
         standard Iceberg caveat."""
         import shutil
 
-        ms = self._manifests()
+        ids = self._ids()
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        if len(ms) <= keep_last:
+        if len(ids) <= keep_last:
             return {"expired": 0, "dirs_removed": 0}
-        keep, drop = ms[-keep_last:], ms[:-keep_last]
+        keep, drop = ids[-keep_last:], ids[:-keep_last]
         referenced: set[str] = set()
-        for m in keep:
+        for sid in keep:
+            m = self._load(sid)
             referenced |= set(m["live_paths"]) | set(m["lineage_paths"])
         # concurrency guard: an in-flight commit always reserves an id
         # ABOVE the newest published manifest, so any id ≤ the newest
         # DROPPED manifest was published long ago — only those are GC
         # candidates; higher unreferenced ids may be mid-write
-        max_dropped = drop[-1]["snapshot_id"]
+        max_dropped = drop[-1]
         removed = 0
         for kind in ("data", "lineage"):
             base = os.path.join(self.root, kind)
@@ -322,10 +374,8 @@ class ParquetSnapshotCatalog(Catalog):
                     ):
                         shutil.rmtree(os.path.join(full_snap, child))
                         removed += 1
-        for m in drop:
-            os.unlink(
-                os.path.join(self._snap_dir(), f"v{m['snapshot_id']}.json")
-            )
+        for sid in drop:
+            os.unlink(os.path.join(self._snap_dir(), f"v{sid}.json"))
         return {"expired": len(drop), "dirs_removed": removed}
 
 

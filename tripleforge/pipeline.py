@@ -22,7 +22,9 @@ from __future__ import annotations
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tripleforge import link, lineage as lineage_mod, ops
@@ -31,7 +33,7 @@ from tripleforge.checkpoint import filter_pending
 from tripleforge.detect import with_format
 from tripleforge.parse import parse_corpus, split_errors
 from tripleforge.schema import STATEMENT_QUAD_KEY
-from tripleforge.update import anti_join_live, observed_count, overwrite
+from tripleforge.update import anti_join_live, overwrite
 
 
 @dataclass
@@ -178,11 +180,12 @@ def build(
     aggregation, the dedup+write) derives from that materialization.
     Without this the errors branch silently re-parses the whole corpus.
 
-    The lineage rows are handed to the catalog as a deferred factory,
-    and the build totals ride the lineage write through ``observe()``:
-    no job of their own. A run_id the catalog has already committed
-    skips the lineage write; its totals then come from that run's
-    committed lineage rows.
+    The lineage rows are handed to the catalog as a deferred factory
+    that collects them as Arrow after the statement write (their
+    aggregate reads the statements that write cached), and the build
+    totals are summed from those rows on the driver. A run_id the
+    catalog has already committed skips the lineage; its totals then
+    come from that run's committed lineage rows.
     """
     cfg = cfg or BuildConfig()
     run_id = cfg.run_id or uuid.uuid4().hex
@@ -215,23 +218,19 @@ def build(
     unit_deduped = unit_deduped.persist()
 
     lin = lineage_mod.collect(unit_deduped, errors)
-    totals = (F.sum("n_triples").alias("t"), F.sum("n_errors").alias("e"))
-    obs = Observation()
-    written = []
+    rows: pa.Table | None = None
 
-    def lineage_rows() -> DataFrame:
-        written.append(True)
-        return lin.observe(obs, *totals)
+    def lineage_rows() -> pa.Table:
+        nonlocal rows
+        rows = lin.toArrow()
+        return rows
 
     sid = catalog.commit_snapshot(data, lineage_rows, run_id=run_id)
     unit_deduped.unpersist()
     raw.unpersist()
-    if written:
-        # obs.get blocks until an action has run, so only after a write
-        t, e = observed_count(obs, "t"), observed_count(obs, "e")
-    else:
+    if rows is None:
         # idempotent re-commit: nothing was written, the run's totals
         # are the ones it committed the first time
-        row = catalog.read_lineage().where(F.col("run_id") == run_id).agg(*totals).first()
-        t, e = int(row["t"] or 0), int(row["e"] or 0)
+        rows = catalog.read_lineage().where(F.col("run_id") == run_id).toArrow()
+    t, e = (pc.sum(rows[c]).as_py() or 0 for c in ("n_triples", "n_errors"))
     return BuildResult(sid, run_id, t, e)

@@ -394,13 +394,11 @@ def execute_update(
         c.next()
         nxt = c.peek()
         if _kw(nxt, "DATA"):
-            # the TriG-parsed quad block stays on the driver, and so do
-            # its graph buckets: neither runs a job
+            # the TriG-parsed quad block stays on the driver: its one
+            # collect (update.collect_batch) runs no job
             _, _, rows = parse_update(text)
-            df = _data_batch(spark, rows)
-            touched = update_mod.local_buckets(df, catalog.n_buckets, with_graph)
             fn = update_mod.insert_data if op == "insert" else update_mod.delete_data
-            return fn(catalog, df, graph=with_graph, run_id=run_id, touched=touched)
+            return fn(catalog, _data_batch(spark, rows), graph=with_graph, run_id=run_id)
         delete_tmpl = insert_tmpl = None
         where_dataset: tuple[list[str], list[str]] | None = None
         if op == "delete" and _kw(nxt, "WHERE"):
