@@ -380,26 +380,20 @@ def test_delete_rewrites_only_touched_buckets(spark, cat_root):
     assert {r.subj for r in left} == {"http://s2"}
 
 
-def test_build_dedup_stages_share_one_exchange(spark):
-    """The unit-scoped dedup (lineage attribution) and the global dedup
-    share ONE exchange: hash-partitioning on the quad key clusters both
-    aggregates, so fixing the shadowed-unit bug must not cost a second
-    full shuffle of the statement set."""
-    from pyspark.sql import functions as SF
-
-    from tripleforge.ops import dedup
-    from tripleforge.schema import STATEMENT_QUAD_KEY
+def test_build_dedup_stages_share_one_exchange(spark, cat_root):
+    """The unit-scoped dedup (lineage attribution, per parser) and the
+    global dedup share ONE exchange: hash-partitioning on the quad key
+    clusters both aggregates, so fixing the shadowed-unit bug must not
+    cost a second full shuffle of the statement set."""
+    from tripleforge.pipeline import shape_for_commit
 
     df = spark.createDataFrame(
-        [("s", "p", "o", "iri", None, None, "g", "r1", "f", "c1")],
+        [("s", "p", "o", "iri", None, None, "g", "r1", "f", "c1", "nt")],
         "subj string, pred string, obj string, obj_kind string, obj_dt string, "
-        "obj_lang string, graph string, src_repo string, src_path string, src_commit string",
+        "obj_lang string, graph string, src_repo string, src_path string, src_commit string, "
+        "parser string",
     )
-    shaped = dedup(
-        df.repartition(*[SF.col(c) for c in STATEMENT_QUAD_KEY]),
-        STATEMENT_QUAD_KEY + ["src_repo", "src_commit"],
-    )
-    final = dedup(shaped)
+    _, final = shape_for_commit(df, ParquetSnapshotCatalog(spark, cat_root))
     plan = final._jdf.queryExecution().executedPlan().toString()
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, f"expected 1 exchange, plan has {n_exchanges}:\n{plan}"
@@ -871,6 +865,24 @@ def test_mixed_corpus_lineage_rows_are_pinned(spark, cat_root):
         ("org/r2", "c1", "rdfxml", 1, 2, 0, "2DC39434BBB6F97A"),
         ("org/r2", "c2", "nt", 0, 0, 2, None),
     ]
+
+
+def test_a_quad_two_parsers_share_counts_in_both_lineage_rows(spark, tmp_path):
+    """An RDF/XML file and an N-Triples file of one unit share a triple:
+    each parser's lineage row is the one its file gives in a unit of its
+    own, whichever copy the dedup keeps."""
+    nt = ("org/r", "d.nt", "c1", "N-Triples", '<http://ex.org/d1> <http://ex.org/name> "Dee" .\n')
+    rdf = ("org/r", "d.rdf", "c1", "RDF/XML", _RDFXML)
+
+    def rows(tag, files):
+        cat = ParquetSnapshotCatalog(spark, str(tmp_path / tag), n_buckets=4)
+        corpus = spark.createDataFrame(files, MIXED_CORPUS_DDL)
+        build(spark, corpus, cat, BuildConfig(run_id=tag, link_entities=False))
+        return sorted(tuple(r) for r in cat.read_lineage().select(*LINEAGE_ROW).collect())
+
+    both = rows("both", [nt, rdf])
+    assert [r[2:5] for r in both] == [("nt", 1, 1), ("rdfxml", 1, 2)]
+    assert both == rows("nt", [nt]) + rows("rdf", [rdf])
 
 
 def test_move_copies_what_its_commit_reads(spark, cat_root):

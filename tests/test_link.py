@@ -26,6 +26,10 @@ def _mapping(df):
     return {r.member: r.representative for r in df.collect()}
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 # threshold 10**9 → driver union-find path; 0 → distributed star rounds
 PATHS = [10**9, 0]
 
@@ -203,9 +207,10 @@ def test_cc_driver_threshold_is_byte_aware(spark):
     assert via_driver == via_dist
 
 
-def test_rewrite_auto_and_plain_join_match_broadcast(spark):
-    """VERDICT r1: size-aware rewrite — the non-broadcast (plain
-    equi-join) path and the auto path must match the broadcast path."""
+def test_rewrite_auto_and_plain_join_match_broadcast(spark, no_auto_broadcast):
+    """VERDICT r1: size-aware rewrite — the shuffle-join path must match
+    the broadcast path the planner picks for a small mapping, whether
+    the mapping is a LocalRelation or an RDD scan."""
     stmts = spark.createDataFrame(
         [
             ("urn:a", "urn:p", "urn:b", "iri", None, None, "urn:g", None, None, None),
@@ -215,14 +220,18 @@ def test_rewrite_auto_and_plain_join_match_broadcast(spark):
         "subj string, pred string, obj string, obj_kind string, obj_dt string, "
         "obj_lang string, graph string, src_repo string, src_path string, src_commit string",
     )
-    mapping = spark.createDataFrame(
+    rdd_mapping = spark.createDataFrame(
         [("urn:b", "urn:a"), ("urn:c", "urn:a")], "member string, representative string"
     )
+    mapping = connected_components(_edges(spark, [("urn:b", "urn:a"), ("urn:c", "urn:a")]))
     key = lambda df: {
         (r.subj, r.pred, r.obj) for r in df.select("subj", "pred", "obj").collect()
     }
-    bcast = key(rewrite(stmts, mapping, broadcast=True))
-    plain = key(rewrite(stmts, mapping, broadcast=False))
-    auto_small = key(rewrite(stmts, mapping))  # count≤threshold → broadcast
-    auto_large = key(rewrite(stmts, mapping, broadcast_threshold=0))  # → plain
+    bcast = key(rewrite(stmts, mapping))  # the planner broadcasts a LocalRelation
+    assert "BroadcastHashJoin" in _plan(rewrite(stmts, mapping))
+    auto_small = key(rewrite(stmts, rdd_mapping))
+    with no_auto_broadcast():
+        assert "BroadcastHashJoin" not in _plan(rewrite(stmts, mapping))
+        plain = key(rewrite(stmts, mapping))
+        auto_large = key(rewrite(stmts, rdd_mapping))
     assert bcast == plain == auto_small == auto_large

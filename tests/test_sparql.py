@@ -387,9 +387,9 @@ def test_instantiated_numeric_binding_reads_back_canonical(spark, cat_root, valu
     assert [(r.obj, r.obj_kind, r.obj_dt) for r in rows] == [(obj, "literal", _XSD + dt)]
 
 
-def test_filter_pending_plain_join_path_matches_broadcast(spark, cat_root):
-    """checkpoint.filter_pending above the broadcast threshold (plain
-    shuffle anti-join) must produce the same pending set."""
+def test_filter_pending_plain_join_path_matches_broadcast(spark, cat_root, no_auto_broadcast):
+    """checkpoint.filter_pending as a shuffle anti-join (no broadcast
+    allowed) must produce the pending set the broadcast one does."""
     from tripleforge.checkpoint import filter_pending
     from tripleforge.pipeline import BuildConfig, build
 
@@ -403,10 +403,8 @@ def test_filter_pending_plain_join_path_matches_broadcast(spark, cat_root):
     )
     build(spark, corpus.where("repo = 'r1'"), cat, BuildConfig(run_id="b1", link_entities=False))
     bcast = {r.repo for r in filter_pending(corpus, cat).select("repo").collect()}
-    plain = {
-        r.repo
-        for r in filter_pending(corpus, cat, broadcast_threshold=0).select("repo").collect()
-    }
+    with no_auto_broadcast():
+        plain = {r.repo for r in filter_pending(corpus, cat).select("repo").collect()}
     assert bcast == plain == {"r2"}
 
 

@@ -1,13 +1,16 @@
 """Fixed per-call Spark jobs on the serve path: a catalog read, the
 collect of a DATA batch, a mutation's lineage write and one
 INSERT/DELETE DATA stay within their job counts, counted per job group;
-and reads between two commits reuse one resolved read."""
+and reads between two commits reuse one resolved read. A build links a
+corpus without edges in one job, and parses each partition once."""
 
 from __future__ import annotations
 
 import json
 import os
 import uuid
+from collections import Counter
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,8 +18,9 @@ from pyspark.sql import functions as F
 from tripleforge import ops, update
 from tripleforge.catalog import ParquetSnapshotCatalog
 from tripleforge.datagen import CorpusSpec, corpus_df
+from tripleforge.io import prune_to_graphs
 from tripleforge.pipeline import BuildConfig, build
-from tripleforge.schema import LINEAGE, STATEMENT_QUAD_KEY
+from tripleforge.schema import LINEAGE, OWL_SAMEAS, STATEMENT_QUAD_KEY
 from tripleforge.sparql_update import _data_batch, execute_update, parse_update
 
 
@@ -177,3 +181,59 @@ def test_anti_join_ignores_duplicates_on_the_right(spark):
     assert [r.subj for r in got] == ["s2", "s4"]
     kept = update._on_quad_key(left, right, "left_semi").orderBy(F.col("subj"))
     assert [r.subj for r in kept.collect()] == ["s1", "s3"]
+
+
+def test_bucket_pruning_follows_the_catalog_layout(spark, served):
+    """Whether the store is bucketed is the catalog's ``n_buckets``, not
+    a schema round trip: a catalog with no bucketed layout declares None
+    and gets the store unpruned."""
+    live = served.read_statements()
+    pruned = update.restrict_to_buckets(served, live, {1})
+    assert "graph_bucket" in pruned._jdf.queryExecution().optimizedPlan().toString()
+    unbucketed = SimpleNamespace(n_buckets=None)
+    assert update.restrict_to_buckets(unbucketed, live, {1}) is live
+    assert prune_to_graphs(live, ["urn:g"], unbucketed.n_buckets) is live
+
+
+def test_linking_a_corpus_without_edges_runs_one_job(spark, tmp_path):
+    """With no sameAs edges, linking is the one job that sizes the edge
+    set (the job that also materializes the persisted parse): no
+    rewrite joins, no mapping count."""
+    corpus = corpus_df(spark, CorpusSpec(n_repos=2, files_per_repo=2, stmts_per_file=20))
+
+    def built(tag, link):
+        cat = ParquetSnapshotCatalog(spark, str(tmp_path / tag), n_buckets=8)
+        cfg = BuildConfig(run_id=tag, link_entities=link)
+        return _jobs(spark, lambda: build(spark, corpus, cat, cfg))
+
+    (linked, n_linked), (plain, n_plain) = built("linked", True), built("plain", False)
+    assert n_linked <= n_plain + 1
+    assert linked.n_statements == plain.n_statements > 0
+
+
+@pytest.mark.parametrize("link_rate", [0.0, 0.3])
+def test_build_runs_the_parse_kernel_once(spark, tmp_path, monkeypatch, link_rate):
+    """Each partition of a build's parse runs the kernel once, with
+    sameAs edges to link or without."""
+    from tripleforge.parse import dispatch
+
+    log = str(tmp_path / "kernel.log")
+    kernel = dispatch._parse_batches
+
+    def logged(batches, canonicalize=False):
+        from pyspark import TaskContext
+
+        with open(log, "a") as fh:
+            fh.write(f"{TaskContext.get().partitionId()}\n")
+        return kernel(batches, canonicalize=canonicalize)
+
+    # the mapInArrow closure captures the module global when pickled
+    monkeypatch.setattr(dispatch, "_parse_batches", logged)
+    cat = ParquetSnapshotCatalog(spark, str(tmp_path / "cat"), n_buckets=8)
+    spec = CorpusSpec(n_repos=3, files_per_repo=2, stmts_per_file=10, link_rate=link_rate)
+    build(spark, corpus_df(spark, spec), cat, BuildConfig(run_id="b"))
+    n_links = cat.read_statements().where(F.col("pred") == OWL_SAMEAS).count()
+    assert (n_links > 0) == (link_rate > 0)
+    with open(log) as fh:
+        runs = Counter(fh.read().split())
+    assert runs and set(runs.values()) == {1}, runs

@@ -9,7 +9,8 @@ Checked properties:
 - lineage: one aggregate, so exactly one exchange
 - a DATA update's live-store probe: one bucket-pruned scan, no exchange
 - dedup: partial_ + final HashAggregate around one exchange
-- rewrite joins broadcast the CC mapping
+- rewrite joins broadcast the CC mapping, with no hint
+- resume: the anti-join against committed units is a broadcast
 - topk: TakeOrderedAndProject (no global sort)
 """
 
@@ -111,11 +112,12 @@ def main() -> int:
             ("exchange on key", r"hashpartitioning\(l_returnflag", True),
         ],
     )
-    # 5. CC-mapping rewrite broadcasts the mapping
-    from tripleforge.link import rewrite
+    # 5. CC-mapping rewrite broadcasts the mapping: the planner does,
+    # from the driver-built mapping's exact size, with no hint
+    from tripleforge.link import connected_components, rewrite
 
-    mapping = spark.createDataFrame(
-        [("http://a", "http://b")], "member string, representative string"
+    mapping = connected_components(
+        spark.createDataFrame([("http://a", "http://b")], "u string, v string")
     )
     audit(
         "rewrite_broadcast",
@@ -216,13 +218,23 @@ def main() -> int:
         batch = collect_batch(_data_batch(spark, quads), cat.n_buckets)
         audit(
             "data_update_probe",
-            probe(cat.read_statements(), batch),
+            probe(cat, cat.read_statements(), batch),
             [
                 ("graph_bucket in PartitionFilters", r"PartitionFilters: \[[^\]]*graph_bucket", True),
                 ("subject filter pushed to parquet", r"PushedFilters: \[[^\]]*In\(subj", True),
                 ("one scan", r"\(\d+\) Scan parquet[\s\S]*\(\d+\) Scan parquet", False),
                 ("no exchange", r"Exchange", False),
             ],
+        )
+
+        # 6e. resume on a non-empty catalog: the corpus anti-joins the
+        # committed units, which the planner broadcasts with no hint
+        from tripleforge.checkpoint import filter_pending
+
+        audit(
+            "resume_anti_join_broadcast",
+            filter_pending(corpus_df(spark, CorpusSpec(n_repos=2, files_per_repo=2)), cat),
+            [("broadcast anti-join", r"BroadcastHashJoin LeftAnti", True)],
         )
     finally:
         shutil.rmtree(cat_root, ignore_errors=True)

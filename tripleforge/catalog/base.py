@@ -40,14 +40,15 @@ class Catalog(ABC):
 
     The layout is declared here too: ``n_buckets`` is the graph-bucket
     modulus of the statement layout (read pruning must use the same
-    one), and :meth:`live_paths` lists the live data paths of a
+    one), None without a ``graph_bucket`` column (Iceberg: no bucket
+    pruning), and :meth:`live_paths` lists the live data paths of a
     path-addressed catalog, or is None for one that is not (Iceberg),
     in which case mutations cannot carry paths over and rewrite what
     they read. A live path's ``key=value`` segments are partition
     columns of :meth:`read_statements`, so a mutation can read or
     rewrite single paths."""
 
-    n_buckets: int = N_GRAPH_BUCKETS
+    n_buckets: int | None = N_GRAPH_BUCKETS
 
     @abstractmethod
     def commit_snapshot(

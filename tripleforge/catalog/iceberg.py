@@ -28,6 +28,8 @@ class IcebergCatalog(Catalog):
         spark.sql.catalog.forge.type = hive | hadoop | rest
     """
 
+    n_buckets = None  # no graph_bucket column: reads are not bucket-pruned
+
     def __init__(self, spark: SparkSession, table: str):
         self.spark = spark
         self.table = table

@@ -8,9 +8,9 @@ fingerprints/buckets, verifying candidates with the STORED shingle-hash
 sets. Wave-1 text is never rescanned; the state a wave reads is
 O(corpus rows), not O(corpus bytes).
 
-Scale shape (100 TB): the fingerprint anti-join is one shuffle keyed by
-a uniform 128-bit hash (or a broadcast when the committed set is small
-— same size-aware pattern as checkpoint.filter_pending); the cross-wave
+Scale shape (100 TB): the fingerprint join is one shuffle keyed by a
+uniform 128-bit hash (or a broadcast when the committed set is small,
+picked by the planner as in checkpoint.filter_pending); the cross-wave
 candidate join is keyed by (band, bucket) — uniform by construction,
 capped like linking blocks; verification touches only candidate pairs.
 State unions monotonically (this wave's state ∪ prior state), so wave
@@ -84,20 +84,17 @@ def incremental_exact(
     prior_state_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """New docs that duplicate a COMMITTED doc: (doc, fp, dup_of) where
     dup_of is the smallest prior doc with the same fingerprint. The
-    prior text is never read — only its (doc, fp) state. Size-aware
-    like checkpoint.filter_pending: small committed sets broadcast."""
+    prior text is never read — only its (doc, fp) state. A plain join:
+    the planner and AQE broadcast a small committed set."""
     spark = new_docs.sparkSession
     prior = (
         spark_read(spark, prior_state_dir, FP_DIR)
         .groupBy("fp")
         .agg(F.min("doc").alias("dup_of"))
     )
-    if prior.count() <= broadcast_threshold:
-        prior = F.broadcast(prior)
     fps = doc_fingerprints(new_docs, id_col, text_col)
     return fps.join(prior, "fp", "inner").select("doc", "fp", "dup_of")
 

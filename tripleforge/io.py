@@ -202,9 +202,9 @@ def prune_to_graphs(df: DataFrame, graphs: list[str], n_buckets: int | None) -> 
     filter on the bucketed layout (PartitionFilters in the plan), so the
     scan reads only those buckets' files. Pass the CATALOG's bucket
     count, never a guess: a wrong modulus drops rows. Unchanged without
-    ``n_buckets`` or a ``graph_bucket`` column; the caller still filters
-    on ``graph`` itself (a bucket holds many graphs)."""
-    if not n_buckets or "graph_bucket" not in df.columns:
+    ``n_buckets`` (a catalog without the layout declares None); the
+    caller still filters on ``graph`` itself (a bucket holds many graphs)."""
+    if not n_buckets:
         return df
     cond = None
     for g in graphs:

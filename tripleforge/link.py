@@ -14,10 +14,12 @@ Scale notes (the 100 TB story):
   reported anywhere yet. ``candidate_edges`` does not salt its
   star-edge join: AQE's skew-join split handles hot blocks there.
   ``salted_join`` is the A13 hot-key join utility, tested on its own.
-- CC iterations ``localCheckpoint()`` each round to truncate lineage —
+- CC sizes its edges in one job; with none, the build skips the rewrite.
+- Distributed CC rounds ``localCheckpoint()`` to truncate lineage —
   else plan depth grows O(iterations) and re-optimization dominates.
-- The final mapping is usually tiny relative to the statement table →
-  broadcast rewrite joins (A17).
+- The final mapping is usually tiny relative to the statement table:
+  the planner and AQE broadcast the rewrite joins (A17) from its size,
+  with no hint, and shuffle a dense one.
 
 The reference has no entity resolution; its analog is exact-IRI merge
 on load in the triplestore. This generalizes that per BASELINE.json
@@ -27,7 +29,8 @@ salted hash-join + connected-components resolution").
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from tripleforge.schema import OWL_SAMEAS
@@ -175,6 +178,9 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
+_CHECKPOINT_EVERY = 3  # CC rounds between lineage-truncating checkpoints
+
+
 def _union_find_local(rows: list) -> list[tuple[str, str]]:
     """Driver-side union-find with path compression — exact same output
     contract as the distributed path (member → component-min)."""
@@ -202,57 +208,53 @@ def connected_components(
     max_iter: int = 50,
     driver_threshold: int = 1_000_000,
     driver_max_bytes: int = 256 * 1024 * 1024,
-    checkpoint_interval: int = 3,
 ) -> DataFrame:
     """Edges → ``(member, representative)`` with representative =
     component minimum (only non-representative members returned — what
     the rewrite join needs).
 
-    Hybrid execution, the same idea as AQE's runtime re-planning: if the
-    normalized edge set fits comfortably on the driver
-    (≤ ``driver_threshold`` edges AND ≤ ``driver_max_bytes`` of term
+    One job sizes the edges: the count and term text of the non-loop
+    pairs (duplicates kept: an upper bound, exact at 0), observed on a
+    no-op write — over the build's persisted parse, the job that
+    materializes it. Hybrid execution, the same idea as AQE's runtime
+    re-planning: if the pairs fit comfortably on the driver
+    (≤ ``driver_threshold`` rows AND ≤ ``driver_max_bytes`` of term
     text — IRIs vary 10-1000 bytes, so the row count alone can't bound
-    driver memory), a local union-find resolves it in one pass —
-    iterating Spark jobs over kilobytes is pure overhead. Above the
+    driver memory), a local union-find resolves them in one pass —
+    iterating Spark jobs over kilobytes is pure overhead — and the
+    mapping (empty without pairs) is a LocalRelation. Above the
     threshold it runs the DataFrame-native alternating large-star /
-    small-star algorithm (Kiveris et al., SoCC'14): O(log² n) rounds,
-    each 2-3 shuffles, with the lineage truncated by
-    ``localCheckpoint`` every ``checkpoint_interval`` rounds so plan
-    re-optimization doesn't dominate at high round counts. Runs to the
+    small-star algorithm (Kiveris et al., SoCC'14) on the normalized
+    edges: O(log² n) rounds, each 2-3 shuffles, with the lineage
+    truncated by ``localCheckpoint`` every few rounds. Runs to the
     signature fixpoint; exhausting ``max_iter`` without convergence
     raises instead of silently returning a partial mapping (ADVICE r1).
     """
     spark = edges.sparkSession
-    cur = normalize_edges(edges).localCheckpoint(eager=True)
-    stats = cur.agg(
+    # filled by the sizing job, so neither path recomputes the edges
+    pairs = edges.where(F.col("u") != F.col("v")).localCheckpoint(eager=False)
+    obs = Observation()
+    pairs.observe(
+        obs,
         F.count(F.lit(1)).alias("n"),
         F.sum(F.length("u") + F.length("v")).alias("b"),
-    ).first()
-    n_edges, n_bytes = stats["n"], stats["b"] or 0
-    if n_edges == 0:
-        return cur.select(
-            F.col("u").alias("member"), F.col("v").alias("representative")
-        )
-    if n_edges <= driver_threshold and n_bytes <= driver_max_bytes:
-        # r6: Arrow download (toPandas) instead of row-pickled collect —
-        # same rows, columnar transfer (guide §6)
-        pdf = cur.toPandas()
+    ).write.format("noop").mode("overwrite").save()
+    n_pairs, n_bytes = obs.get["n"], obs.get["b"] or 0
+    if n_pairs <= driver_threshold and n_bytes <= driver_max_bytes:
+        # union-find takes duplicates and either orientation: no shuffle
+        pdf = pairs.toPandas() if n_pairs else {"u": [], "v": []}
         mapping = _union_find_local(list(zip(pdf["u"], pdf["v"])))
-        # r6 (guide §6 Arrow driver transfers): ship the mapping back as
-        # a pandas frame — with arrow.pyspark.enabled the conversion is
-        # columnar instead of row-pickled (measured 0.59 s → 0.23 s for
-        # a 50k-row mapping). Same schema, same rows.
-        import pandas as pd
+        # Arrow, not pandas: an empty pandas frame becomes an RDD scan
+        return spark.createDataFrame(pa.table({
+            "member": pa.array([m for m, _ in mapping], pa.string()),
+            "representative": pa.array([r for _, r in mapping], pa.string()),
+        }))
 
-        return spark.createDataFrame(
-            pd.DataFrame(mapping, columns=["member", "representative"]),
-            "member string, representative string",
-        )
-
+    cur = normalize_edges(pairs).localCheckpoint(eager=True)
     prev_sig, converged = None, False
     for i in range(max_iter):
         cur = _small_star(_large_star(cur))
-        if (i + 1) % checkpoint_interval == 0:
+        if (i + 1) % _CHECKPOINT_EVERY == 0:
             cur = cur.localCheckpoint(eager=True)
         # convergence: stable order-independent signature of the edge set
         sig = cur.select(
@@ -278,12 +280,7 @@ def connected_components(
 # ---------------------------------------------------------------------------
 # A17 — canonical-representative rewrite
 # ---------------------------------------------------------------------------
-def rewrite(
-    stmts: DataFrame,
-    mapping: DataFrame,
-    broadcast: bool | None = None,
-    broadcast_threshold: int = 2_000_000,
-) -> DataFrame:
+def rewrite(stmts: DataFrame, mapping: DataFrame) -> DataFrame:
     """Replace subj and IRI-valued obj by the component representative.
 
     ``owl:sameAs`` assertions are preserved VERBATIM (like a triplestore
@@ -292,23 +289,17 @@ def rewrite(
     compactions (pipeline.compact_links) need to connect components
     spanning runs.
 
-    Join strategy is size-aware (ADVICE r1: an unconditional broadcast
-    dies when linking is dense — hundreds of millions of linked members
-    exceed the broadcast limit at 100× scale): ``broadcast=None``
-    counts the mapping (cheap — it is either a driver-built local frame
-    or a checkpointed CC result) and broadcasts only below
-    ``broadcast_threshold`` rows; above it the rewrite is a plain
-    equi-join and AQE picks the physical strategy.
+    Plain equi-joins, with no hint and no count: the planner broadcasts
+    a driver-built mapping (a LocalRelation of known size), AQE a small
+    distributed one, and a dense one is shuffled (ADVICE r1: hundreds
+    of millions of linked members exceed any broadcast limit).
     """
     sameas = stmts.where(F.col("pred") == OWL_SAMEAS)
     rest = stmts.where(F.col("pred") != OWL_SAMEAS)
-    if broadcast is None:
-        broadcast = mapping.count() <= broadcast_threshold
-    m = F.broadcast(mapping) if broadcast else mapping
-    ms = m.withColumnRenamed("member", "subj").withColumnRenamed(
+    ms = mapping.withColumnRenamed("member", "subj").withColumnRenamed(
         "representative", "_srep"
     )
-    mo = m.withColumnRenamed("member", "obj").withColumnRenamed(
+    mo = mapping.withColumnRenamed("member", "obj").withColumnRenamed(
         "representative", "_orep"
     )
     out = (

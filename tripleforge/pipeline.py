@@ -124,10 +124,11 @@ def link_step(stmts: DataFrame, cfg: BuildConfig) -> DataFrame:
 
 def link_entities(stmts: DataFrame, cfg: BuildConfig) -> DataFrame:
     """Candidate edges → connected components → representative
-    rewrite. Connected components checkpoints its edges eagerly, so
-    this runs jobs over ``stmts`` when called."""
+    rewrite; ``stmts`` itself when there are no edges (the empty
+    mapping is a LocalRelation: ``isEmpty`` on it runs no job)."""
     edges = link.candidate_edges(stmts, cfg.link_key_preds, cfg.max_block)
-    return link.rewrite(stmts, link.connected_components(edges))
+    mapping = link.connected_components(edges)
+    return stmts if mapping.isEmpty() else link.rewrite(stmts, mapping)
 
 
 def transform(
@@ -148,20 +149,21 @@ def shape_for_commit(
     """→ (unit_deduped, committable_data) — the build's set-semantics
     shaping (ADVICE r1-high), and so the streaming ingest's too.
 
-    ``unit_deduped`` dedups WITHIN each (repo, commit) work unit, so a
+    ``unit_deduped`` dedups WITHIN each (repo, commit, parser), so a
     unit whose quads are fully shadowed by another unit still keeps
     rows — every parsed unit gets a lineage row and is durably marked
-    committed. ``committable_data`` additionally dedups batch-globally
+    committed — and a quad two parsers share counts in both parsers'
+    lineage rows. ``committable_data`` additionally dedups batch-globally
     and anti-joins the live store restricted to the graph buckets this
     batch touches (partition-pruned — a bounded slice of a 100 TB
     store), so appends stay set-semantic across snapshots.
 
     ONE explicit exchange serves both dedups: hash-partitioning on the
-    quad key clusters (quad+unit) and (quad) alike, so Catalyst plans
-    both HashAggregates without further shuffles (plan-audited).
+    quad key clusters (quad+unit+parser) and (quad) alike, so Catalyst
+    plans both HashAggregates without further shuffles (plan-audited).
     """
     stmts = stmts.repartition(*[F.col(c) for c in STATEMENT_QUAD_KEY])
-    unit_deduped = ops.dedup(stmts, STATEMENT_QUAD_KEY + ["src_repo", "src_commit"])
+    unit_deduped = ops.dedup(stmts, STATEMENT_QUAD_KEY + ["src_repo", "src_commit", "parser"])
     return unit_deduped, anti_join_live(catalog, ops.dedup(unit_deduped))
 
 
@@ -199,7 +201,7 @@ def build(
             return BuildResult(sid, run_id, 0, 0)
 
     raw, stmts, errors = parse_step(corpus, cfg)
-    # persisted BEFORE link_step, whose eager edge checkpoint can be the
+    # persisted BEFORE link_step, whose edge-sizing job is then the
     # first job over the parse; CacheManager substitutes by plan
     # equality, so the statements/errors plans derived above read it
     raw.persist()

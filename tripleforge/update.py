@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import uuid
 from collections import Counter
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
 import pyarrow as pa
@@ -108,21 +108,22 @@ def collect_batch(stmts: DataFrame, n_buckets: int, graph: str | None = None) ->
     )
 
 
-def probe(live: DataFrame, batch: DataBatch) -> DataFrame:
+def probe(catalog: Catalog, live: DataFrame, batch: DataBatch) -> DataFrame:
     """The rows of ``live`` equal to a quad of ``batch``, read from the
     batch's graph buckets only: one scan stage, pruned by partition and
     by subject, with no exchange (plan-audited as ``data_update_probe``).
     The store is a set, so at most one row per batch quad comes back."""
-    return restrict_to_buckets(live, sorted(batch.buckets)).where(batch.holds())
+    return restrict_to_buckets(catalog, live, batch.buckets).where(batch.holds())
 
 
-def restrict_to_buckets(live: DataFrame, buckets: list[int]) -> DataFrame:
+def restrict_to_buckets(catalog: Catalog, live: DataFrame, buckets: Iterable[int]) -> DataFrame:
     """Partition-pruned view of the live store: ``graph_bucket`` is a
     physical partition column, so this filter prunes whole directories
-    at the scan (visible as PartitionFilters in the plan)."""
-    if "graph_bucket" not in live.columns:
-        return live  # catalog without bucketed layout → full view
-    return live.where(F.col("graph_bucket").isin(buckets))
+    at the scan (visible as PartitionFilters in the plan). A catalog
+    without the bucketed layout (``n_buckets`` None) gets the full view."""
+    if catalog.n_buckets is None:
+        return live
+    return live.where(F.col("graph_bucket").isin(sorted(buckets)))
 
 
 def _segments(path: str) -> dict[str, str]:
@@ -236,7 +237,7 @@ def anti_join_live(catalog: Catalog, batch: DataFrame) -> DataFrame:
     if catalog.latest_snapshot_id() is None:
         return batch
     touched = touched_buckets(batch, catalog.n_buckets)
-    return _anti_on_quad_key(batch, restrict_to_buckets(catalog.read_statements(), touched))
+    return _anti_on_quad_key(batch, restrict_to_buckets(catalog, catalog.read_statements(), touched))
 
 
 def overwrite(
@@ -274,7 +275,7 @@ def overwrite(
         # entry) holds rows of every bucket
         paths = [p for p in all_paths if _bucket_of(p) in touched | {None}]
         if holding is not None:
-            paths = _paths_holding(live, paths, holding)
+            paths = _paths_holding(catalog, live, paths, holding)
         keep = [p for p in all_paths if p not in paths]
         live = live.where(_under(paths))
     data, lin = observed_lineage(rewrite(live).selectExpr(*STATEMENT.fieldNames()), op)
@@ -303,7 +304,7 @@ def insert_data(
     sid = catalog.latest_snapshot_id()
     live = set()
     if sid is not None:
-        found = probe(catalog.read_statements(sid), batch).selectExpr(f"{_QUAD_KEY} AS k")
+        found = probe(catalog, catalog.read_statements(sid), batch).selectExpr(f"{_QUAD_KEY} AS k")
         live = {r["k"] for r in found.collect()}
     new = [row for key, row in batch.rows.items() if key not in live]
     table = pa.table(
@@ -411,14 +412,14 @@ def graph_op(
     buckets = _graph_buckets([src, dst], catalog.n_buckets)
 
     def where(live: DataFrame) -> tuple[DataFrame | None, DataFrame]:
-        live = restrict_to_buckets(live, sorted(buckets))
+        live = restrict_to_buckets(catalog, live, buckets)
         deletes = live.where(dropped) if dropped is not None else None
         return deletes, live.where(is_src).withColumn("graph", F.lit(dst))
 
     return modify(catalog, where, run_id=run_id, touched=buckets)
 
 
-def _paths_holding(live: DataFrame, paths: list[str], batch: DataBatch) -> list[str]:
+def _paths_holding(catalog: Catalog, live: DataFrame, paths: list[str], batch: DataBatch) -> list[str]:
     """The live ``paths`` that hold a quad of ``batch``: one
     :func:`probe`, whose rows' partition values name their paths."""
     if not paths:
@@ -426,7 +427,7 @@ def _paths_holding(live: DataFrame, paths: list[str], batch: DataBatch) -> list[
     keys = sorted({k for p in paths for k in _segments(p)})
     found = [
         r.asDict()
-        for r in probe(live, batch)
+        for r in probe(catalog, live, batch)
         .selectExpr(*[f"CAST({k} AS STRING) AS {k}" for k in keys])
         .collect()
     ]
