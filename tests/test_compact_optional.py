@@ -1,4 +1,4 @@
-"""Cross-run linking compaction (D10) and BGP OPTIONAL patterns."""
+"""Cross-run linking compaction (D10) and the OPTIONAL left join of two BGPs."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from tripleforge.catalog import ParquetSnapshotCatalog
 from tripleforge.pipeline import BuildConfig, build, compact_links
-from tripleforge.query import Pattern, bgp
+from tripleforge.query import Pattern, bgp, left_join_optional
 from tripleforge.schema import CORPUS, OWL_SAMEAS
 
 
@@ -89,12 +89,9 @@ def test_bgp_optional(spark):
         ],
         "subj string, pred string, obj string, obj_kind string, obj_dt string, obj_lang string, graph string",
     )
-    out = bgp(
-        stmts,
-        [
-            Pattern(s="?d", p="urn:p:type", o="urn:t:Doc"),
-            Pattern(s="?d", p="urn:p:title", o="?title", optional=True),
-        ],
+    out = left_join_optional(
+        bgp(stmts, [Pattern(s="?d", p="urn:p:type", o="urn:t:Doc")]),
+        bgp(stmts, [Pattern(s="?d", p="urn:p:title", o="?title")]),
     )
     rows = {r.d: r.title for r in out.collect()}
     assert rows == {"http://d1": "Title 1", "http://d2": None}
@@ -106,8 +103,7 @@ def test_bgp_optional_requires_shared_var(spark):
         "subj string, pred string, obj string, obj_kind string, obj_dt string, obj_lang string, graph string",
     )
     with pytest.raises(ValueError):
-        bgp(
-            stmts,
-            [Pattern(s="?a", p="p", o="?b"),
-             Pattern(s="?x", p="q", o="?y", optional=True)],
+        left_join_optional(
+            bgp(stmts, [Pattern(s="?a", p="p", o="?b")]),
+            bgp(stmts, [Pattern(s="?x", p="q", o="?y")]),
         ).collect()

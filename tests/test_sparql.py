@@ -75,6 +75,34 @@ def test_select_cartesian_guard(stmts):
     assert sparql.select(stmts, text, allow_cartesian=True).count() == 4
 
 
+def test_integer_literals_are_integers(stmts):
+    """An integer literal is an xsd:integer: STR(1) is "1", integer
+    arithmetic stays integral, and a result past a long is an
+    expression error (unbound), not a failed query."""
+    text = (
+        "SELECT (STR(1) AS ?a) (2 * 3 - 1 AS ?b) (1 / 2 AS ?c) (1.5 + 1 AS ?d) "
+        "(9223372036854775807 + 1 AS ?e) WHERE { <urn:d1> <urn:p:source> ?s }"
+    )
+    rows = [tuple(r) for r in sparql.select(stmts, text).collect()]
+    assert rows == [("1", 5, 0.5, 2.5, None)]
+
+
+def test_integer_literal_beside_a_decimal_term_widens_to_double(spark):
+    """IF / COALESCE mixing a store term with an integer literal widen
+    both to double, so a decimal lexical keeps its fraction; unary
+    minus past a long is unbound like binary arithmetic."""
+    store = spark.createDataFrame(
+        [("urn:s", "urn:p", "2.5", "literal", "http://www.w3.org/2001/XMLSchema#decimal", None, "urn:g")],
+        "subj string, pred string, obj string, obj_kind string, obj_dt string, obj_lang string, graph string",
+    )
+    text = (
+        "SELECT (COALESCE(?o, 0) AS ?a) (IF(true, ?o, 0) AS ?b) "
+        "(-(-9223372036854775807 - 1) AS ?c) (-?o AS ?d) WHERE { ?s <urn:p> ?o }"
+    )
+    rows = [tuple(r) for r in sparql.select(store, text).collect()]
+    assert rows == [(2.5, 2.5, None, -2.5)]
+
+
 @pytest.fixture()
 def cat_root():
     root = tempfile.mkdtemp(prefix="tfsparql_")
@@ -311,9 +339,9 @@ _XSD = "http://www.w3.org/2001/XMLSchema#"
 @pytest.mark.parametrize(
     "where, obj, dt",
     [
-        # expression literals evaluate as doubles, so 1 binds 1.0E0
-        ("?s <urn:p> ?o BIND(1 AS ?n)", "1.0E0", "double"),
-        ("?s <urn:p> ?o BIND(IF(?o = <urn:o>, 1, 0) AS ?n)", "1.0E0", "double"),
+        # an integer literal evaluates as xsd:integer
+        ("?s <urn:p> ?o BIND(1 AS ?n)", "1", "integer"),
+        ("?s <urn:p> ?o BIND(IF(?o = <urn:o>, 1, 0) AS ?n)", "1", "integer"),
         ("?s <urn:p> ?o BIND(?o = <urn:o> AS ?n)", "true", "boolean"),
         ("{ SELECT (COUNT(*) AS ?n) WHERE { ?s ?p ?o } }", "1", "integer"),
     ],

@@ -307,3 +307,31 @@ def test_triple_nesting(df):
     # MINUS block: scored subjects whose tag survives (only d2 has the
     # flag for the EXISTS) and BOUND(?t) → removes d2 only
     assert _set(out, "s") == {("urn:d1",), ("urn:d3",)}
+
+
+@pytest.mark.parametrize(
+    "where",
+    [
+        "?s <urn:p:a> ?v GRAPH ?g { OPTIONAL { ?s <urn:p:tag> ?t } }",
+        "?s <urn:p:a> ?v OPTIONAL { ?s <urn:p:a> ?w "
+        "GRAPH ?g { OPTIONAL { ?s <urn:p:tag> ?t } } }",
+    ],
+    ids=["group", "nested"],
+)
+def test_optional_under_an_ungoverned_graph_term_joins_per_name(spark, where):
+    """GRAPH ?g { OPTIONAL { … } } beside a required pattern: the name
+    domain binds ?g first (it precedes the OPTIONAL in textual order),
+    then the OPTIONAL extends each (row, name) pair within that graph —
+    at group level as in a nested block (§18.3)."""
+    rows = [
+        ("urn:d1", "urn:p:a", "10", "literal", None, None, "urn:g1"),
+        ("urn:d2", "urn:p:a", "20", "literal", None, None, "urn:g2"),
+        ("urn:d1", "urn:p:tag", "t1", "literal", None, None, "urn:g1"),
+        ("urn:d2", "urn:p:tag", "t2", "literal", None, None, "urn:g2"),
+    ]
+    store = spark.createDataFrame(rows, SCHEMA)
+    out = sparql.select(store, f"SELECT ?s ?g ?t WHERE {{ {where} }}")
+    assert _set(out, "s", "g", "t") == {
+        ("urn:d1", "urn:g1", "t1"), ("urn:d1", "urn:g2", None),
+        ("urn:d2", "urn:g1", None), ("urn:d2", "urn:g2", "t2"),
+    }

@@ -301,6 +301,56 @@ def test_union_arm_with_optional_and_bind(df):
     }
 
 
+@pytest.mark.parametrize(
+    "seed",
+    [
+        "{ SELECT ?s WHERE { ?s <urn:p:a> ?v } }",
+        "{ ?s <urn:p:a> ?v } UNION { ?s <urn:p:flag> ?v }",
+    ],
+    ids=["subquery", "union"],
+)
+def test_group_seeded_by_subquery_or_union_joins_its_optional(df, seed):
+    """A group with no triple pattern is seeded by its subquery or UNION
+    chain; its OPTIONAL blocks left-join after the seed, binding ?x
+    where the data has it and leaving it null where it does not."""
+    want = {("urn:d1", "t1"), ("urn:d2", None), ("urn:d3", "t3")}
+    opt = "OPTIONAL { ?s <urn:p:tag> ?x }"
+    out = sparql.select(df, f"SELECT * WHERE {{ {seed} {opt} }}")
+    assert "x" in out.columns
+    assert _set(out, "s", "x") == want
+    out = sparql.select(df, f"SELECT ?s ?x WHERE {{ {seed} {opt} }}")
+    assert _set(out, "s", "x") == want
+
+
+@pytest.mark.parametrize(
+    "where,want",
+    [
+        (
+            '?s <urn:p:a> ?v BIND(STR(?s) AS ?k) '
+            'OPTIONAL { ?s <urn:p:tag> ?x FILTER(?k = "urn:d1") }',
+            {("urn:d1", "t1"), ("urn:d2", None), ("urn:d3", None)},
+        ),
+        (
+            "?s <urn:p:a> ?v OPTIONAL { ?s <urn:p:a> ?w BIND(1 AS ?k) "
+            "OPTIONAL { ?s <urn:p:tag> ?x FILTER(?k = 1) } }",
+            {("urn:d1", "t1"), ("urn:d2", None), ("urn:d3", "t3")},
+        ),
+        (
+            "?s <urn:p:a> ?v FILTER(!BOUND(?x)) OPTIONAL { ?s <urn:p:tag> ?x }",
+            {("urn:d2", None)},
+        ),
+    ],
+    ids=["bind_then_optional", "nested_bind_then_optional", "filter_then_optional"],
+)
+def test_optional_joins_in_textual_position_ahead_of_filters(df, where, want):
+    """An OPTIONAL left-joins after the BIND written before it, so its
+    outer-variable FILTER sees the bound value, at group level and
+    nested; a FILTER written before an OPTIONAL still constrains the
+    whole group, so it sees the OPTIONAL's bindings."""
+    out = sparql.select(df, f"SELECT ?s ?x WHERE {{ {where} }}")
+    assert _set(out, "s", "x") == want
+
+
 def test_ask_with_nested_union(df):
     assert sparql.ask(
         df,

@@ -211,6 +211,37 @@ def test_linking_a_corpus_without_edges_runs_one_job(spark, tmp_path):
     assert linked.n_statements == plain.n_statements > 0
 
 
+def test_first_resume_build_runs_no_emptiness_job(spark, tmp_path):
+    """Into an empty catalog, a resume build runs the jobs of a build
+    without resume: nothing is committed, so it asks no isEmpty of the
+    corpus."""
+    corpus = corpus_df(spark, CorpusSpec(n_repos=2, files_per_repo=2, stmts_per_file=20))
+
+    def built(tag, resume):
+        cat = ParquetSnapshotCatalog(spark, str(tmp_path / tag), n_buckets=8)
+        cfg = BuildConfig(run_id=tag, link_entities=False, resume=resume)
+        return _jobs(spark, lambda: build(spark, corpus, cat, cfg))
+
+    (resumed, n_resumed), (plain, n_plain) = built("resumed", True), built("plain", False)
+    assert n_resumed == n_plain
+    assert resumed.n_statements == plain.n_statements > 0
+
+
+def test_resume_build_of_an_empty_corpus_commits_one_snapshot(spark, tmp_path):
+    from tripleforge.schema import CORPUS
+
+    cat = ParquetSnapshotCatalog(spark, str(tmp_path / "cat"), n_buckets=4)
+    empty = spark.createDataFrame(spark.sparkContext.emptyRDD(), CORPUS)
+    first = build(spark, empty, cat, BuildConfig(run_id="e1", link_entities=False))
+    assert (first.n_statements, first.n_errors) == (0, 0)
+    sid = cat.latest_snapshot_id()
+    assert sid == first.snapshot_id == 1
+    again = build(spark, empty, cat, BuildConfig(run_id="e2", link_entities=False))
+    assert cat.latest_snapshot_id() == sid
+    assert (again.snapshot_id, again.n_statements) == (sid, 0)
+    assert cat.read_statements().count() == 0
+
+
 @pytest.mark.parametrize("link_rate", [0.0, 0.3])
 def test_build_runs_the_parse_kernel_once(spark, tmp_path, monkeypatch, link_rate):
     """Each partition of a build's parse runs the kernel once, with

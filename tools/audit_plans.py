@@ -11,6 +11,8 @@ Checked properties:
 - dedup: partial_ + final HashAggregate around one exchange
 - rewrite joins broadcast the CC mapping, with no hint
 - resume: the anti-join against committed units is a broadcast
+- SPARQL OPTIONAL: one left outer join, its block FILTER on the
+  optional side, no nested-loop join
 - topk: TakeOrderedAndProject (no global sort)
 """
 
@@ -279,6 +281,25 @@ def main() -> int:
     )
     audit("sparql_exists_semi_join", exists_df, [("LeftSemi join", r"LeftSemi", True)])
     audit("sparql_minus_anti_join", minus_df, [("LeftAnti join", r"LeftAnti", True)])
+    # 9b. a group OPTIONAL with a block-local FILTER: one left outer
+    # join, the filter below it on the optional side (operator details
+    # print children first), and no nested-loop join
+    optional_df = sparql_mod.select(
+        kg,
+        "SELECT ?d ?n ?t WHERE { ?d <urn:p:nchars> ?n . "
+        "OPTIONAL { ?d <urn:p:type> ?t FILTER(?t != <urn:t:Doc>) } }",
+    )
+    audit(
+        "sparql_optional_left_join",
+        optional_df,
+        [
+            ("one LeftOuter join", r"Join type: LeftOuter", True),
+            ("no second LeftOuter join", r"Join type: LeftOuter[\s\S]*Join type: LeftOuter", False),
+            ("block filter below the join", r"Condition : [^\n]*NOT \(obj#\d+ = urn:t:Doc\)[\s\S]*Join type: LeftOuter", True),
+            ("no block filter above the join", r"Join type: LeftOuter[\s\S]*NOT \(obj#\d+ = urn:t:Doc\)", False),
+            ("no nested-loop join", r"NestedLoopJoin|CartesianProduct", False),
+        ],
+    )
     # 10 (r3). property-path sequence = pure joins (no Python, no
     # cartesian); closure handled separately (iterative, plan-per-round)
     path_df = sparql_mod.select(

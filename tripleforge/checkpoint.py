@@ -19,8 +19,9 @@ from tripleforge.catalog.base import Catalog
 def filter_pending(corpus: DataFrame, catalog: Catalog) -> DataFrame:
     """Corpus rows whose (repo, commit) is not yet committed.
 
-    An empty catalog has nothing committed, so ``corpus`` comes back
-    unchanged: no join. That keeps the plan free of an exchange, so
+    An empty catalog has nothing committed, so ``corpus`` itself comes
+    back (the same object, which ``pipeline.build`` relies on): no
+    join. That keeps the plan free of an exchange, so
     ``ops.widen_if_narrow`` still widens a narrow scan and a first
     build parses on every core.
 

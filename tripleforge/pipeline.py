@@ -192,13 +192,16 @@ def build(
     cfg = cfg or BuildConfig()
     run_id = cfg.run_id or uuid.uuid4().hex
     if cfg.resume:
-        corpus = filter_pending(corpus, catalog)
-        if corpus.isEmpty():
-            # nothing pending → no-op, do NOT accumulate empty snapshots
-            # (a scheduled re-run at production cadence would otherwise
-            # grow the snapshot log unboundedly)
-            sid = catalog.latest_snapshot_id() or 0
-            return BuildResult(sid, run_id, 0, 0)
+        pending = filter_pending(corpus, catalog)
+        # filter_pending hands an empty catalog's corpus back as is, so
+        # a first build asks no isEmpty job (an empty corpus commits one
+        # empty snapshot). Nothing pending after the filter → no-op, do
+        # NOT accumulate empty snapshots (a scheduled re-run at
+        # production cadence would otherwise grow the snapshot log
+        # unboundedly).
+        if pending is not corpus and pending.isEmpty():
+            return BuildResult(catalog.latest_snapshot_id() or 0, run_id, 0, 0)
+        corpus = pending
 
     raw, stmts, errors = parse_step(corpus, cfg)
     # persisted BEFORE link_step, whose edge-sizing job is then the

@@ -31,7 +31,6 @@ class Pattern:
     p: str | tuple | None = None  # tuple = property-path AST (path_scan)
     o: str | None = None
     g: str | None = None
-    optional: bool = False  # SPARQL OPTIONAL analog → left outer join
 
     @property
     def bound_count(self) -> int:
@@ -367,24 +366,19 @@ def bgp(
     allow_cartesian: bool = False,
     carry_meta: bool = False,
     n_buckets: int | None = None,
-    optional_groups: list | None = None,
 ) -> DataFrame:
     """Basic graph pattern: join pattern scans on shared variables.
 
-    ``optional_groups`` entries are either a list of Patterns or a
-    ``(patterns, transform)`` tuple whose transform (DataFrame →
-    DataFrame) applies block-scoped FILTER/BIND before the left join.
-
-    Required patterns are ordered greedily by connectivity: seed with
-    the most selective pattern (bound-term count), then repeatedly join
-    the most selective REMAINING pattern that shares a variable with the
-    result so far — a cheap deterministic heuristic ahead of Catalyst's
-    own reordering (ADVICE r2: a pure selectivity sort falsely flagged
+    Patterns are ordered greedily by connectivity: seed with the most
+    selective pattern (bound-term count), then repeatedly join the most
+    selective REMAINING pattern that shares a variable with the result
+    so far — a cheap deterministic heuristic ahead of Catalyst's own
+    reordering (ADVICE r2: a pure selectivity sort falsely flagged
     fully-connected chains like ``?a p ?b . ?b q ?c . ?c r <x>`` as
-    cross products). OPTIONAL patterns (SPARQL §6) join last as
-    left-outer, preserving unmatched rows with null bindings. Joins are
-    equi-joins on the shared variable names, so Catalyst picks
-    broadcast/SMJ per AQE statistics.
+    cross products). Joins are equi-joins on the shared variable names,
+    so Catalyst picks broadcast/SMJ per AQE statistics. OPTIONAL
+    (SPARQL §6) is not a pattern flag: evaluate the optional group with
+    ``bgp`` too and join it with :func:`left_join_optional`.
 
     Patterns sharing no variable with ANY other reachable pattern are
     valid SPARQL (their product), but at statement-table scale an
@@ -396,8 +390,6 @@ def bgp(
         key=lambda i: -patterns[i].bound_count,
         # stable: ties keep textual order
     )
-    remaining = [i for i in remaining if not patterns[i].optional]
-    optionals = [pt for pt in patterns if pt.optional]
     result: DataFrame | None = None
     seen_vars: set[str] = set()
     while remaining:
@@ -440,78 +432,24 @@ def bgp(
         result = result.join(scan, on=shared, how="inner") if shared else result.crossJoin(scan)
     if result is None:
         result = statements.limit(0)
-    # OPTIONAL semantics (SPARQL §6): each block joins left-outer AS A
-    # UNIT — a multi-triple block binds all its variables or none
-    # (VERDICT r2: independent per-triple left joins could bind one
-    # triple's variables when the spec says both-or-neither). Blocks of
-    # one pattern (the legacy per-Pattern optional flag) reduce to the
-    # old single left join.
-    blocks = [[pt] for pt in optionals] + [
-        b if isinstance(b, (tuple, DataFrame)) else list(b)
-        for b in (optional_groups or [])
-    ]
-    for block in blocks:
-        result = left_join_optional(
-            statements, result, block,
-            allow_cartesian=allow_cartesian, carry_meta=carry_meta,
-            n_buckets=n_buckets,
-        )
     return result
 
 
 def left_join_optional(
-    statements: DataFrame,
     result: DataFrame,
-    entry,
-    allow_cartesian: bool = False,
-    carry_meta: bool = False,
-    n_buckets: int | None = None,
+    sub: DataFrame,
+    join_cond=None,
 ) -> DataFrame:
-    """Left-join ONE optional unit into ``result`` (extracted from
-    :func:`bgp` in r5 so the SPARQL layer can apply OPTIONAL blocks
-    nested inside MINUS / EXISTS / OPTIONAL via ``_apply_ops``).
+    """SPARQL §18.2 LeftJoin of ``result`` with one evaluated OPTIONAL
+    group ``sub``: the group joins left-outer AS A UNIT on the shared
+    variables, so a multi-triple block binds all its variables or none
+    (VERDICT r2), and a ``result`` row with no compatible ``sub`` row
+    survives null-extended.
 
-    ``entry`` is a pattern list, a pre-evaluated DataFrame, or a tuple
-    ``(block, transform[, join_cond])``: the transform (FILTER/BIND
-    scoped inside the block — compiled by the SPARQL layer) applies to
-    the sub-BGP before the left join; the r4 LeftJoin CONDITION builder
-    (SPARQL §18.2.2.3: an OPTIONAL-scoped FILTER referencing left-hand
-    variables is part of the join condition, not a pre- or post-filter)
-    evaluates per candidate merge."""
-    transform = None
-    join_cond = None
-    block = entry
-    if isinstance(block, tuple):
-        if len(block) == 3:
-            block, transform, join_cond = block
-        else:
-            block, transform = block
-    if isinstance(block, DataFrame):
-        # pre-evaluated optional unit (r5: OPTIONAL blocks holding
-        # subqueries or nested OPTIONAL/MINUS/EXISTS are compiled to a
-        # DataFrame by the SPARQL layer)
-        sub = block
-    elif len(block) == 1:
-        pt = block[0]
-        if isinstance(pt.p, tuple):
-            sub = path_scan(
-                statements, pt, carry_meta=carry_meta, n_buckets=n_buckets
-            )
-        else:
-            sub = match(
-                statements, pt.s, pt.p, pt.o, pt.g,
-                carry_meta=carry_meta, n_buckets=n_buckets,
-            )
-    else:
-        sub = bgp(
-            statements,
-            [Pattern(s=pt.s, p=pt.p, o=pt.o, g=pt.g) for pt in block],
-            allow_cartesian=allow_cartesian,
-            carry_meta=carry_meta,
-            n_buckets=n_buckets,
-        )
-    if transform is not None:
-        sub = transform(sub)
+    ``join_cond`` (bound column names → Column) is the LeftJoin
+    CONDITION: an OPTIONAL-scoped FILTER referencing left-hand
+    variables (§18.2.2.3) is evaluated per candidate merge, not as a
+    pre- or post-filter."""
     dup_meta = [c for c in sub.columns if "__" in c and c in result.columns]
     if dup_meta:
         sub = sub.drop(*dup_meta)

@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import hashlib
 import re
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import BooleanType, DecimalType, IntegralType, NumericType
@@ -160,13 +161,15 @@ def _apply_ops(
     allow_cartesian: bool = False,
     n_buckets: int | None = None,
     certain: set[str] | None = None,
+    carry_meta: bool = False,
 ) -> DataFrame:
-    """Apply FILTER / BIND / VALUES / MINUS / [NOT] EXISTS operations
-    in textual order (BIND is positional per SPARQL §10.1: later ops
-    see its variable). MINUS and (NOT) EXISTS compile to anti/semi
-    joins of the solution against the sub-BGP on shared variables —
-    the shapes Catalyst executes as broadcast/shuffled anti and semi
-    hash joins.
+    """Apply FILTER / BIND / VALUES / OPTIONAL / MINUS / [NOT] EXISTS
+    operations in textual order (BIND is positional per SPARQL §10.1:
+    later ops see its variable). Each OPTIONAL, MINUS and EXISTS block
+    evaluates through :func:`_eval_group`; OPTIONAL left-joins it
+    (``carry_meta`` is passed on to its block), MINUS and (NOT) EXISTS
+    compile to anti/semi joins on shared variables — the shapes
+    Catalyst executes as broadcast/shuffled anti and semi hash joins.
 
     ``certain`` — variables guaranteed bound (non-null) in every row of
     ``sol`` (the caller's required-BGP vars). Only the ``union`` op
@@ -298,26 +301,18 @@ def _apply_ops(
                 sol = sol.withColumn(v, F.col(f"__values_{v}"))
             sol = sol.drop(*[f"__values_{v}" for v in vnames])
         elif op[0] == "optional":
-            # r5b: OPTIONAL nested inside a MINUS / EXISTS / OPTIONAL
-            # block — left-joins into the enclosing SUB-group's
-            # solutions (strict bottom-up §18.2 translation; the same
-            # _optional_entry machinery compiles block-scoped ops and
-            # outer-variable FILTERs, "outer" now meaning the enclosing
-            # block's bindings)
-            # op shape: ("optional", block, bops)
+            # SPARQL §18.2 LeftJoin(sol, block): the block evaluates
+            # on its own (strict bottom-up scope), then left-joins into
+            # the enclosing group's solutions — a group-level block and
+            # one nested in MINUS / EXISTS / OPTIONAL alike
             if statements is None:
                 raise SparqlError("OPTIONAL is not available here")
-            bops = op[2]
-            entry = _optional_entry(
-                op[1], bops, statements=statements,
-                allow_cartesian=allow_cartesian, n_buckets=n_buckets,
-                carry_meta=_ops_need_meta(bops),
+            block_ops, join_cond = _optional_scope(op[1], op[2])
+            sub = _eval_group(
+                statements, op[1], block_ops, allow_cartesian=allow_cartesian,
+                n_buckets=n_buckets, carry_meta=carry_meta or _ops_need_meta(op[2]),
             )
-            sol = left_join_optional(
-                statements, sol, entry,
-                allow_cartesian=allow_cartesian, n_buckets=n_buckets,
-                carry_meta=_ops_need_meta(bops),
-            )
+            sol = left_join_optional(sol, sub, join_cond)
         elif op[0] == "graphdom":
             # r5b: a (nested) GRAPH term that governs no required
             # triple directly — §18.3 eval makes it range over the
@@ -365,17 +360,9 @@ def _apply_ops(
             # MINUS's disjoint-domain rule ignores them
             inherited = {o[1] for o in bops if o[0] == "inherited_g"}
             bops = [o for o in bops if o[0] != "inherited_g"]
-            if block:
-                sub = bgp(
-                    statements, block, allow_cartesian=allow_cartesian,
-                    carry_meta=_ops_need_meta(bops), n_buckets=n_buckets,
-                )
-            else:
-                sub = None  # subquery-only block seeds from its first op
-            sub = _apply_ops(
-                sub, bops, statements=statements,
-                allow_cartesian=allow_cartesian, n_buckets=n_buckets,
-                certain={v for pt in block for v in pt.variables},
+            sub = _eval_group(
+                statements, block, bops, allow_cartesian=allow_cartesian,
+                n_buckets=n_buckets,
             )
             shared = [
                 v for v in sub.columns if v in sol.columns and "__" not in v
@@ -427,38 +414,33 @@ def _subquery_out_vars(parsed: tuple) -> set[str]:
     return out
 
 
+def _op_vars(op: tuple) -> set[str]:
+    """The variables one group op can bind (possibly unbound in some
+    rows): BIND / VALUES targets, subquery projections, nested OPTIONAL
+    and UNION blocks, a graphdom name. FILTER, MINUS and EXISTS bind
+    none."""
+    kind = op[0]
+    if kind in ("bind", "in"):
+        return {op[1]}
+    if kind == "values_multi":
+        return set(op[1])
+    if kind == "subquery":
+        return _subquery_out_vars(op[1])
+    if kind == "optional":
+        return _group_all_vars(op[1:])
+    if kind == "union":
+        return set().union(*map(_group_all_vars, op[1]))
+    if kind == "graphdom" and op[1].startswith("?"):
+        return {op[1][1:]}
+    return set()
+
+
 def _group_all_vars(grp: tuple) -> set[str]:
-    """Every variable a ``(patterns, ops, optional_blocks)`` group can
-    bind — required BGP, BIND/VALUES targets, subquery projections,
-    nested OPTIONAL / UNION blocks, graphdom names."""
-    patterns, ops, optional_blocks = grp
-    out: set[str] = set()
-    for pt in patterns:
-        out |= pt.variables
+    """Every variable a ``(patterns, ops)`` group can bind."""
+    patterns, ops = grp
+    out = {v for pt in patterns for v in pt.variables}
     for op in ops:
-        if op[0] == "bind":
-            out.add(op[1])
-        elif op[0] == "in":
-            out.add(op[1])
-        elif op[0] == "values_multi":
-            out |= set(op[1])
-        elif op[0] == "subquery":
-            out |= _subquery_out_vars(op[1])
-        elif op[0] == "optional":
-            for pt in op[1]:
-                out |= pt.variables
-            for o in op[2]:
-                if o[0] == "bind":
-                    out.add(o[1])
-        elif op[0] == "graphdom" and op[1].startswith("?"):
-            out.add(op[1][1:])
-        elif op[0] == "union":
-            for arm in op[1]:
-                out |= _group_all_vars(arm)
-    for entry in optional_blocks:
-        blk = entry[0] if isinstance(entry, tuple) else entry
-        for pt in blk:
-            out |= pt.variables
+        out |= _op_vars(op)
     return out
 
 
@@ -468,7 +450,7 @@ def _group_certain_vars(grp: tuple) -> set[str]:
     arm. BIND / VALUES / OPTIONAL / subquery products may be null →
     excluded (conservative — certainty only picks equi- vs general
     compatibility join in :func:`_apply_ops`'s union op)."""
-    patterns, ops, _opts = grp
+    patterns, ops = grp
     out: set[str] = set()
     for pt in patterns:
         out |= pt.variables
@@ -521,144 +503,79 @@ def _substitute_unbound(tree, local: set[str]):
     return tuple(out)
 
 
-def _optional_entry(
-    block: list,
-    bops: list[tuple] | None,
-    statements: DataFrame | None = None,
+def _optional_scope(
+    block: list[Pattern], bops: list[tuple]
+) -> tuple[list[tuple], Callable | None]:
+    """An OPTIONAL block's ops → ``(block_ops, join_cond)``. A FILTER
+    over block-local variables stays in ``block_ops`` (applied to the
+    block BEFORE the left join, where it can only drop optional rows);
+    one that also references LEFT-hand variables is part of the
+    LeftJoin CONDITION (§18.2.2.3), evaluated per candidate merge with
+    a failing left row kept null-extended. A BIND referencing outer
+    variables evaluates with strict bottom-up scope (outer refs
+    unbound — see :func:`_substitute_unbound`). "Local" grows in
+    evaluation order with each op's bindings."""
+    local = {v for pt in block for v in pt.variables}
+    block_ops: list[tuple] = []
+    deferred: list[tuple] = []
+    for op in _placed(bops):
+        if op[0] == "expr" and not _expr_vars(op[1]) <= local:
+            deferred.append(op)
+            continue
+        if op[0] == "bind" and not _expr_vars(op[2]) <= local:
+            op = ("bind", op[1], _substitute_unbound(op[2], local))
+        block_ops.append(op)
+        local |= _op_vars(op)
+    if not deferred:
+        return block_ops, None
+
+    def join_cond(bound: set[str]):
+        col = _compile_filter(deferred[0], bound)
+        for op in deferred[1:]:
+            col = col & _compile_filter(op, bound)
+        return col
+
+    return block_ops, join_cond
+
+
+def _placed(ops: list[tuple]) -> list[tuple]:
+    """A group's ops in evaluation order, the one OPTIONAL placement
+    rule: an OPTIONAL left-joins at its textual position — after the
+    BGP and the BIND, VALUES, subquery, UNION, MINUS and GRAPH-domain
+    ops written before it (§18.2.2.6) — but ahead of the FILTERs
+    written before it, since a FILTER constrains its whole group."""
+    out: list[tuple] = []
+    for op in ops:
+        at = len(out)
+        if op[0] == "optional":
+            while at and out[at - 1][0] in ("expr", "cmp", "exists"):
+                at -= 1
+        out.insert(at, op)
+    return out
+
+
+def _eval_group(
+    statements: DataFrame,
+    block: list[Pattern],
+    ops: list[tuple],
     allow_cartesian: bool = False,
     n_buckets: int | None = None,
     carry_meta: bool = False,
-):
-    """OPTIONAL block + its scoped ops → a bgp ``optional_groups``
-    entry: ``(patterns, transform)`` when every FILTER references only
-    block-local variables (the common case — applied to the sub-BGP
-    BEFORE the left join, where it can only drop/extend optional rows),
-    or ``(patterns, transform, leftjoin_cond)`` when a FILTER also
-    references LEFT-hand variables: SPARQL §18.2.2.3 makes such a
-    filter part of the LeftJoin CONDITION, evaluated per candidate
-    merge with a failing left row kept null-extended (r4). r5 lifts the
-    two remaining rejections: a BIND referencing outer variables
-    evaluates with strict bottom-up scope (outer refs unbound — see
-    :func:`_substitute_unbound`), and ``{ SELECT … }`` subqueries
-    inside the block pre-evaluate the whole unit into a DataFrame
-    (bgp accepts it in place of a pattern list)."""
-    if bops is None:
-        return block
-    local: set[str] = set()
-    for pt in block:
-        local |= pt.variables
-    pre: list[tuple] = []
-    deferred: list[tuple] = []
-    for op in bops:
-        if op[0] == "bind":
-            vars_ = _expr_vars(op[2])
-            if not vars_ <= local:
-                op = ("bind", op[1], _substitute_unbound(op[2], local))
-            pre.append(op)
-            local.add(op[1])
-        elif op[0] == "expr":
-            vars_ = _expr_vars(op[1])
-            (pre if vars_ <= local else deferred).append(op)
-        elif op[0] == "cmp":
-            # injected by the dataset rewrite (graph-marker exclusion);
-            # always block-local by construction
-            pre.append(op)
-        elif op[0] == "subquery":
-            pre.append(op)
-            local |= _subquery_out_vars(op[1])
-        elif op[0] == "in":
-            pre.append(op)
-            local.add(op[1])
-        elif op[0] == "values_multi":
-            pre.append(op)
-            local |= set(op[1])
-        elif op[0] == "optional":
-            # r5b: OPTIONAL nested inside this OPTIONAL — its block's
-            # variables (and bind targets) become visible in the
-            # enclosing block's scope (possibly unbound)
-            pre.append(op)
-            for pt in op[1]:
-                local |= pt.variables
-            for o in op[2]:
-                if o[0] == "bind":
-                    local.add(o[1])
-        elif op[0] == "union":
-            # r5c: { A } UNION { B } nested inside this OPTIONAL — all
-            # arm bindings become visible in the block's scope
-            # (possibly unbound when arms differ)
-            pre.append(op)
-            for arm in op[1]:
-                local |= _group_all_vars(arm)
-        elif op[0] in ("minus", "exists", "graphdom"):
-            # r5b: nested negation / graph-name domain — evaluated
-            # within the block (no new bindings except a graphdom var)
-            pre.append(op)
-            if op[0] == "graphdom" and op[1].startswith("?"):
-                local.add(op[1][1:])
-        else:  # pragma: no cover - parser routes only these op kinds
-            raise SparqlError(f"unsupported op inside OPTIONAL: {op[0]}")
-
-    def leftjoin_cond(bound: set[str]):
-        col = None
-        for op in deferred:
-            c = _compile_filter(op, bound)
-            col = c if col is None else col & c
-        return col
-
-    if any(
-        op[0] in ("subquery", "optional", "minus", "exists", "graphdom",
-                  "union")
-        for op in pre
-    ):
-        if statements is None:
-            raise SparqlError("subqueries inside OPTIONAL need a store")
-        sub = (
-            bgp(
-                statements, block, allow_cartesian=allow_cartesian,
-                carry_meta=carry_meta, n_buckets=n_buckets,
-            )
-            if block
-            else None
-        )
-        sub = _apply_ops(
-            sub, pre, statements=statements,
-            allow_cartesian=allow_cartesian, n_buckets=n_buckets,
-            certain={v for pt in block for v in pt.variables},
-        )
-        if not deferred:
-            return (sub, None)
-        return (sub, None, leftjoin_cond)
-
-    transform = _optional_ops_transform(pre)
-    if not deferred:
-        return (block, transform)
-    return (block, transform, leftjoin_cond)
-
-
-def _optional_ops_transform(bops: list[tuple]):
-    """FILTER/BIND ops scoped inside an OPTIONAL block → a DataFrame
-    transform applied to the block's sub-BGP BEFORE the left-outer
-    join (block-local operations only; outer-variable FILTERs go
-    through :func:`_optional_entry`'s LeftJoin-condition path)."""
-
-    def transform(sub: DataFrame) -> DataFrame:
-        out = sub
-        for op in bops:
-            if op[0] in ("expr", "cmp"):
-                out = out.where(_compile_filter(op, set(out.columns)))
-            elif op[0] == "bind":
-                _, alias, tree = op
-                out = _bind_column(out, alias, tree)
-            elif op[0] in ("in", "values_multi"):
-                # block-scoped VALUES (r5) — same compilation as the
-                # group-level op, applied to the sub-BGP pre-join
-                out = _apply_ops(out, [op])
-            else:  # pragma: no cover - parser routes only these kinds
-                raise SparqlError(f"unsupported op inside OPTIONAL: {op[0]}")
-        return out
-
-    return transform
-
+) -> DataFrame:
+    """The one (sub-)group evaluator: :func:`bgp` over the block's
+    patterns, then :func:`_apply_ops` over its ops in :func:`_placed`
+    order. A block with no pattern seeds from its first op (a subquery
+    or a UNION chain)."""
+    meta = carry_meta or _ops_need_meta(ops)
+    sol = bgp(
+        statements, block, allow_cartesian=allow_cartesian,
+        carry_meta=meta, n_buckets=n_buckets,
+    ) if block else None
+    return _apply_ops(
+        sol, _placed(ops), statements=statements,
+        allow_cartesian=allow_cartesian, n_buckets=n_buckets,
+        certain={v for pt in block for v in pt.variables}, carry_meta=meta,
+    )
 
 
 def _solutions(
@@ -668,42 +585,18 @@ def _solutions(
     carry_meta: bool = False,
     n_buckets: int | None = None,
 ) -> DataFrame:
-    """Union of per-group BGP solutions (SPARQL UNION: variables
-    unbound in one arm come back null via allowMissingColumns).
-    Object-term metadata columns are carried automatically whenever a
-    group's expressions need them (LANG/DATATYPE/isIRI/…)."""
-    sols = []
-    for patterns, ops, optional_blocks in groups:
-        meta = carry_meta or _ops_need_meta(ops) or any(
-            _ops_need_meta(e[1])
-            for e in optional_blocks
-            if isinstance(e, tuple)
+    """Union of per-group solutions, each from :func:`_eval_group`
+    (SPARQL UNION: variables unbound in one arm come back null via
+    allowMissingColumns). Object-term metadata columns are carried
+    automatically whenever a group's expressions need them
+    (LANG/DATATYPE/isIRI/…)."""
+    sols = [
+        _eval_group(
+            statements, patterns, ops, allow_cartesian=allow_cartesian,
+            n_buckets=n_buckets, carry_meta=carry_meta,
         )
-        if not patterns and ops and ops[0][0] in ("subquery", "union"):
-            # group consists of a subquery or a nested union chain
-            # (± trailing ops): its solutions seed the group (sol=None)
-            sol = None
-        else:
-            sol = bgp(
-                statements, patterns, allow_cartesian=allow_cartesian,
-                carry_meta=meta, n_buckets=n_buckets,
-                optional_groups=[
-                    _optional_entry(
-                        e[0], e[1], statements=statements,
-                        allow_cartesian=allow_cartesian,
-                        n_buckets=n_buckets, carry_meta=meta,
-                    )
-                    if isinstance(e, tuple) else e
-                    for e in optional_blocks
-                ],
-            )
-        sols.append(
-            _apply_ops(
-                sol, ops, statements=statements,
-                allow_cartesian=allow_cartesian, n_buckets=n_buckets,
-                certain={v for pt in patterns for v in pt.variables},
-            )
-        )
+        for patterns, ops in groups
+    ]
     out = sols[0]
     for sol in sols[1:]:
         out = out.unionByName(sol, allowMissingColumns=True)
@@ -1214,8 +1107,8 @@ def parse_construct(
         gc.prefixes = dict(c.prefixes)
         gc.base = c.base
         groups = _parse_group_pattern(gc)
-        patterns, gops, gopts = groups[0]
-        if len(groups) > 1 or gops or gopts or any(
+        patterns, gops = groups[0]
+        if len(groups) > 1 or gops or any(
             isinstance(pt.p, tuple) or pt.g is not None for pt in patterns
         ):
             raise SparqlError(

@@ -78,32 +78,17 @@ def _dataset_pattern(p: Pattern) -> Pattern:
 
 def _map_blocks(grp: tuple, f) -> tuple:
     """The one group-pattern walker: ``f(patterns, ops) -> (patterns,
-    ops)`` applied to every block of a ``(patterns, ops,
-    optional_blocks)`` group — the group's own, each group-level
-    OPTIONAL, and the blocks of ``minus``/``exists``/``optional`` ops at
-    any depth; ``union`` arms and ``subquery`` groups recurse as whole
-    groups. WITH <g> and the FROM/USING dataset rewrite are both one
-    call of it."""
-    patterns, ops, optional_blocks = grp
-    patterns, ops = _map_block(patterns, ops, f)
-    opts = []
-    for entry in optional_blocks:
-        block, bops = entry if isinstance(entry, tuple) else (entry, [])
-        block, bops = _map_block(block, bops, f)
-        # the grammar's entry shape: a bare block unless ops are scoped
-        opts.append((block, bops) if bops else block)
-    return patterns, ops, opts
-
-
-def _map_block(patterns: list, ops: list[tuple], f) -> tuple[list, list[tuple]]:
-    patterns, ops = f(patterns, ops)
+    ops)`` applied to a ``(patterns, ops)`` group and to the blocks of
+    its ``minus``/``exists``/``optional`` ops at any depth; ``union``
+    arms and ``subquery`` groups recurse as whole groups. WITH <g> and
+    the FROM/USING dataset rewrite are both one call of it."""
+    patterns, ops = f(*grp)
     out = []
     for op in ops:
         if op[0] in ("minus", "optional"):
-            block, bops = _map_block(op[1], op[2], f)
-            op = (op[0], block, bops)
+            op = (op[0], *_map_blocks(op[1:], f))
         elif op[0] == "exists":
-            block, bops = _map_block(op[1], op[3], f)
+            block, bops = _map_blocks((op[1], op[3]), f)
             op = ("exists", block, op[2], bops)
         elif op[0] == "union":
             op = ("union", [_map_blocks(arm, f) for arm in op[1]])

@@ -17,7 +17,7 @@ from tripleforge.sparql_lex import SparqlError, _Cursor, _kw
 # string-lexical columns; object-term metadata (kind/datatype/lang)
 # compiles onto the carry_meta companion columns.
 #
-# AST nodes: ("var", name) ("num", float) ("str", lex) ("iri", iri)
+# AST nodes: ("var", name) ("num", int|float) ("str", lex) ("iri", iri)
 # ("boollit", bool) ("or"/"and", l, r) ("not", e) ("neg", e)
 # ("cmp", op, l, r) ("arith", op, l, r) ("fn", NAME, [args])
 # ---------------------------------------------------------------------------
@@ -131,9 +131,19 @@ def _parse_add(c: _Cursor) -> tuple:
             # lexer kept the sign with the number, re-interpret as
             # addition of the signed value
             c.next()
-            left = ("arith", "+", left, ("num", float(t[1])))
+            left = ("arith", "+", left, _num_node(t))
         else:
             return left
+
+
+def _num_node(tok: tuple) -> tuple:
+    """A numeric literal token → ``("num", value)``: an INTEGER that
+    fits in a long is an int (it evaluates as xsd:integer), every other
+    number a float (xsd:double)."""
+    kind, lex = tok
+    if kind == "INTEGER" and -(1 << 63) <= int(lex) < (1 << 63):
+        return ("num", int(lex))
+    return ("num", float(lex))
 
 
 def _parse_mul(c: _Cursor) -> tuple:
@@ -182,7 +192,7 @@ def _parse_primary(c: _Cursor) -> tuple:
         return ("var", val[1:])
     if kind in ("INTEGER", "DECIMAL", "DOUBLE"):
         c.next()
-        return ("num", float(val))
+        return _num_node(t)
     if kind in ("DQ", "SQ", "LONG_DQ", "LONG_SQ"):
         c.next()
         lex = val[3:-3] if kind.startswith("LONG") else val[1:-1]
@@ -321,6 +331,17 @@ def _as_num(col, typ):
     return col if typ == "num" else col.cast("double")
 
 
+def _branches(compiled: list[tuple]) -> tuple[list, str]:
+    """The compiled branches of IF / COALESCE → (columns, type tag):
+    their one shared tag, else "term" with every numeric branch a
+    double, so Spark widens a term branch to double as well ("19.99"
+    casts to a double, not to a long)."""
+    typs = {t for _, t in compiled}
+    if len(typs) == 1:
+        return [c for c, _ in compiled], typs.pop()
+    return [c.cast("double") if t == "num" else c for c, t in compiled], "term"
+
+
 def _as_bool(col, typ):
     if typ == "bool":
         return col
@@ -346,7 +367,9 @@ def _compile_expr(tree: tuple, bound: set[str]):
         return F.lit(None).cast("string"), "term"
     if kind == "num":
         v = tree[1]
-        return F.lit(v), "num"
+        # an integer is a long whatever its size, so integer arithmetic
+        # never overflows a 32-bit int
+        return (F.lit(v).cast("long") if isinstance(v, int) else F.lit(v)), "num"
     if kind in ("str", "iri"):
         return F.lit(tree[1]), kind
     if kind == "boollit":
@@ -364,17 +387,20 @@ def _compile_expr(tree: tuple, bound: set[str]):
         return ~_as_bool(ec, et), "bool"
     if kind == "neg":
         ec, et = _compile_expr(tree[1], bound)
-        return -_as_num(ec, et), "num"
+        # × -1 negates a double exactly; an integer past a long is
+        # null (unbound), as in binary arithmetic
+        return F.try_multiply(_as_num(ec, et), F.lit(-1)), "num"
     if kind == "arith":
         _, op, l, r = tree
         lc, lt = _compile_expr(l, bound)
         rc, rt = _compile_expr(r, bound)
         lc, rc = _as_num(lc, lt), _as_num(rc, rt)
-        fns = {
-            "+": lc.__add__, "-": lc.__sub__,
-            "*": lc.__mul__, "/": lc.__truediv__,
-        }
-        return fns[op](rc), "num"
+        if op == "/":
+            return lc / rc, "num"
+        # integer arithmetic past a long is an expression error (null,
+        # so unbound), not a failed query
+        fns = {"+": F.try_add, "-": F.try_subtract, "*": F.try_multiply}
+        return fns[op](lc, rc), "num"
     if kind == "inlist":
         # ?v IN (a, b, …) ≡ (?v = a) || (?v = b) …; NOT IN ≡ the
         # conjunction of != — each equality reuses cmp's type coercion,
@@ -625,7 +651,7 @@ def _compile_fn(name: str, args: list[tuple], bound: set[str]):
         cc, ct = _compile_expr(args[0], bound)
         ac, at_ = _compile_expr(args[1], bound)
         bc, bt = _compile_expr(args[2], bound)
-        typ = at_ if at_ == bt else "term"
+        (ac, bc), typ = _branches([(ac, at_), (bc, bt)])
         return F.when(_as_bool(cc, ct), ac).otherwise(bc), typ
     if name in ("MD5", "SHA1", "SHA256", "SHA384", "SHA512"):
         _fn_arity(name, args, 1)
@@ -651,10 +677,8 @@ def _compile_fn(name: str, args: list[tuple], bound: set[str]):
     if name == "COALESCE":
         if not args:
             raise SparqlError("COALESCE() needs arguments")
-        compiled = [_compile_expr(a, bound) for a in args]
-        typs = {t for _, t in compiled}
-        typ = typs.pop() if len(typs) == 1 else "term"
-        return F.coalesce(*[c for c, _ in compiled]), typ
+        cols, typ = _branches([_compile_expr(a, bound) for a in args])
+        return F.coalesce(*cols), typ
     if name in ("YEAR", "MONTH", "DAY", "HOURS", "MINUTES", "SECONDS"):
         # accessors over the store's canonical xsd:dateTime lexical
         # (canon._canon_datetime: UTC Z, trimmed fraction; tz-less

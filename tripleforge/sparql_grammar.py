@@ -266,19 +266,19 @@ def _parse_select_cursor(c: _Cursor) -> tuple[list[tuple], list[tuple], dict, bo
 
 
 
-def _parse_group_pattern(
-    c: _Cursor,
-) -> list[tuple[list[Pattern], list[tuple], list[list[Pattern]]]]:
+def _parse_group_pattern(c: _Cursor) -> list[tuple[list[Pattern], list[tuple]]]:
     """WHERE { group [UNION { group }]* } where a group is triples,
     ``GRAPH g { … }``, ``OPTIONAL { … }``, ``FILTER constraint``,
     ``BIND(expr AS ?v)``, and ``VALUES ?v { constants }`` — shared by
     SELECT, CONSTRUCT, and ASK; stops after the closing brace (solution
-    modifiers are parsed separately). Returns one
-    ``(patterns, ops, optional_blocks)`` per UNION arm, where ops is
-    the textual-order list of FILTER / BIND / VALUES operations and
-    each optional block is one OPTIONAL { … } sub-BGP joined
-    left-outer AS A UNIT (exact SPARQL group semantics — VERDICT r2:
-    a 2-triple OPTIONAL binds both triples or neither)."""
+    modifiers are parsed separately). Returns one ``(patterns, ops)``
+    group per UNION arm, where ops is the textual-order list of FILTER /
+    BIND / VALUES / OPTIONAL / … operations. Every OPTIONAL { … }, at
+    group level or nested in a MINUS / EXISTS / OPTIONAL block, is the
+    op ``("optional", block, bops)`` of its enclosing group: its
+    patterns and its own scoped op list, joined left-outer AS A UNIT
+    (exact SPARQL group semantics — VERDICT r2: a 2-triple OPTIONAL
+    binds both triples or neither)."""
     if not _kw(c.peek(), "WHERE"):
         raise SparqlError("expected WHERE")
     c.next()
@@ -287,10 +287,9 @@ def _parse_group_pattern(
 
     def parse_one_group(
         graph_term: str | None = None,
-    ) -> tuple[list[Pattern], list[tuple], list[list[Pattern]]]:
+    ) -> tuple[list[Pattern], list[tuple]]:
         patterns: list[Pattern] = []
         ops: list[tuple] = []
-        optional_blocks: list[list[Pattern]] = []
         # blank nodes in patterns are non-distinguished variables
         # (SPARQL §4.1.4): labels map consistently within the group,
         # [] and [ p o ] mint fresh ones
@@ -415,7 +414,6 @@ def _parse_group_pattern(
                     # emitted as a ("graphdom", term) op.
                     sink_ops = sub_ops if sub_ops is not None else ops
                     before, ops_before = len(sink), len(sink_ops)
-                    opts_before = len(optional_blocks)
                     triples_until_close(g, sink, sub=sub, sub_ops=sub_ops)
                     governed = any(p.g == g for p in sink[before:]) or any(
                         # r5c: a union chain inside the GRAPH block —
@@ -425,20 +423,9 @@ def _parse_group_pattern(
                         for o in sink_ops[ops_before:]
                     )
                     if not governed:
-                        if len(optional_blocks) > opts_before:
-                            # a group-level OPTIONAL under an
-                            # ungoverned graph term left-joins BEFORE
-                            # the domain op could bind the term — the
-                            # order the semantics needs is not modeled;
-                            # loud, never silently wrong
-                            raise SparqlError(
-                                "GRAPH term governs no required triple "
-                                "pattern, only an OPTIONAL block — not "
-                                "supported"
-                            )
                         # inserted BEFORE any op textually inside the
                         # block so the domain binds first (a nested
-                        # MINUS/EXISTS then anti/semi-joins per name,
+                        # OPTIONAL/MINUS/EXISTS then joins per name,
                         # exactly §18.3's per-name evaluation)
                         sink_ops.insert(ops_before, ("graphdom", g))
                     continue
@@ -447,16 +434,13 @@ def _parse_group_pattern(
                     bops: list[tuple] = []
                     block = sub_block(graph_term, "OPTIONAL", collect_ops=bops)
                     # FILTER/BIND inside the block stay scoped to the
-                    # optional unit (applied BEFORE the left join).
-                    # r5b: OPTIONAL nested inside MINUS / EXISTS /
-                    # OPTIONAL lands on the enclosing block's op list
-                    # and left-joins into the SUB-group's solutions.
-                    if sub_ops is not None:
-                        sub_ops.append(("optional", block, bops))
-                    elif sub:  # pragma: no cover - sub implies sub_ops
-                        raise SparqlError(f"OPTIONAL inside {sub} is not supported")
-                    else:
-                        optional_blocks.append((block, bops) if bops else block)
+                    # optional unit (applied BEFORE the left join). The
+                    # op lands on the enclosing group's op list (r5b: a
+                    # MINUS / EXISTS / OPTIONAL block's too) and
+                    # left-joins into that group's solutions.
+                    (sub_ops if sub_ops is not None else ops).append(
+                        ("optional", block, bops)
+                    )
                     continue
                 if _kw(t, "SERVICE"):
                     raise SparqlError(
@@ -650,8 +634,15 @@ def _parse_group_pattern(
         if not patterns and not any(
             op[0] in ("subquery", "union") for op in ops
         ):
+            if {"graphdom", "optional"} <= {op[0] for op in ops}:
+                # GRAPH ?g { OPTIONAL { … } } alone: no row for the
+                # name domain and the OPTIONAL to extend
+                raise SparqlError(
+                    "GRAPH term governs no required triple pattern, only "
+                    "an OPTIONAL block — not supported"
+                )
             raise SparqlError("empty group pattern")
-        return patterns, ops, optional_blocks
+        return patterns, ops
 
     # UNION chain: WHERE { { A } UNION { B } ... } — else a single group
     # (a '{ SELECT' opener is a subquery, not a UNION arm). r5c: when
@@ -662,7 +653,7 @@ def _parse_group_pattern(
     nxt = c.toks[c.i + 1] if c.i + 1 < len(c.toks) else None
     if c.peek() == ("PUNCT", "{") and not _kw(nxt, "SELECT"):
         saved = c.i
-        groups: list[tuple[list[Pattern], list[tuple], list[list[Pattern]]]] = []
+        groups: list[tuple[list[Pattern], list[tuple]]] = []
         while True:
             c.next()  # inner '{'
             groups.append(parse_one_group())

@@ -180,8 +180,6 @@ def _delete_where_compile(
     template: list[tuple] = []
     extra_filters: list[tuple] = []
     for i, pt in enumerate(patterns):
-        if pt.optional:
-            raise SparqlError("OPTIONAL is not allowed in DELETE WHERE")
         if isinstance(pt.p, tuple):
             raise SparqlError("property paths are not allowed in DELETE WHERE")
         s_t = ("var", pt.s[1:]) if _is_tvar(pt.s) else ("iri", pt.s)
@@ -411,13 +409,12 @@ def execute_update(
                     "DELETE WHERE takes a quad pattern (no UNION); use "
                     "DELETE { … } WHERE { … }"
                 )
-            patterns, ops, opt_blocks = groups[0]
-            if opt_blocks:
+            patterns, ops = groups[0]
+            if any(op[0] == "optional" for op in ops):
                 raise SparqlError("OPTIONAL is not allowed in DELETE WHERE")
             _parse_modifiers(c)
             patterns, delete_tmpl, extra = _delete_where_compile(patterns, with_graph)
-            ops = ops + extra
-            groups = [(patterns, ops, opt_blocks)]
+            groups = [(patterns, ops + extra)]
         else:
             if nxt != ("PUNCT", "{"):
                 raise SparqlError("expected DATA, WHERE, or a template")
